@@ -237,20 +237,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      // q75's band-0 rank cap is SourceTokenBudget+1 (2001); the map-side
-      // WindowGroupLimit rewrite only fires at or under this threshold
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "2048")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession(cpus)
     val listener = new BenchMetricsListener
     spark.sparkContext.addSparkListener(listener)
     def drain(): Unit =
@@ -267,32 +255,8 @@ object Bench {
         if (Artifacts.root.isEmpty)
           Artifacts.setRoot(Files.createTempDirectory("graft-bench-artifacts")
             .toString)
-        // the breakdown must describe THIS build sequence only — an
-        // all-skipped materialize otherwise leaves stale timings for
-        // the embeddings merge to fold into
-        Artifacts.resetBuildTimings()
         val t0 = System.nanoTime()
-        Artifacts.materialize(spark, sfDir)
-        // the vector-side standing state (LSH indexes) — versioned by
-        // the embeddings fingerprint, built in the same untimed phase
-        Artifacts.materializeEmbeddings(spark, sfDir)
-        // the trained tokenizer's counts (train off the standing census
-        // just committed, then one map-only counting pass) — q160's
-        // budget scan then reads (doc_id, source) and never text
-        Artifacts.materializeTrainedTokenCounts(spark, sfDir)
-        // the near-dup eval ground truth (q21/q111's input) — the one
-        // remaining O(n²) eval pass, paid once per embeddings snapshot
-        Artifacts.materializeNearDupTruth(spark, sfDir)
-        // q141's S-curve table — a pure function of the standing band
-        // index, so the four capped self-joins run once per snapshot
-        Artifacts.materializeLshCalibration(spark, sfDir)
-        // the ANN recall evals (q140/q143/q146) — pure functions of the
-        // embeddings table and the standing indexes, scored once per
-        // embeddings snapshot
-        Artifacts.materializeAnnEvals(spark, sfDir)
-        // q112's per-eval-item contamination report — a pure function
-        // of the standing shingles8 index, joined once per snapshot
-        Artifacts.materializeEvalContamination(spark, sfDir)
+        Artifacts.materializeAll(spark, sfDir)
         (System.nanoTime() - t0) / 1e9
       }
     // standing packed deliverables: write + byte-verify each export

@@ -63,21 +63,14 @@ object Tables {
       val cores = spark.sparkContext.defaultParallelism
       val singleSplit = base.queryExecution.optimizedPlan.stats.sizeInBytes <
         spark.sessionState.conf.filesMaxPartitionBytes
-      if (cores > 1 && singleSplit &&
-          !sys.env.contains("SPARK_GRAFT_NO_FANOUT"))
+      if (cores > 1 && singleSplit)
         base.repartition(math.min(cores, FanWidth), col(key))
       else base
     })
   }
 
-  /** Cap on fan-out width (override: SPARK_GRAFT_FANOUT; malformed or
-    * non-positive values fall back to the default rather than throwing
-    * from inside query construction).
-    */
-  private lazy val FanWidth: Int =
-    sys.env.get("SPARK_GRAFT_FANOUT")
-      .flatMap(v => scala.util.Try(v.toInt).toOption)
-      .filter(_ > 0).getOrElse(8)
+  /** Cap on fan-out width. */
+  private val FanWidth = 8
 
   /** Exact row count of a base table from its parquet footers — pure
     * driver-side metadata (no Spark job), memoized per (dir, table):

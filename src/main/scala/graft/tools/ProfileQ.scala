@@ -1,10 +1,9 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Scratch main: profile named SparkEntry queries under the BENCH posture
-  * (artifacts materialized untimed, noop sink, same session config), with
+/** Profiling main: profile named SparkEntry queries under the BENCH posture
+  * (artifacts materialized untimed, noop sink, [[graft.GraftSession]]), with
   * a per-stage breakdown of the final timed run so the expensive stage of
   * a slow query is visible without the UI. Not part of the driver
   * contract. Usage:
@@ -41,29 +40,12 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q41_corpus_select")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "2048")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     if (graft.Artifacts.root.isEmpty)
       graft.Artifacts.setRoot(
         java.nio.file.Files.createTempDirectory("graft-profile-artifacts").toString)
     val t0 = System.nanoTime()
-    graft.Artifacts.materialize(spark, sfDir)
-    graft.Artifacts.materializeEmbeddings(spark, sfDir)
-    graft.Artifacts.materializeTrainedTokenCounts(spark, sfDir)
-    graft.Artifacts.materializeNearDupTruth(spark, sfDir)
-    graft.Artifacts.materializeLshCalibration(spark, sfDir)
-    graft.Artifacts.materializeAnnEvals(spark, sfDir)
-    graft.Artifacts.materializeEvalContamination(spark, sfDir)
+    graft.Artifacts.materializeAll(spark, sfDir)
     graft.sources.PackedExport.prepareStanding(spark, sfDir)
     graft.Checkpoints.releaseAll(blocking = true)
     println(f"[profile] artifact+export build ${(System.nanoTime() - t0) / 1e9}%.1f s")

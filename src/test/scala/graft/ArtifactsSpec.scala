@@ -192,6 +192,29 @@ class ArtifactsSpec extends SparkSpec {
     }
   }
 
+  test("materializeAll builds the whole snapshot once; a rerun commits nothing") {
+    val tmp = Files.createTempDirectory("graft-artifacts-all").toFile
+    try {
+      Artifacts.setRoot(tmp.getAbsolutePath)
+      Artifacts.materializeAll(spark, sf)
+      // every file under the root, with its mtime: a rebuilt artifact
+      // commits fresh task-UUID part files and a fresh _SUCCESS marker
+      def files(f: java.io.File): Set[String] =
+        if (f.isDirectory) f.listFiles().toSet.flatMap(files)
+        else Set(f.getPath + ":" + f.lastModified())
+      val before = files(tmp)
+      Artifacts.materializeAll(spark, sf)
+      assert(files(tmp) == before, "second materializeAll committed new files")
+      val notCurrent = Artifacts.status(spark, sf)
+        .filter(st => !st.committed || st.staleVersions > 0)
+      assert(notCurrent.isEmpty, s"stale after materializeAll: $notCurrent")
+    } finally {
+      Artifacts.clearRoot()
+      deleteRecursively(tmp)
+      Checkpoints.releaseAll()
+    }
+  }
+
   test("a marker with no data reads as not committed and rebuilds") {
     // a crash between a sweep's partial delete and its directory removal
     // can leave _SUCCESS with no data files — that version must rebuild,

@@ -20,6 +20,7 @@ class BucketingSpec extends SparkSpec {
     Bucketing.writeBucketed(embs, "b_embs", Seq("doc_id"), 8)
     // broadcast off: the join must be exchange-free on its own merits,
     // not saved by the tables being test-sized
+    val saved = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val joined = spark.table("b_docs").join(spark.table("b_embs"), "doc_id")
@@ -30,7 +31,8 @@ class BucketingSpec extends SparkSpec {
       assert(joined.count() ==
         docs.join(embs, "doc_id").count())
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      saved.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
       spark.sql("DROP TABLE IF EXISTS b_docs")
       spark.sql("DROP TABLE IF EXISTS b_embs")
     }

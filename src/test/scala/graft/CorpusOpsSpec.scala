@@ -108,6 +108,7 @@ class CorpusOpsSpec extends SparkSpec {
     // re-broadcast from test-scale size stats — exactly the regime where
     // only the HINT decides, which is what the guard controls (at real
     // scale, stats exceed the threshold on their own)
+    val saved = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val fallback = CorpusOps.decontaminate(spark, sf, 0L)
@@ -121,7 +122,9 @@ class CorpusOpsSpec extends SparkSpec {
       assert(fallback.collect().toSeq == hinted.collect().toSeq)
       assert(CorpusOps.decontamStrip(spark, sf, 0L).collect().toSeq ==
         CorpusOps.q55DecontamStrip(spark, sf).collect().toSeq)
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    } finally
+      saved.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
   }
 
   test("q48 two-level offsets are range-width-invariant") {

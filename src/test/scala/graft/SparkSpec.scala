@@ -4,15 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared ScalaTest base: one local SparkSession per suite (lazy, shared JVM
-  * via getOrCreate), UTC, small shuffle-partition count for local mode.
+/** Shared ScalaTest base: one local[4] [[GraftSession]] per forked test
+  * JVM — the settings the bench and the oracle dump run under.
   *
-  * Suites run sequentially in the forked test JVM (`Test / fork := true`
-  * without `testForkedParallel`), all sharing one SparkSession — so each
-  * suite drains the [[Checkpoints]] registry on exit, keeping pinned
-  * localCheckpoint blocks from accumulating across the 30+ suite run.
-  * (Drain is per-suite, not per-test: a suite may legitimately share a
-  * checkpointed frame between its tests.)
+  * `build.sbt` spreads the suites over parallel forked JVMs; inside one
+  * JVM the suites of its group run sequentially and share the session
+  * (lazy, via getOrCreate) — so each suite drains the [[Checkpoints]]
+  * registry on exit, keeping pinned localCheckpoint blocks from
+  * accumulating across the group. (Drain is per-suite, not per-test: a
+  * suite may legitimately share a checkpointed frame between its tests.)
+  * A suite that changes a session setting restores the saved value when
+  * it is done, so later suites in the JVM keep these settings.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = {
@@ -26,16 +28,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     f.delete()
   }
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // q75's band-0 rank cap is SourceTokenBudget+1 (2001); the map-side
-    // WindowGroupLimit rewrite only fires at or under this threshold
-    .config("spark.sql.optimizer.windowGroupLimitThreshold", "2048")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(4)
 
   val sf: String = "/root/testdata/sf0.001"
 }
