@@ -482,9 +482,52 @@ class SegmentedArtifactsSpec extends SparkSpec {
       assert(st1.values.forall(_.committed), st1.values.filterNot(_.committed))
       assert(st1.values.forall(_.staleVersions == 0))
       assert(st1.values.forall(_.provisional == 0))
-      assert(st1(Artifacts.DocHashesName).layout == "segmented")
-      assert(st1(Artifacts.SpanCountsName).layout == "additive")
-      assert(st1(Artifacts.DupSpansName).layout == "plain")
+      // the full layout table, pinned: every artifact's layout and its
+      // segment (prune/retract) key columns
+      val (seg, add, plain) = ("segmented", "additive", "plain")
+      val byDoc = Seq("doc_id")
+      val expectedLayouts: Map[String, (String, Seq[String])] = Map(
+        Artifacts.NgramPostingsName -> (seg, byDoc),
+        Artifacts.SpanCountsName -> (add, Seq("sh")),
+        Artifacts.DupSpansName -> (plain, Nil),
+        Artifacts.MinhashBandsName -> (seg, byDoc),
+        Artifacts.DocHashesName -> (seg, byDoc),
+        Artifacts.DupPairsName -> (seg, Seq("doc_a", "doc_b")),
+        Artifacts.KeepersName -> (seg, byDoc),
+        Artifacts.Shingles8Name -> (seg, byDoc),
+        Artifacts.EvalShinglesName -> (seg, byDoc),
+        Artifacts.TokenFreqName -> (add, Seq("source", "token")),
+        Artifacts.BigramFreqName -> (add, Seq("source", "w1", "w2")),
+        Artifacts.ChunkPostingsName -> (seg, byDoc),
+        Artifacts.TokenDfName -> (add, Seq("token")),
+        Artifacts.LineDfName -> (add, Seq("line")),
+        Artifacts.TokenPositionsName -> (seg, byDoc),
+        Artifacts.ImageGridsName -> (seg, byDoc),
+        Artifacts.TextGatesName -> (seg, byDoc),
+        Artifacts.QualityModelName -> (plain, Nil),
+        Artifacts.QualityScoresName -> (plain, Nil),
+        Artifacts.BpeMergesName -> (plain, Nil),
+        Artifacts.ImageIvfCentroidsName -> (plain, Nil),
+        Artifacts.ImageIvfCellsName -> (plain, Nil),
+        Artifacts.VideoSigsName -> (seg, byDoc),
+        Artifacts.AudioSigsName -> (seg, byDoc),
+        Artifacts.EvalFlagsLexName -> (plain, Nil),
+        "token_counts_ws" -> (seg, byDoc),
+        "token_counts_bpe_pre" -> (seg, byDoc),
+        "token_postings_ws" -> (seg, byDoc),
+        Artifacts.LshAnnIndexName -> (seg, Seq("id")),
+        Artifacts.LshNearDupIndexName -> (seg, Seq("id")),
+        Artifacts.VecHashesName -> (seg, Seq("id")),
+        Artifacts.LabelCentroidsName -> (plain, Nil),
+        Artifacts.IvfCentroidsName -> (plain, Nil),
+        Artifacts.IvfCellsName -> (plain, Nil),
+        Artifacts.PqCodebooksName -> (plain, Nil),
+        Artifacts.PqCodesName -> (plain, Nil),
+        Artifacts.PqResCodebooksName -> (plain, Nil),
+        Artifacts.PqResCodesName -> (plain, Nil),
+        Artifacts.EvalFlagsSemName -> (plain, Nil))
+      assert(stAll.map { case (n, s) =>
+        n -> (s.layout, Artifacts.segmentKeysOf(n)) } == expectedLayouts)
       assert(st1(Artifacts.DocHashesName).segments == 1)
       assert(st1(Artifacts.DocHashesName).physicalRows == 40)
       assert(st1(Artifacts.DupSpansName).physicalRows == -1L) // metadata-only probe
