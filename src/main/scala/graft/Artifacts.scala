@@ -38,6 +38,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `fp=` directories are pruned after commit; a reader that resolved one
   * of those was reading against a corpus state that no longer exists.)
   *
+  * == Definition: one table entry per documents-keyed artifact ==
+  *
+  * Every documents-keyed artifact is one entry of [[TextArtifacts]]:
+  * its name, its build over the committed parents above it, and its
+  * maintenance shape — per-document rows, additive counts, rebuilt
+  * whole, or hand-maintained (the digests, the pair table and the
+  * keepers). [[AllNames]], the segment layout, [[materialize]], the
+  * upgrade backfill, [[maintainAppended]] and [[materializeIncremental]]
+  * all derive from the table, so adding such an artifact is one entry
+  * plus its accessor.
+  *
   * == Layout: per-doc artifacts are SEGMENTED ==
   *
   * The per-document and per-pair artifacts store their data as a pool
@@ -347,21 +358,182 @@ object Artifacts {
   val DefaultTokenizers: Seq[functions.Tokenizer] =
     Seq(functions.Tokenizer.Whitespace, functions.Tokenizer.BpePre)
 
-  /** Every artifact [[materialize]] commits, in build order (the digest
-    * and pair artifacts commit BEFORE keepers — the keeper build reads
-    * them back as its edge sources).
+  // ==== the documents-keyed artifact table ================================
+
+  /** How a table entry is maintained when its corpus changes. */
+  private sealed trait Shape {
+    /** Prune/retract key columns (see [[segmentKeysOf]]); empty = plain. */
+    def keys: Seq[String]
+  }
+
+  /** Per-document rows `rows(docs)`. An append adds the batch's rows; a
+    * promotion retracts removed/changed docs by `doc_id` and adds the
+    * changed docs' rows.
     */
-  val AllNames: Seq[String] =
-    Seq(NgramPostingsName, SpanCountsName, DupSpansName, MinhashBandsName,
-      DocHashesName, DupPairsName, KeepersName, Shingles8Name,
-      EvalShinglesName, TokenFreqName, BigramFreqName, ChunkPostingsName,
-      TokenDfName, LineDfName, TokenPositionsName, ImageGridsName,
-      TextGatesName, QualityModelName, QualityScoresName,
-      BpeMergesName, ImageIvfCentroidsName, ImageIvfCellsName,
-      VideoSigsName, AudioSigsName,
-      EvalFlagsLexName) ++
-      DefaultTokenizers.map(tokenCountsName) ++
-      PostingsTokenizers.map(tokenPostingsName)
+  private final case class PerDoc(rows: DataFrame => DataFrame) extends Shape {
+    def keys: Seq[String] = Seq("doc_id")
+  }
+
+  /** Aggregate rows `rows(docs)` keyed by `keys` with count column `cnt`,
+    * stored as base + ± count-delta segments: maintenance appends ONE
+    * delta segment (the batch's counts, or −gone ∪ +changed summed per
+    * key) instead of rewriting the corpus-grain aggregate. Readers fold
+    * the segments ([[foldAdditive]]) while more than one is live, and
+    * compaction folds them back into one base; the segments are never
+    * retracted by key range.
+    */
+  private final case class Additive(keys: Seq[String], cnt: String,
+      rows: DataFrame => DataFrame) extends Shape
+
+  /** Rebuilt whole by `build` over the committed parents on every
+    * maintenance (trained models and standing-state joins, where any
+    * corpus change can move every row).
+    */
+  private case object Whole extends Shape {
+    def keys: Seq[String] = Nil
+  }
+
+  /** Maintained by diff-driven code written out in [[maintainAppended]]
+    * and [[materializeIncremental]] (the digests, the pair table and
+    * the keepers).
+    */
+  private final case class Custom(keys: Seq[String]) extends Shape
+
+  /** What an entry's `build` sees: the corpus directory being built, its
+    * documents, and [[committed]] — the parents that come earlier in the
+    * table, resolved by the caller (the committed version for a build or
+    * a maintenance, the inline frame for a backfill).
+    */
+  private final class BuildCtx(val spark: SparkSession, val dir: String,
+      docsOf: => DataFrame, entry: String, resolve: String => DataFrame) {
+    lazy val docs: DataFrame = docsOf
+    def committed(parent: String): DataFrame = {
+      val at = AllNames.indexOf(parent)
+      require(at >= 0 && at < AllNames.indexOf(entry),
+        s"artifact $entry reads $parent, which the artifact table does not build before it")
+      resolve(parent)
+    }
+  }
+
+  /** One documents-keyed artifact: its name, its maintenance shape, and
+    * the frame [[materialize]] commits for it.
+    */
+  private final case class TextArtifact(name: String, shape: Shape,
+      build: BuildCtx => DataFrame)
+
+  private def perDoc(name: String, rows: DataFrame => DataFrame,
+      build: Option[BuildCtx => DataFrame] = None): TextArtifact =
+    TextArtifact(name, PerDoc(rows), build.getOrElse(c => rows(c.docs)))
+
+  private def additive(name: String, keys: Seq[String], cnt: String,
+      rows: DataFrame => DataFrame,
+      build: Option[BuildCtx => DataFrame] = None): TextArtifact =
+    TextArtifact(name, Additive(keys, cnt, rows),
+      build.getOrElse(c => rows(c.docs)))
+
+  /** Every documents-keyed artifact, in build order: an entry's `build`
+    * may read only entries above it (the digest and pair artifacts
+    * commit BEFORE keepers — the keeper build reads them back as its
+    * edge sources; derived indexes follow the index they derive from).
+    * Adding a documents-keyed artifact is one entry here plus its
+    * accessor.
+    */
+  private val TextArtifacts: Seq[TextArtifact] = {
+    import operators._
+    import org.apache.spark.sql.functions.{col, sum}
+    Seq(
+      perDoc(NgramPostingsName, Dedup.shingleIndex),
+      additive(SpanCountsName, Seq("sh"), "ndocs", CorpusOps.spanCounts),
+      // the dictionary is a filter over the committed counts
+      TextArtifact(DupSpansName, Whole,
+        c => CorpusOps.dupSpansFromCounts(c.committed(SpanCountsName))),
+      perDoc(MinhashBandsName, Dedup.bandedSignatures, Some(c =>
+        Dedup.bandedSignaturesFrom(c.committed(NgramPostingsName)))),
+      TextArtifact(DocHashesName, Custom(Seq("doc_id")),
+        c => docHashesFrame(c.docs)),
+      TextArtifact(DupPairsName, Custom(Seq("doc_a", "doc_b")),
+        c => Dedup.jaccardPairs(c.committed(NgramPostingsName))),
+      TextArtifact(KeepersName, Custom(Seq("doc_id")),
+        c => Dedup.keeperAssignmentFromParts(c.docs.select("doc_id"),
+          c.committed(DocHashesName), c.committed(DupPairsName))),
+      perDoc(Shingles8Name, CorpusOps.docShingles8),
+      // derived from the committed shingle artifact — a map-side
+      // membership explode, never another corpus scan
+      perDoc(EvalShinglesName,
+        d => EvalSets.evalShingleRows(CorpusOps.docShingles8(d)),
+        Some(c => EvalSets.evalShingleRows(c.committed(Shingles8Name))
+          .unionByName(EvalSets.externalShingleRows(c.spark)))),
+      // an appended eval-member document can flag OLD training docs (the
+      // eval side grew), so per-doc folding would under-count
+      TextArtifact(EvalFlagsLexName, Whole,
+        c => EvalSets.lexFlagRows(c.committed(Shingles8Name),
+          c.committed(EvalShinglesName))),
+      additive(TokenFreqName, Seq("source", "token"), "n",
+        CorpusOps.tokenFreqRows),
+      additive(BigramFreqName, Seq("source", "w1", "w2"), "n",
+        CorpusOps.bigramFreqRows),
+      perDoc(ChunkPostingsName, CorpusOps.chunkPostingsRows),
+      perDoc(TokenPositionsName, CorpusOps.tokenPositionsRows)) ++
+    PostingsTokenizers.map(tok => perDoc(tokenPostingsName(tok),
+      CorpusOps.tokenPostingsRows(_, tok))) ++
+    Seq(
+      // df AFTER the postings commit: it is their vocabulary-grain
+      // aggregate, so the build reads the committed index back instead of
+      // re-tokenizing the corpus
+      additive(TokenDfName, Seq("token"), "df", CorpusOps.tokenDfRows,
+        Some(c => CorpusOps.dfFromPostings(c.committed(
+          tokenPostingsName(functions.Tokenizer.Whitespace))))),
+      additive(LineDfName, Seq("line"), "line_df", Extraction.lineDfRows),
+      // BPE merges: trained off the committed census — any corpus change
+      // can reorder pair weights, and the rebuild is census-bounded
+      TextArtifact(BpeMergesName, Whole,
+        c => TextAnalysis.bpeTrainFrom(c.spark,
+          c.committed(TokenFreqName).groupBy("token").agg(sum(col("n")).as("n")),
+          TextAnalysis.BpeSteps)),
+      // image grids: the ONE media decode pass of the snapshot
+      perDoc(ImageGridsName, Multimodal.imageGridRows),
+      // image IVF: trained over the COMMITTED grids — never a media
+      // re-decode — and cells always derive from the COMMITTED centroid
+      // artifact (the embeddings-side IVF discipline). The Lloyd sample is
+      // a deterministic function of the full grid frame, so any change
+      // can move every centroid.
+      TextArtifact(ImageIvfCentroidsName, Whole,
+        c => Ivf.centroidsFrame(c.spark, Ivf.trainOrEmpty(Checkpoints.checkpoint(
+          Multimodal.imageQuantRows(c.committed(ImageGridsName)))))),
+      TextArtifact(ImageIvfCellsName, Whole,
+        c => Ivf.assignFrame(Multimodal.imageQuantRows(c.committed(ImageGridsName)),
+          Ivf.collectCentroids(c.committed(ImageIvfCentroidsName)))),
+      // video/audio signatures: the other two modalities' ONE decode pass
+      perDoc(VideoSigsName, Multimodal.videoSigRows),
+      perDoc(AudioSigsName, Multimodal.audioSigRows),
+      // text-gate bits: the curation funnel's per-doc text scans (the
+      // keeper bit that CAN flip for old docs lives in the keepers
+      // artifact, joined at read time)
+      perDoc(TextGatesName, Curation.textGateRows(_)),
+      // trained quality family: train once (q148's deterministic
+      // bounded-sample perceptron), then ONE map-only scoring pass under
+      // the COMMITTED model — the standing scores can never drift from the
+      // weights they shipped with. The training sample is a function of
+      // the corpus COUNT, so any change can move the model and every score.
+      TextArtifact(QualityModelName, Whole,
+        c => QualityTrain.modelFrame(c.spark, c.dir)),
+      TextArtifact(QualityScoresName, Whole,
+        c => QualityTrain.scoresFrame(c.spark, c.dir,
+          QualityTrain.modelFromFrame(c.committed(QualityModelName))))) ++
+    // token counts last: cheap map-only scans, one per default tokenizer
+    DefaultTokenizers.map(tok =>
+      perDoc(tokenCountsName(tok), tokenCountsFrame(_, tok)))
+  }
+
+  private val TextByName: Map[String, TextArtifact] =
+    TextArtifacts.map(a => a.name -> a).toMap
+
+  /** Every artifact [[materialize]] commits, in build order. */
+  val AllNames: Seq[String] = TextArtifacts.map(_.name)
+
+  /** The additive shape of `name`, if it is an additive artifact. */
+  private def additiveOf(name: String): Option[Additive] =
+    TextByName.get(name).map(_.shape).collect { case a: Additive => a }
 
   @volatile private var rootOpt: Option[String] =
     sys.env.get("SPARK_GRAFT_ARTIFACTS_DIR")
@@ -377,6 +549,15 @@ object Artifacts {
 
   /** Disable artifact read-through — every consumer computes inline. */
   def clearRoot(): Unit = rootOpt = None
+
+  private def noRootMessage(op: String): String =
+    s"Artifacts.$op needs a root — setRoot(...) or SPARK_GRAFT_ARTIFACTS_DIR"
+
+  /** The guard every writing entry point opens with: artifacts are never
+    * written implicitly, so a call with no root configured fails loudly.
+    */
+  private def requireRoot(op: String): Unit =
+    require(rootOpt.nonEmpty, noRootMessage(op))
 
   /** Strict staleness posture: when a root is configured and SOME version
     * of an artifact exists but none matches the corpus's current
@@ -526,7 +707,7 @@ object Artifacts {
         // unreadable version instead of skipping it forever. One
         // listStatus per probe is the price; the intake sink's per-batch
         // polls pay ~a dozen metadata calls, noise beside the batch.
-        if (segmentKeys(name).isEmpty)
+        if (segmentKeysOf(name).isEmpty)
           fs.exists(new Path(dir, ManifestFile)) ||
             fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet"))
         else {
@@ -926,9 +1107,7 @@ object Artifacts {
     */
   def materializeEmbeddings(spark: SparkSession,
       corpusDir: String): Map[String, Long] = Checkpoints.scoped {
-    require(rootOpt.nonEmpty,
-      "Artifacts.materializeEmbeddings needs a root — setRoot(...) or " +
-        "SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("materializeEmbeddings")
     val embPath = new Path(s"$corpusDir/embeddings.parquet")
     val fs = embPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(embPath)) Map.empty
@@ -1016,9 +1195,7 @@ object Artifacts {
       fpOld: String, batch: DataFrame,
       prefiltered: Boolean = false): IncrementalResult = Checkpoints.scoped {
     import org.apache.spark.sql.functions.col
-    require(rootOpt.nonEmpty,
-      "Artifacts.maintainEmbeddingsAppended needs a root — setRoot(...) " +
-        "or SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("maintainEmbeddingsAppended")
     Tables.invalidate(corpusDir)
     val fpNew = embeddingsFingerprint(spark, corpusDir)
     // shared commit-or-reuse scaffolding ([[MaintenanceBuild]]); this
@@ -1100,7 +1277,7 @@ object Artifacts {
     // model (the IVF posture — the cells just moved under them)
     val semFlags = buildInc(EvalFlagsSemName)(
       operators.SemanticOps.q142SemInline(spark, corpusDir))
-    EmbeddingNames.filter(n => segmentKeys(n).nonEmpty).foreach { n =>
+    EmbeddingNames.filter(n => segmentKeysOf(n).nonEmpty).foreach { n =>
       readManifestAt(spark, mb.newPath(n)).map(realSegs) match {
         case Some(segs) if segs.size > compactSegmentThreshold =>
           compactSegments(spark, corpusDir, n)
@@ -1143,9 +1320,7 @@ object Artifacts {
   def maintainEmbeddingsIncremental(spark: SparkSession, oldDir: String,
       newDir: String, maxChangeFraction: Double = 0.2): IncrementalResult = Checkpoints.scoped {
     import org.apache.spark.sql.functions.col
-    require(rootOpt.nonEmpty,
-      "Artifacts.maintainEmbeddingsIncremental needs a root — setRoot(...) " +
-        "or SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("maintainEmbeddingsIncremental")
     val embPath = new Path(s"$newDir/embeddings.parquet")
     val fs = embPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(embPath))
@@ -1567,9 +1742,7 @@ object Artifacts {
     * before.
     */
   def materializeNearDupTruth(spark: SparkSession, corpusDir: String): Long = {
-    require(rootOpt.nonEmpty,
-      "Artifacts.materializeNearDupTruth needs a root — setRoot(...) or " +
-        "SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("materializeNearDupTruth")
     val embPath = new Path(s"$corpusDir/embeddings.parquet")
     val fs = embPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(embPath)) return -1L
@@ -1615,9 +1788,7 @@ object Artifacts {
     * [[materializeNearDupTruth]].
     */
   def materializeLshCalibration(spark: SparkSession, corpusDir: String): Long = {
-    require(rootOpt.nonEmpty,
-      "Artifacts.materializeLshCalibration needs a root — setRoot(...) or " +
-        "SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("materializeLshCalibration")
     val fp = corpusFingerprint(spark, corpusDir)
     val p = versionPath(corpusDir, LshCalibrationName, fp).get
     if (isCommitted(spark, Some(p), LshCalibrationName))
@@ -1658,9 +1829,7 @@ object Artifacts {
     */
   def materializeEvalContamination(spark: SparkSession,
       corpusDir: String): Long = {
-    require(rootOpt.nonEmpty,
-      "Artifacts.materializeEvalContamination needs a root — setRoot(...) " +
-        "or SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("materializeEvalContamination")
     val fp = corpusFingerprint(spark, corpusDir)
     val p = versionPath(corpusDir, EvalContaminationName, fp).get
     if (isCommitted(spark, Some(p), EvalContaminationName))
@@ -1708,9 +1877,7 @@ object Artifacts {
     * is a no-op returning -1 (the evals are undefined there).
     */
   def materializeAnnEvals(spark: SparkSession, corpusDir: String): Long = {
-    require(rootOpt.nonEmpty,
-      "Artifacts.materializeAnnEvals needs a root — setRoot(...) or " +
-        "SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("materializeAnnEvals")
     val embPath = new Path(s"$corpusDir/embeddings.parquet")
     val fs = embPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(embPath)) return -1L
@@ -1739,9 +1906,7 @@ object Artifacts {
 
   private def materializeTokenizerArtifact(spark: SparkSession,
       corpusDir: String, name: String, frame: => DataFrame): Long = {
-    require(rootOpt.nonEmpty,
-      "Artifacts.materializeToken* needs a root — setRoot(...) or " +
-        "SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("materializeToken*")
     val fp = corpusFingerprint(spark, corpusDir)
     val p = versionPath(corpusDir, name, fp).get
     if (isCommitted(spark, Some(p), name)) committedCount(spark, corpusDir, name, p)
@@ -1767,7 +1932,7 @@ object Artifacts {
     // unchanged (a cleared stale commit rebuilt under one fingerprint) —
     // a memoized read handle would pin the dead file listing
     invalidateReads(p)
-    val keys = segmentKeys(name)
+    val keys = segmentKeysOf(name)
     if (keys.nonEmpty) {
       // segmented layout: one fresh segment + a manifest commit. The
       // provisional manifest goes first so a concurrent sweep sees the
@@ -1936,12 +2101,20 @@ object Artifacts {
   // retracted ids, and APPENDS one delta segment — the append path
   // writes batch-bounded bytes per micro-batch where the plain layout
   // re-encoded every artifact whole. Aggregate-grain artifacts (span
-  // counts, token frequencies) are segmented too, as ADDITIVE deltas
-  // ([[additiveSpec]]): maintenance appends a ± count-delta segment and
-  // readers re-aggregate until compaction folds the deltas into the
-  // base — so no maintenance path rewrites corpus-bounded bytes. Only
-  // the span DICTIONARY stays plain: it is a filter of the counts view,
-  // derived whole, and typically small.
+  // counts, token frequencies) are segmented too, as ADDITIVE deltas:
+  // maintenance appends a ± count-delta segment and readers re-aggregate
+  // until compaction folds the deltas into the base — so no maintenance
+  // path rewrites corpus-bounded bytes. The artifacts rebuilt whole on
+  // maintenance (the span dictionary, the trained models and the
+  // standing-state joins) stay plain.
+  //
+  // A documents-keyed artifact's layout follows from its table entry
+  // ([[TextArtifacts]]): per-document entries segment by `doc_id`,
+  // additive entries by their aggregate keys, rebuilt-whole entries are
+  // plain, and the hand-maintained entries name their own keys. Adding
+  // one is a table entry plus its accessor — the build, the backfill,
+  // both maintenance paths, the layout and the status probe all read the
+  // table.
   //
   // Commit protocol is unchanged (`_SUCCESS` gates readers; a version
   // directory is never rewritten once committed). Orphan segments from a
@@ -1953,53 +2126,20 @@ object Artifacts {
   // segments get a `.retired` marker whose creation time starts the
   // prune grace, so readers mid-scan keep their files.
 
-  /** Prune/retract key columns per artifact: per-doc artifacts retract
-    * by `doc_id`; the pair table by EITHER endpoint. Empty = plain
+  /** Prune/retract key columns per artifact: the table's entries name
+    * theirs (per-doc artifacts retract by `doc_id`, the pair table by
+    * EITHER endpoint); a non-default tokenizer's counts and postings
+    * ([[materializeTokenCounts]]) are per-doc, and the vector-side
+    * per-id artifacts retract by the embedding id. Empty = plain
     * (non-segmented) layout.
     */
   private[graft] def segmentKeysOf(name: String): Seq[String] =
-    segmentKeys(name)
-
-  private def segmentKeys(name: String): Seq[String] = name match {
-    case DupPairsName => Seq("doc_a", "doc_b")
-    // vector-side per-id artifacts retract by the embedding id
-    case LshAnnIndexName | LshNearDupIndexName | VecHashesName => Seq("id")
-    case NgramPostingsName | Shingles8Name | EvalShinglesName |
-         DocHashesName | KeepersName | TokenPositionsName |
-         MinhashBandsName | ChunkPostingsName | ImageGridsName |
-         TextGatesName | VideoSigsName | AudioSigsName =>
-      Seq("doc_id")
-    case tc if tc.startsWith(TokenCountsPrefix) => Seq("doc_id")
-    case tp if tp.startsWith(TokenPostingsPrefix) => Seq("doc_id")
-    case SpanCountsName => Seq("sh")
-    case TokenFreqName => Seq("source", "token")
-    case BigramFreqName => Seq("source", "w1", "w2")
-    case TokenDfName => Seq("token")
-    case LineDfName => Seq("line")
-    case _ => Seq.empty
-  }
-
-  /** ADDITIVE segmented artifacts: aggregate-grain frames maintained as
-    * base + ± count-delta segments — (grouping keys, count column). A
-    * maintenance call appends ONE delta segment (positive counts for an
-    * appended batch, ± differences for a promoted snapshot) instead of
-    * rewriting the corpus-grain aggregate, which was the last
-    * corpus-bounded WRITE in the maintenance paths. Readers re-aggregate
-    * (sum per key, drop ≤ 0 — a fully-retracted key) when more than one
-    * segment is live; compaction folds the deltas back into one base
-    * segment, bounding read amplification the way any LSM does. These
-    * artifacts never retract by key range, so their segments are
-    * write-once like every other segment.
-    */
-  private def additiveSpec(name: String): Option[(Seq[String], String)] =
-    name match {
-      case SpanCountsName => Some((Seq("sh"), "ndocs"))
-      case TokenFreqName => Some((Seq("source", "token"), "n"))
-      case BigramFreqName => Some((Seq("source", "w1", "w2"), "n"))
-      case TokenDfName => Some((Seq("token"), "df"))
-      case LineDfName => Some((Seq("line"), "line_df"))
-      case _ => None
-    }
+    TextByName.get(name).map(_.shape.keys).getOrElse(name match {
+      case n if n.startsWith(TokenCountsPrefix) ||
+          n.startsWith(TokenPostingsPrefix) => Seq("doc_id")
+      case LshAnnIndexName | LshNearDupIndexName | VecHashesName => Seq("id")
+      case _ => Seq.empty
+    })
 
   /** THE additive merge: sum the count per key, drop keys whose total
     * retracted to ≤ 0, restore column order. Single definition shared by
@@ -2282,12 +2422,11 @@ object Artifacts {
         val sig = real.map(_.rel).mkString(",")
         readCache.computeIfAbsent((spark, fpDir, sig), _ => {
           val df = spark.read.parquet(real.map(s => s"$base/${s.rel}"): _*)
-          additiveSpec(name) match {
+          additiveOf(name) match {
             // a single segment is always fully aggregated by construction
             // (full build and compaction both write the folded frame) —
             // skip the shuffle on the common compacted shape
-            case Some((keys, cnt)) if real.size > 1 =>
-              foldAdditive(df, keys, cnt)
+            case Some(a) if real.size > 1 => foldAdditive(df, a.keys, a.cnt)
             case _ => df
           }
         })
@@ -2307,7 +2446,7 @@ object Artifacts {
       if (EmbeddingNames.contains(name)) embeddingsFingerprint(spark, corpusDir)
       else corpusFingerprint(spark, corpusDir)
     val p = versionPath(corpusDir, name, fp).getOrElse(
-      throw new IllegalStateException("Artifacts.readCommitted needs a root"))
+      throw new IllegalStateException(noRootMessage("readCommitted")))
     require(isCommitted(spark, Some(p), name),
       s"$name not committed for $corpusDir at fingerprint $fp")
     readVersion(spark, corpusDir, name, p)
@@ -2368,12 +2507,12 @@ object Artifacts {
       fpOld: String, newCorpusDir: String, fpNew: String, name: String,
       retract: Option[DataFrame], append: DataFrame): Option[(String, Long)] = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val keys = segmentKeys(name)
+    val keys = segmentKeysOf(name)
     require(keys.nonEmpty, s"$name is not a segmented artifact")
     // additive artifacts retract by appending NEGATIVE deltas — their
     // segments are never rewritten, so range-based retraction (whose hit
     // test assumes long-ordered keys) must never run over them
-    require(retract.isEmpty || additiveSpec(name).isEmpty,
+    require(retract.isEmpty || additiveOf(name).isEmpty,
       s"$name is additive: retract by negative delta, not by key range")
     val newP = versionPath(newCorpusDir, name, fpNew).get
     if (isCommitted(spark, Some(newP), name))
@@ -2471,7 +2610,7 @@ object Artifacts {
     readManifest(spark, p).map(realSegs) match {
       case Some(segs) if segs.size >= minSegments && segs.size > 1 =>
         val base = artifactDir(corpusDir, name)
-        val keys = segmentKeys(name)
+        val keys = segmentKeysOf(name)
         // Pre-register the in-flight consolidated segment in the LIVE
         // manifest as a provisional entry: the rewrite of a large
         // artifact can outlast [[SegmentSweepGraceMs]], and without a
@@ -2488,10 +2627,7 @@ object Artifacts {
         val df0 = spark.read.parquet(segs.map(s => s"$base/${s.rel}"): _*)
         // additive artifacts: compaction is where the ± delta segments
         // fold back into one base — aggregate, drop retracted keys
-        val df = additiveSpec(name) match {
-          case Some((aKeys, cnt)) => foldAdditive(df0, aKeys, cnt)
-          case None => df0
-        }
+        val df = additiveOf(name).fold(df0)(a => foldAdditive(df0, a.keys, a.cnt))
         val fresh = writeSegment(spark, corpusDir, name, df, keys, freshRel)
         // .retired markers BEFORE the swap: if they followed it, a crash
         // (or a pause) between swap and markers would leave the old
@@ -2575,213 +2711,63 @@ object Artifacts {
     * rebuilt — the reference's load-once guard (`etl.py:262-268`), at
     * snapshot grain. Returns (artifact name → row count).
     *
-    * Build order matters: the posting index and span counts commit
-    * first, and the derived artifacts read them BACK from parquet —
-    * the duplicated-span dictionary is a filter over the committed
-    * counts, and the keeper build's near edges derive from the committed
-    * postings — so the corpus-wide shingle scans run once per snapshot
-    * instead of once per artifact.
+    * Build order matters: each entry of [[TextArtifacts]] commits before
+    * the entries below it, and the derived artifacts read their parents
+    * BACK from parquet — the duplicated-span dictionary is a filter over
+    * the committed counts, and the keeper build's near edges derive from
+    * the committed postings — so the corpus-wide shingle scans run once
+    * per snapshot instead of once per artifact.
     */
   def materialize(spark: SparkSession, corpusDir: String): Map[String, Long] = Checkpoints.scoped {
-    require(rootOpt.nonEmpty,
-      "Artifacts.materialize needs a root — setRoot(...) or SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("materialize")
     val fp = corpusFingerprint(spark, corpusDir)
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def build(name: String)(compute: => DataFrame): (String, Long) = {
-      val p = versionPath(corpusDir, name, fp).get
-      if (isCommitted(spark, Some(p), name)) { timings(name) = 0.0; name -> committedCount(spark, corpusDir, name, p) }
-      else {
-        val t0 = System.nanoTime()
-        val out = write(spark, corpusDir, fp, name, compute)
-        timings(name) = (System.nanoTime() - t0) / 1e9
-        out
-      }
-    }
-    val docs = Tables.documents(spark, corpusDir)
+    lazy val docs = Tables.documents(spark, corpusDir)
+    def committed(name: String): DataFrame =
+      readVersion(spark, corpusDir, name, versionPath(corpusDir, name, fp).get)
     // Builds run SERIALLY on purpose: a concurrent variant (two threads,
     // FIFO scheduling) measured 18.2 s against 11.6 s serial at sf0.1 —
     // the corpus-wide shingle scans of the two builds contend for the
     // same cores and the keeper fixpoint's many small label jobs starve
     // behind the band build's wide stages, a net loss over letting each
     // build keep the cluster to itself.
-    def committed(name: String): DataFrame =
-      readVersion(spark, corpusDir, name, versionPath(corpusDir, name, fp).get)
-    val postings = build(NgramPostingsName)(operators.Dedup.shingleIndex(docs))
-    val counts = build(SpanCountsName)(operators.CorpusOps.spanCounts(docs))
-    val spans = build(DupSpansName)(operators.CorpusOps.dupSpansFromCounts(
-      committed(SpanCountsName)))
-    val bands = build(MinhashBandsName)(
-      operators.Dedup.bandedSignaturesFrom(committed(NgramPostingsName)))
-    // digest and pair artifacts BEFORE keepers: the keeper build reads
-    // both back as its edge sources, so the text-hash scan and the pair
-    // self-join each run once per snapshot no matter how many artifacts
-    // (or queries) consume them
-    val hashes = build(DocHashesName)(docHashesFrame(docs))
-    val pairs = build(DupPairsName)(
-      operators.Dedup.jaccardPairs(committed(NgramPostingsName)))
-    val keepers = build(KeepersName)(
-      operators.Dedup.keeperAssignmentFromParts(docs.select("doc_id"),
-        committed(DocHashesName), committed(DupPairsName)))
-    val sh8 = build(Shingles8Name)(operators.CorpusOps.docShingles8(docs))
-    // derived from the committed shingle artifact — a map-side membership
-    // explode, never another corpus scan
-    val evalSh = build(EvalShinglesName)(
-      operators.EvalSets.evalShingleRows(committed(Shingles8Name))
-        .unionByName(operators.EvalSets.externalShingleRows(spark)))
-    // lexical decontam flags: a standing join of the two shingle
-    // indexes just committed — the release family's screen, once
-    val lexFlags = build(EvalFlagsLexName)(
-      operators.EvalSets.lexFlagRows(committed(Shingles8Name),
-        committed(EvalShinglesName)))
-    val tokFreq = build(TokenFreqName)(operators.CorpusOps.tokenFreqRows(docs))
-    val bgFreq = build(BigramFreqName)(
-      operators.CorpusOps.bigramFreqRows(docs))
-    val chunkPost = build(ChunkPostingsName)(
-      operators.CorpusOps.chunkPostingsRows(docs))
-    val tokPos = build(TokenPositionsName)(
-      operators.CorpusOps.tokenPositionsRows(docs))
-    val tokPost = PostingsTokenizers.map { tok =>
-      build(tokenPostingsName(tok))(
-        operators.CorpusOps.tokenPostingsRows(docs, tok))
+    val counts = TextArtifacts.map { a =>
+      val p = versionPath(corpusDir, a.name, fp).get
+      if (isCommitted(spark, Some(p), a.name)) {
+        timings(a.name) = 0.0
+        a.name -> committedCount(spark, corpusDir, a.name, p)
+      } else {
+        val t0 = System.nanoTime()
+        val out = write(spark, corpusDir, fp, a.name,
+          a.build(new BuildCtx(spark, corpusDir, docs, a.name, committed)))
+        timings(a.name) = (System.nanoTime() - t0) / 1e9
+        out
+      }
     }
-    // df AFTER the postings commit: it is their vocabulary-grain
-    // aggregate, so the build reads the committed index back instead of
-    // re-tokenizing the corpus
-    val tokDf = build(TokenDfName)(operators.CorpusOps.dfFromPostings(
-      committed(tokenPostingsName(functions.Tokenizer.Whitespace))))
-    val lineDfA = build(LineDfName)(operators.Extraction.lineDfRows(docs))
-    // BPE merges: train ONCE off the just-committed census (the
-    // trained-state group with the quality model below — every
-    // downstream consumer of the trained tokenizer reads this table)
-    val bpeM = build(BpeMergesName)(operators.TextAnalysis.bpeTrainFrom(
-      spark, committed(TokenFreqName).groupBy("token")
-        .agg(org.apache.spark.sql.functions.sum("n").as("n")),
-      operators.TextAnalysis.BpeSteps))
-    // image grids: the ONE media decode pass of the snapshot
-    val imgGrids = build(ImageGridsName)(
-      operators.Multimodal.imageGridRows(docs))
-    // image IVF: train at most once (lazy) over the COMMITTED grids —
-    // never a media re-decode — and cells always derive from the
-    // COMMITTED centroid artifact (the embeddings-side IVF discipline)
-    lazy val imgQuant = Checkpoints.checkpoint(
-      operators.Multimodal.imageQuantRows(committed(ImageGridsName)))
-    val imgIvfC = build(ImageIvfCentroidsName)(
-      operators.Ivf.centroidsFrame(spark, operators.Ivf.trainOrEmpty(imgQuant)))
-    val imgIvfA = build(ImageIvfCellsName)(operators.Ivf.assignFrame(imgQuant,
-      operators.Ivf.collectCentroids(committed(ImageIvfCentroidsName))))
-    // video/audio signatures: the other two modalities' ONE decode pass
-    val vidSigs = build(VideoSigsName)(
-      operators.Multimodal.videoSigRows(docs))
-    val audSigs = build(AudioSigsName)(
-      operators.Multimodal.audioSigRows(docs))
-    // text-gate bits: the curation funnel's per-doc text scans
-    // (Gopher line arithmetic, language ID, quality scoring), once
-    val txtGates = build(TextGatesName)(
-      operators.Curation.textGateRows(docs))
-    // trained quality family: train once (q148's deterministic
-    // bounded-sample perceptron), then ONE map-only scoring pass under
-    // the COMMITTED model — the standing scores can never drift from
-    // the weights they shipped with
-    val qModel = build(QualityModelName)(
-      operators.QualityTrain.modelFrame(spark, corpusDir))
-    val qScores = build(QualityScoresName)(
-      operators.QualityTrain.scoresFrame(spark, corpusDir,
-        operators.QualityTrain.modelFromFrame(committed(QualityModelName))))
-    // token counts last: cheap map-only scans, one per default tokenizer
-    val tokCounts = DefaultTokenizers.map { tok =>
-      build(tokenCountsName(tok))(tokenCountsFrame(docs, tok))
-    }
-    // the keeper build's fixpoint rounds leave no pinned blocks behind,
-    // but its symmetrized-edge/label checkpoints were registered — drain
-    // so a materialize call is storage-neutral for the session
     // only a call that actually built something updates the breakdown —
     // an all-skipped call must not replace the timings behind Bench's
     // artifact_build_breakdown with zeros
     if (timings.values.exists(_ > 0)) lastBuild.set(timings.toMap)
     pruneSweep(spark, corpusDir, AllNames, Set(fp))
-    (Seq(postings, counts, spans, bands, hashes, pairs, keepers, sh8,
-      evalSh, lexFlags, tokFreq, bgFreq, chunkPost, tokPos, tokDf, lineDfA,
-      bpeM, imgGrids, imgIvfC, imgIvfA, vidSigs, audSigs, txtGates, qModel,
-      qScores) ++ tokPost ++ tokCounts).toMap
+    counts.toMap
   }
 
   /** The inline frame for one artifact name against a corpus dir — the
-    * name-indexed form of what [[materialize]] builds, used by the
-    * upgrade BACKFILL: when an old snapshot is missing only SOME
-    * artifacts (the artifact set widened in a newer library version),
-    * the incremental paths build exactly those against the old corpus
-    * instead of demoting the whole refresh to a corpus-bounded rebuild
-    * of the new one. Each frame is computed independently (keepers
-    * re-derive their own postings, the dictionary its own counts) —
-    * marginally more compute than materialize's scan-sharing, on a
-    * one-time backfill of typically cheap artifacts.
+    * entry's `build` with every parent resolved inline instead of read
+    * back, used by the upgrade BACKFILL: when an old snapshot is missing
+    * only SOME artifacts (the artifact set widened in a newer library
+    * version), the incremental paths build exactly those against the old
+    * corpus instead of demoting the whole refresh to a corpus-bounded
+    * rebuild of the new one. Marginally more compute than materialize's
+    * scan-sharing, on a one-time backfill of typically cheap artifacts.
     */
   private def inlineFrame(spark: SparkSession, corpusDir: String,
       name: String): DataFrame = {
     lazy val docs = Tables.documents(spark, corpusDir)
-    name match {
-      case NgramPostingsName => operators.Dedup.shingleIndex(docs)
-      case SpanCountsName => operators.CorpusOps.spanCounts(docs)
-      case DupSpansName => operators.CorpusOps.dupSpanSet(spark, corpusDir)
-      case DupPairsName =>
-        operators.Dedup.jaccardPairs(operators.Dedup.shingleIndex(docs))
-      case MinhashBandsName => operators.Dedup.bandedSignatures(docs)
-      case KeepersName => operators.Dedup.keeperAssignment(spark, corpusDir)
-      case Shingles8Name => operators.CorpusOps.docShingles8(docs)
-      case EvalShinglesName =>
-        operators.EvalSets.evalShingleRows(operators.CorpusOps.docShingles8(docs))
-          .unionByName(operators.EvalSets.externalShingleRows(spark))
-      case TokenFreqName => operators.CorpusOps.tokenFreqRows(docs)
-      case BigramFreqName => operators.CorpusOps.bigramFreqRows(docs)
-      case DocHashesName => docHashesFrame(docs)
-      case ChunkPostingsName => operators.CorpusOps.chunkPostingsRows(docs)
-      case TokenPositionsName => operators.CorpusOps.tokenPositionsRows(docs)
-      case TokenDfName => operators.CorpusOps.tokenDfRows(docs)
-      case LineDfName => operators.Extraction.lineDfRows(docs)
-      case BpeMergesName =>
-        operators.TextAnalysis.bpeTrainFrom(spark,
-          docs.select(org.apache.spark.sql.functions.explode(
-              operators.Dedup.tokens(
-                org.apache.spark.sql.functions.col("text"))).as("token"))
-            .groupBy("token")
-            .agg(org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("n")),
-          operators.TextAnalysis.BpeSteps)
-      case ImageGridsName => operators.Multimodal.imageGridRows(docs)
-      case ImageIvfCentroidsName =>
-        operators.Ivf.centroidsFrame(spark, operators.Ivf.trainOrEmpty(
-          operators.Multimodal.imageQuantRows(
-            operators.Multimodal.imageGridRows(docs))))
-      case ImageIvfCellsName =>
-        val q = operators.Multimodal.imageQuantRows(
-          operators.Multimodal.imageGridRows(docs))
-        operators.Ivf.assignFrame(q, operators.Ivf.trainOrEmpty(q))
-      case VideoSigsName => operators.Multimodal.videoSigRows(docs)
-      case AudioSigsName => operators.Multimodal.audioSigRows(docs)
-      case EvalFlagsLexName =>
-        val sh8 = operators.CorpusOps.docShingles8(docs)
-        operators.EvalSets.lexFlagRows(sh8,
-          operators.EvalSets.evalShingleRows(sh8)
-            .unionByName(operators.EvalSets.externalShingleRows(spark)))
-      case TextGatesName => operators.Curation.textGateRows(docs)
-      case QualityModelName =>
-        operators.QualityTrain.modelFrame(spark, corpusDir)
-      case QualityScoresName =>
-        operators.QualityTrain.scoresFrame(spark, corpusDir,
-          operators.QualityTrain.train(spark, corpusDir))
-      case tc if tc.startsWith(TokenCountsPrefix) =>
-        DefaultTokenizers.find(t => tokenCountsName(t) == tc)
-          .map(t => tokenCountsFrame(docs, t))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no default tokenizer for artifact $tc"))
-      case tp if tp.startsWith(TokenPostingsPrefix) =>
-        PostingsTokenizers.find(t => tokenPostingsName(t) == tp)
-          .map(t => operators.CorpusOps.tokenPostingsRows(docs, t))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no default tokenizer for artifact $tp"))
-      case other =>
-        throw new IllegalArgumentException(s"unknown artifact $other")
-    }
+    def frame(n: String): DataFrame = TextByName.get(n)
+      .getOrElse(throw new IllegalArgumentException(s"unknown artifact $n"))
+      .build(new BuildCtx(spark, corpusDir, docs, n, frame))
+    frame(name)
   }
 
   /** Backfill `names` for `corpusDir` at fingerprint `fp` (which must
@@ -2869,8 +2855,7 @@ object Artifacts {
     * LIST per artifact — no data reads, safe to poll.
     */
   def status(spark: SparkSession, corpusDir: String): Seq[ArtifactStatus] = {
-    require(rootOpt.nonEmpty,
-      "Artifacts.status needs a root — setRoot(...) or SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("status")
     val docsFp = corpusFingerprint(spark, corpusDir)
     // the vector indexes resolve against THEIR table's state — a health
     // probe that checked them against the documents listing would call
@@ -2880,8 +2865,8 @@ object Artifacts {
     (AllNames.map(_ -> docsFp) ++ EmbeddingNames.map(_ -> embFp)).map {
       case (name, fp) =>
       val layout =
-        if (additiveSpec(name).nonEmpty) "additive"
-        else if (segmentKeys(name).nonEmpty) "segmented"
+        if (additiveOf(name).nonEmpty) "additive"
+        else if (segmentKeysOf(name).nonEmpty) "segmented"
         else "plain"
       val p = versionPath(corpusDir, name, fp).get
       val committed = isCommitted(spark, Some(p), name)
@@ -2959,8 +2944,9 @@ object Artifacts {
     * plus one batch segment (see the segment-layout notes above) —
     * including the aggregate-grain span counts and token frequencies,
     * which append the batch's own counts as an additive delta segment.
-    * Only the span DICTIONARY (a small filter of the counts view)
-    * re-derives whole per batch. [[compactSegments]] runs automatically past
+    * Only the rebuilt-whole entries (the span dictionary, the trained
+    * models, the standing-state joins) re-derive whole per batch, from
+    * standing state. [[compactSegments]] runs automatically past
     * [[compactSegmentThreshold]] so file counts stay bounded under
     * continuous ingest. The end-of-call prune keeps a
     * [[AppendPruneGraceMs]] grace window so a reader that resolved the
@@ -2970,9 +2956,7 @@ object Artifacts {
   def maintainAppended(spark: SparkSession, corpusDir: String, fpOld: String,
       batch: DataFrame, prefiltered: Boolean = false): IncrementalResult = Checkpoints.scoped {
     import org.apache.spark.sql.functions._
-    require(rootOpt.nonEmpty,
-      "Artifacts.maintainAppended needs a root — setRoot(...) or " +
-        "SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("maintainAppended")
     Tables.invalidate(corpusDir)
     val fpNew = corpusFingerprint(spark, corpusDir)
     // the shared commit-or-reuse scaffolding ([[MaintenanceBuild]]);
@@ -2980,7 +2964,7 @@ object Artifacts {
     // batch/delta rows as one fresh segment, with `whole` the
     // plain-layout upgrade fallback (old version predates the manifest)
     val mb = new MaintenanceBuild(spark, corpusDir, fpOld, corpusDir, fpNew)
-    import mb.{inc => buildInc, segInc => buildSegInc, readOld, readNew}
+    import mb.{segInc => buildSegInc, readOld, readNew}
     if (AllNames.forall(n => isCommitted(spark, versionPath(corpusDir, n, fpNew), n)))
       return IncrementalResult("skip",
         AllNames.map(n => n -> mb.countNew(n)).toMap,
@@ -3026,33 +3010,12 @@ object Artifacts {
         materialize(spark, corpusDir), nAdd, -1, -1, -1, -1)
     }
 
-    val postOld = readOld(NgramPostingsName)
-    val postings = buildSegInc(NgramPostingsName, None,
-      operators.Dedup.shingleIndex(fresh))(
-      postOld.unionByName(operators.Dedup.shingleIndex(fresh)))
-    val postNew = readNew(NgramPostingsName)
-    // additive: the batch's own counts land as ONE delta segment — the
-    // old corpus-grain aggregate is carried by reference, not rewritten
-    val counts = buildSegInc(SpanCountsName, None,
-      operators.CorpusOps.spanCounts(fresh))(
-      readOld(SpanCountsName)
-        .unionByName(operators.CorpusOps.spanCounts(fresh))
-        .groupBy("sh").agg(sum("ndocs").as("ndocs")))
-    val spans = buildInc(DupSpansName)(
-      operators.CorpusOps.dupSpansFromCounts(readNew(SpanCountsName)))
-    val bands = buildSegInc(MinhashBandsName, None,
-      operators.Dedup.bandedSignatures(fresh))(
-      readOld(MinhashBandsName)
-        .unionByName(operators.Dedup.bandedSignatures(fresh)))
-
     // the keeper exactness argument needs the full id+md5 frame — served
     // ENTIRELY from standing state (old digest artifact + batch hashes),
     // so the append path scans no corpus text at all: per-batch cost is
     // batch-bounded, not corpus-bounded
-    val hashedNew = Checkpoints.checkpoint(
+    lazy val hashedNew = Checkpoints.checkpoint(
       readOld(DocHashesName).unionByName(docHashesFrame(fresh)))
-    val hashes = buildSegInc(DocHashesName, None,
-      docHashesFrame(fresh))(hashedNew)
     val diff = fresh.select(col("doc_id"),
       lit(null).cast("string").as("h_old"),
       md5(col("text")).as("h_new"),
@@ -3061,131 +3024,22 @@ object Artifacts {
     // the pair maintenance owns the df-cap-flip handling (an append can
     // push a shingle's df OVER the cap and sever pairs between
     // unchanged docs); the keeper re-run then seeds from the pair delta
-    val pairsOld = readOld(DupPairsName)
-    val incPairs = operators.Dedup.incrementalJaccardPairs(
-      pairsOld, diff, postOld, postNew)
-    val pairs = buildSegInc(DupPairsName, Some(incPairs.retractIds),
-      incPairs.recomputed)(incPairs.full)
-    val pairsNew = readNew(DupPairsName)
-    val incK = operators.Dedup.incrementalKeepers(
-      oldKeepers, hashedNew, diff, pairsOld, pairsNew, incPairs)
-    val keepers = buildSegInc(KeepersName, Some(incK.retractIds),
-      incK.relabeled)(incK.full)
-    val (nAffected, nVerts) = (incK.affectedComponents, incK.ccVertices)
-
-    val sh8 = buildSegInc(Shingles8Name, None,
-      operators.CorpusOps.docShingles8(fresh))(
-      readOld(Shingles8Name)
-        .unionByName(operators.CorpusOps.docShingles8(fresh)))
-    val evalSh = buildSegInc(EvalShinglesName, None,
-      operators.EvalSets.evalShingleRows(
-        operators.CorpusOps.docShingles8(fresh)))(
-      readOld(EvalShinglesName)
-        .unionByName(operators.EvalSets.evalShingleRows(
-          operators.CorpusOps.docShingles8(fresh))))
-    val tokFreq = buildSegInc(TokenFreqName, None,
-      operators.CorpusOps.tokenFreqRows(fresh))(
-      readOld(TokenFreqName)
-        .unionByName(operators.CorpusOps.tokenFreqRows(fresh))
-        .groupBy("source", "token").agg(sum("n").as("n")))
-    val bgFreq = buildSegInc(BigramFreqName, None,
-      operators.CorpusOps.bigramFreqRows(fresh))(
-      readOld(BigramFreqName)
-        .unionByName(operators.CorpusOps.bigramFreqRows(fresh))
-        .groupBy("source", "w1", "w2").agg(sum("n").as("n")))
-    val tokCounts = DefaultTokenizers.map { tok =>
-      val name = tokenCountsName(tok)
-      buildSegInc(name, None, tokenCountsFrame(fresh, tok))(
-        readOld(name).unionByName(tokenCountsFrame(fresh, tok)))
+    lazy val incPairs = operators.Dedup.incrementalJaccardPairs(
+      readOld(DupPairsName), diff, readOld(NgramPostingsName),
+      readNew(NgramPostingsName))
+    lazy val incK = operators.Dedup.incrementalKeepers(oldKeepers,
+      hashedNew, diff, readOld(DupPairsName), readNew(DupPairsName), incPairs)
+    val counts = mb.maintainText(fresh, None) {
+      case DocHashesName =>
+        buildSegInc(DocHashesName, None, docHashesFrame(fresh))(hashedNew)
+      case DupPairsName => buildSegInc(DupPairsName,
+        Some(incPairs.retractIds), incPairs.recomputed)(incPairs.full)
+      case KeepersName => buildSegInc(KeepersName,
+        Some(incK.retractIds), incK.relabeled)(incK.full)
     }
-    val chunkPost = buildSegInc(ChunkPostingsName, None,
-      operators.CorpusOps.chunkPostingsRows(fresh))(
-      readOld(ChunkPostingsName)
-        .unionByName(operators.CorpusOps.chunkPostingsRows(fresh)))
-    val tokPos = buildSegInc(TokenPositionsName, None,
-      operators.CorpusOps.tokenPositionsRows(fresh))(
-      readOld(TokenPositionsName)
-        .unionByName(operators.CorpusOps.tokenPositionsRows(fresh)))
-    val tokPost = PostingsTokenizers.map { tok =>
-      val name = tokenPostingsName(tok)
-      buildSegInc(name, None,
-        operators.CorpusOps.tokenPostingsRows(fresh, tok))(
-        readOld(name)
-          .unionByName(operators.CorpusOps.tokenPostingsRows(fresh, tok)))
-    }
-    // additive: the batch's distinct tokens land as one +1-per-doc delta
-    val tokDf = buildSegInc(TokenDfName, None,
-      operators.CorpusOps.tokenDfRows(fresh))(
-      readOld(TokenDfName)
-        .unionByName(operators.CorpusOps.tokenDfRows(fresh))
-        .groupBy("token").agg(sum("df").as("df")))
-    // line-vocabulary df: the batch's distinct lines as one +df delta
-    val lineDfA = buildSegInc(LineDfName, None,
-      operators.Extraction.lineDfRows(fresh))(
-      readOld(LineDfName)
-        .unionByName(operators.Extraction.lineDfRows(fresh))
-        .groupBy("line").agg(sum("line_df").as("line_df")))
-    // BPE merges: rebuilt WHOLE off the NEW census (the quality-model
-    // posture — any append can reorder pair weights); census-bounded
-    val bpeM = buildInc(BpeMergesName)(operators.TextAnalysis.bpeTrainFrom(
-      spark, readNew(TokenFreqName).groupBy("token")
-        .agg(sum("n").as("n")),
-      operators.TextAnalysis.BpeSteps))
-    // image grids: per-doc rows — the batch decodes only its own media
-    val imgGrids = buildSegInc(ImageGridsName, None,
-      operators.Multimodal.imageGridRows(fresh))(
-      readOld(ImageGridsName)
-        .unionByName(operators.Multimodal.imageGridRows(fresh)))
-    // image IVF: rebuilt WHOLE from the NEW grid artifact (the
-    // quality-model posture — the Lloyd sample is a deterministic
-    // function of the full grid frame, so any append can move every
-    // centroid); training reads standing grids, never re-decodes media
-    lazy val imgQuantA = Checkpoints.checkpoint(
-      operators.Multimodal.imageQuantRows(readNew(ImageGridsName)))
-    val imgIvfC = buildInc(ImageIvfCentroidsName)(
-      operators.Ivf.centroidsFrame(spark, operators.Ivf.trainOrEmpty(imgQuantA)))
-    val imgIvfA = buildInc(ImageIvfCellsName)(
-      operators.Ivf.assignFrame(imgQuantA,
-        operators.Ivf.collectCentroids(readNew(ImageIvfCentroidsName))))
-    // video/audio signatures: per-doc rows — the batch decodes only its
-    // own media (the image-grids shape for the other two modalities)
-    val vidSigs = buildSegInc(VideoSigsName, None,
-      operators.Multimodal.videoSigRows(fresh))(
-      readOld(VideoSigsName)
-        .unionByName(operators.Multimodal.videoSigRows(fresh)))
-    val audSigs = buildSegInc(AudioSigsName, None,
-      operators.Multimodal.audioSigRows(fresh))(
-      readOld(AudioSigsName)
-        .unionByName(operators.Multimodal.audioSigRows(fresh)))
-    // lexical decontam flags: rebuilt WHOLE from the two NEW shingle
-    // indexes (a standing-state join, no text scan) — an appended
-    // eval-member doc can flag OLD training docs, so per-doc folding
-    // would under-count
-    val lexFlags = buildInc(EvalFlagsLexName)(
-      operators.EvalSets.lexFlagRows(readNew(Shingles8Name),
-        readNew(EvalShinglesName)))
-    // text-gate bits: per-doc rows — the batch evaluates only its own
-    // gates (pure text functions; the keeper bit that CAN flip for old
-    // docs lives in the keepers artifact, joined at read time)
-    val txtGates = buildSegInc(TextGatesName, None,
-      operators.Curation.textGateRows(fresh))(
-      readOld(TextGatesName)
-        .unionByName(operators.Curation.textGateRows(fresh)))
-    // trained quality family: rebuilt WHOLE — the training sample is a
-    // deterministic function of the corpus COUNT (PolyHash mod
-    // ⌈n/target⌉), so ANY append can move the model and with it every
-    // document's score; folding batch scores under the old model would
-    // freeze a stale model into a fresh fingerprint. Training stays
-    // sample-bounded; the re-score is one map-only corpus pass (the
-    // IVF-centroids rebuilt-whole posture).
-    val qModel = buildInc(QualityModelName)(
-      operators.QualityTrain.modelFrame(spark, corpusDir))
-    val qScores = buildInc(QualityScoresName)(
-      operators.QualityTrain.scoresFrame(spark, corpusDir,
-        operators.QualityTrain.modelFromFrame(readNew(QualityModelName))))
     // bound segment sprawl: a batch per artifact per interval would
     // otherwise grow every read's file list without limit
-    AllNames.filter(n => segmentKeys(n).nonEmpty).foreach { n =>
+    AllNames.filter(n => segmentKeysOf(n).nonEmpty).foreach { n =>
       readManifestAt(spark, mb.newPath(n)).map(realSegs) match {
         case Some(segs) if segs.size > compactSegmentThreshold =>
           compactSegments(spark, corpusDir, n)
@@ -3199,12 +3053,8 @@ object Artifacts {
     // time the moment they become stale)
     pruneSweep(spark, corpusDir, AllNames, Set(fpNew, fpOld),
       graceMs = AppendPruneGraceMs)
-    IncrementalResult("append",
-      (Seq(postings, counts, spans, bands, hashes, pairs, keepers, sh8,
-        evalSh, lexFlags, tokFreq, bgFreq, chunkPost, tokPos, tokDf,
-        lineDfA, bpeM, imgGrids, imgIvfC, imgIvfA, vidSigs, audSigs,
-        txtGates, qModel, qScores) ++ tokPost ++ tokCounts).toMap,
-      nAdd, 0, 0, nAffected, nVerts)
+    IncrementalResult("append", counts.toMap,
+      nAdd, 0, 0, incK.affectedComponents, incK.ccVertices)
   }
 
   /** Outcome of [[materializeIncremental]]: which path ran, the committed
@@ -3261,6 +3111,43 @@ object Artifacts {
       else commitSegmented(spark, oldDir, fpOld, newDir, fpNew, name,
         retract, append).getOrElse(write(spark, newDir, fpNew, name, whole))
     }
+
+    /** Carry every documents-keyed artifact to the new version, in table
+      * order, folding in the documents `added` (the batch, or the
+      * promotion's added/changed docs) and — for a promotion — `gone`:
+      * the removed/changed ids and their OLD documents. Per-doc entries
+      * retract the gone ids and append the added docs' rows; additive
+      * entries append ONE ± delta segment; rebuilt-whole entries build
+      * over the new committed parents; `custom` maintains the rest.
+      */
+    def maintainText(added: DataFrame, gone: Option[(DataFrame, DataFrame)])(
+        custom: String => (String, Long)): Seq[(String, Long)] = {
+      import org.apache.spark.sql.functions.{col, sum}
+      TextArtifacts.map { a =>
+        a.shape match {
+          case PerDoc(rows) =>
+            segInc(a.name, gone.map(_._1), rows(added))(gone
+              .fold(readOld(a.name))(g =>
+                readOld(a.name).join(g._1, Seq("doc_id"), "left_anti"))
+              .unionByName(rows(added)))
+          case Additive(keys, cnt, rows) =>
+            // a NULL key must group with itself, so the ± delta is a
+            // union + re-aggregation, never a join on the keys
+            lazy val delta = gone.fold(rows(added)) { case (_, goneDocs) =>
+              rows(goneDocs).select(keys.map(col) :+ (-col(cnt)).as(cnt): _*)
+                .unionByName(rows(added))
+                .groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))
+                .filter(col(cnt) =!= 0)
+            }
+            segInc(a.name, None, delta)(
+              foldAdditive(readOld(a.name).unionByName(delta), keys, cnt))
+          case Whole =>
+            inc(a.name)(a.build(new BuildCtx(spark, newDir,
+              Tables.documents(spark, newDir), a.name, readNew)))
+          case Custom(_) => custom(a.name)
+        }
+      }
+    }
   }
 
   /** Maintain `newDir`'s artifacts FROM `oldDir`'s, driven by the
@@ -3271,13 +3158,13 @@ object Artifacts {
     *
     *  - diff at id+md5 grain (the one corpus-grain scan, same cost class
     *    as q76 — document bodies never ship);
-    *  - posting index and band index: retract removed/changed docs' rows
-    *    from the old artifact, append rows computed from added/changed
-    *    docs only;
-    *  - span counts: ± distinct-doc deltas from the changed docs' old
-    *    and new texts (keeping COUNTS, not just the ≥ 2 survivors, is
-    *    what makes decrement possible); the dup-span dictionary is its
-    *    filter;
+    *  - per-document entries (postings, bands, shingles, …): retract
+    *    removed/changed docs' rows from the old artifact, append rows
+    *    computed from added/changed docs only;
+    *  - additive entries (span counts, token frequencies, …): ± deltas
+    *    from the changed docs' old and new texts (keeping COUNTS, not
+    *    just the ≥ 2 survivors, is what makes decrement possible); the
+    *    dup-span dictionary is rebuilt whole as their filter;
     *  - keepers: connected components re-run ONLY over old components
     *    the diff can have touched ([[operators.Dedup.incrementalKeepers]]
     *    — the closure argument for exactness lives there).
@@ -3300,9 +3187,7 @@ object Artifacts {
   def materializeIncremental(spark: SparkSession, oldDir: String,
       newDir: String, maxChangeFraction: Double = 0.2): IncrementalResult = Checkpoints.scoped {
     import org.apache.spark.sql.functions._
-    require(rootOpt.nonEmpty,
-      "Artifacts.materializeIncremental needs a root — setRoot(...) or " +
-        "SPARK_GRAFT_ARTIFACTS_DIR")
+    requireRoot("materializeIncremental")
     val fpNew = corpusFingerprint(spark, newDir)
     if (AllNames.forall(n => isCommitted(spark, versionPath(newDir, n, fpNew), n)))
       return IncrementalResult("skip",
@@ -3319,8 +3204,7 @@ object Artifacts {
     // (no decode/shuffle/re-encode: the promotion's I/O is a copy, its
     // COMPUTE stays change-bounded), `whole` the plain-layout fallback
     val mb = new MaintenanceBuild(spark, oldDir, fpOld, newDir, fpNew)
-    import mb.{inc => buildInc, segInc => buildSegInc,
-      readOld => readOldA, readNew => readNewA}
+    import mb.{segInc => buildSegInc, readOld => readOldA, readNew => readNewA}
     val missingOld = AllNames.filterNot(n =>
       isCommitted(spark, versionPath(oldDir, n, fpOld), n))
     // A partially missing old set usually means the artifact set widened
@@ -3359,225 +3243,31 @@ object Artifacts {
     val dGone = diff.filter(col("status").isin("removed", "changed"))
       .select("doc_id")
     val docsChangedNew = prunedDeltaScan(docsNew, dNew)
-
-    // posting index first — the pair maintenance reads it back
-    val postOld = readOldA(NgramPostingsName)
-    val postings = buildSegInc(NgramPostingsName, Some(dGone),
-      operators.Dedup.shingleIndex(docsChangedNew))(
-      postOld.join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.Dedup.shingleIndex(docsChangedNew)))
-    val postNew = readNewA(NgramPostingsName)
-
-    // span counts by ± distinct-doc deltas, dictionary derived from them.
-    // Additive layout: the ± differences land as ONE delta segment beside
-    // the carried base — the corpus-grain aggregate is never rewritten
     val docsGoneOld = prunedDeltaScan(Tables.documents(spark, oldDir), dGone)
-    val neg = operators.CorpusOps.spanRows(docsGoneOld)
-      .groupBy("sh").agg(count(lit(1)).as("neg"))
-    val pos = operators.CorpusOps.spanRows(docsChangedNew)
-      .groupBy("sh").agg(count(lit(1)).as("pos"))
-    val spanDelta = neg.join(pos, Seq("sh"), "full_outer")
-      .select(col("sh"), (coalesce(col("pos"), lit(0L))
-        - coalesce(col("neg"), lit(0L))).as("ndocs"))
-      .filter(col("ndocs") =!= 0)
-    val counts = buildSegInc(SpanCountsName, None, spanDelta)(
-      readOldA(SpanCountsName)
-        .unionByName(spanDelta)
-        .groupBy("sh").agg(sum("ndocs").as("ndocs"))
-        .filter(col("ndocs") > 0))
-    val spans = buildInc(DupSpansName)(
-      operators.CorpusOps.dupSpansFromCounts(readNewA(SpanCountsName)))
-
-    // band index: per-doc rows — retract and append
-    val bands = buildSegInc(MinhashBandsName, Some(dGone),
-      operators.Dedup.bandedSignatures(docsChangedNew))(
-      readOldA(MinhashBandsName)
-        .join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.Dedup.bandedSignatures(docsChangedNew)))
 
     // pair table: change-bounded recompute of the pairs incident to
-    // touched docs (owns the df-cap-flip detection); the keeper re-run
-    // below seeds from its old-vs-new delta
-    val pairsOld = readOldA(DupPairsName)
-    val incPairs = operators.Dedup.incrementalJaccardPairs(
-      pairsOld, diff, postOld, postNew)
-    val pairs = buildSegInc(DupPairsName, Some(incPairs.retractIds),
-      incPairs.recomputed)(incPairs.full)
-    val pairsNew = readNewA(DupPairsName)
-
-    // keepers: component-bounded CC re-run
-    val incK = operators.Dedup.incrementalKeepers(
-      readOldA(KeepersName), hashedNew, diff, pairsOld, pairsNew, incPairs)
-    val keepers = buildSegInc(KeepersName, Some(incK.retractIds),
-      incK.relabeled)(incK.full)
-    val (nAffected, nVerts) = (incK.affectedComponents, incK.ccVertices)
-
-    // 8-gram shingles: per-doc rows — retract and append
-    val sh8 = buildSegInc(Shingles8Name, Some(dGone),
-      operators.CorpusOps.docShingles8(docsChangedNew))(
-      readOldA(Shingles8Name)
-        .join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.CorpusOps.docShingles8(docsChangedNew)))
-
-    // eval-set index: the same per-doc retract/append, membership
-    // attached map-side to the changed docs' shingles
-    val evalSh = buildSegInc(EvalShinglesName, Some(dGone),
-      operators.EvalSets.evalShingleRows(
-        operators.CorpusOps.docShingles8(docsChangedNew)))(
-      readOldA(EvalShinglesName)
-        .join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.EvalSets.evalShingleRows(
-          operators.CorpusOps.docShingles8(docsChangedNew))))
-
-    // token-frequency index: ± count deltas as one additive segment
-    // (union-based delta, not a full-outer join — a nullable source
-    // column would break join matching on null keys, where groupBy
-    // groups them correctly)
-    val tokDelta = operators.CorpusOps.tokenFreqRows(docsGoneOld)
-      .select(col("source"), col("token"), (-col("n")).as("n"))
-      .unionByName(operators.CorpusOps.tokenFreqRows(docsChangedNew))
-      .groupBy("source", "token").agg(sum("n").as("n"))
-      .filter(col("n") =!= 0)
-    val tokFreq = buildSegInc(TokenFreqName, None, tokDelta)(
-      readOldA(TokenFreqName)
-        .unionByName(tokDelta)
-        .groupBy("source", "token").agg(sum("n").as("n"))
-        .filter(col("n") > 0))
-
-    // bigram-frequency index: the same ± additive delta at pair grain
-    val bgDelta = operators.CorpusOps.bigramFreqRows(docsGoneOld)
-      .select(col("source"), col("w1"), col("w2"), (-col("n")).as("n"))
-      .unionByName(operators.CorpusOps.bigramFreqRows(docsChangedNew))
-      .groupBy("source", "w1", "w2").agg(sum("n").as("n"))
-      .filter(col("n") =!= 0)
-    val bgFreq = buildSegInc(BigramFreqName, None, bgDelta)(
-      readOldA(BigramFreqName)
-        .unionByName(bgDelta)
-        .groupBy("source", "w1", "w2").agg(sum("n").as("n"))
-        .filter(col("n") > 0))
-
-    // digest artifact: retract the gone docs' rows, append the diff's
-    // own new-side hashes for added/changed docs — already computed and
-    // checkpointed, so committing them is free maintenance
-    val hashes = buildSegInc(DocHashesName, Some(dGone),
-      hashedNew.join(dNew, Seq("doc_id"), "left_semi"))(hashedNew)
-
-    // token counts: per-doc rows — retract and append, per default
-    // tokenizer (the same shape as the band index)
-    val tokCounts = DefaultTokenizers.map { tok =>
-      val name = tokenCountsName(tok)
-      buildSegInc(name, Some(dGone),
-        tokenCountsFrame(docsChangedNew, tok))(
-        readOldA(name)
-          .join(dGone, Seq("doc_id"), "left_anti")
-          .unionByName(tokenCountsFrame(docsChangedNew, tok)))
+    // touched docs (owns the df-cap-flip detection), read against the
+    // posting index maintained just before it; the keeper re-run seeds
+    // from its old-vs-new delta and re-runs connected components only
+    // over the components the diff can have touched
+    lazy val incPairs = operators.Dedup.incrementalJaccardPairs(
+      readOldA(DupPairsName), diff, readOldA(NgramPostingsName),
+      readNewA(NgramPostingsName))
+    lazy val incK = operators.Dedup.incrementalKeepers(readOldA(KeepersName),
+      hashedNew, diff, readOldA(DupPairsName), readNewA(DupPairsName), incPairs)
+    val counts = mb.maintainText(docsChangedNew, Some((dGone, docsGoneOld))) {
+      // digest artifact: retract the gone docs' rows, append the diff's
+      // own new-side hashes for added/changed docs — already computed and
+      // checkpointed, so committing them is free maintenance
+      case DocHashesName => buildSegInc(DocHashesName, Some(dGone),
+        hashedNew.join(dNew, Seq("doc_id"), "left_semi"))(hashedNew)
+      case DupPairsName => buildSegInc(DupPairsName,
+        Some(incPairs.retractIds), incPairs.recomputed)(incPairs.full)
+      case KeepersName => buildSegInc(KeepersName,
+        Some(incK.retractIds), incK.relabeled)(incK.full)
     }
-
-    // postings indexes (doc + chunk grain): per-doc rows — retract and
-    // append, the shingles8 shape applied to the lexical-search index
-    val chunkPost = buildSegInc(ChunkPostingsName, Some(dGone),
-      operators.CorpusOps.chunkPostingsRows(docsChangedNew))(
-      readOldA(ChunkPostingsName)
-        .join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.CorpusOps.chunkPostingsRows(docsChangedNew)))
-    val tokPos = buildSegInc(TokenPositionsName, Some(dGone),
-      operators.CorpusOps.tokenPositionsRows(docsChangedNew))(
-      readOldA(TokenPositionsName)
-        .join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.CorpusOps.tokenPositionsRows(docsChangedNew)))
-    val tokPost = PostingsTokenizers.map { tok =>
-      val name = tokenPostingsName(tok)
-      buildSegInc(name, Some(dGone),
-        operators.CorpusOps.tokenPostingsRows(docsChangedNew, tok))(
-        readOldA(name)
-          .join(dGone, Seq("doc_id"), "left_anti")
-          .unionByName(
-            operators.CorpusOps.tokenPostingsRows(docsChangedNew, tok)))
-    }
-
-    // document frequencies: ±1 per (gone/new doc, distinct token) as
-    // one additive delta segment
-    val dfDelta = operators.CorpusOps.tokenDfRows(docsGoneOld)
-      .select(col("token"), (-col("df")).as("df"))
-      .unionByName(operators.CorpusOps.tokenDfRows(docsChangedNew))
-      .groupBy("token").agg(sum("df").as("df"))
-      .filter(col("df") =!= 0)
-    val tokDf = buildSegInc(TokenDfName, None, dfDelta)(
-      readOldA(TokenDfName)
-        .unionByName(dfDelta)
-        .groupBy("token").agg(sum("df").as("df"))
-        .filter(col("df") > 0))
-    // line df: the same ±1-per-(doc, distinct line) additive delta
-    val lineDelta = operators.Extraction.lineDfRows(docsGoneOld)
-      .select(col("line"), (-col("line_df")).as("line_df"))
-      .unionByName(operators.Extraction.lineDfRows(docsChangedNew))
-      .groupBy("line").agg(sum("line_df").as("line_df"))
-      .filter(col("line_df") =!= 0)
-    val lineDfA = buildSegInc(LineDfName, None, lineDelta)(
-      readOldA(LineDfName)
-        .unionByName(lineDelta)
-        .groupBy("line").agg(sum("line_df").as("line_df"))
-        .filter(col("line_df") > 0))
-    // BPE merges: rebuilt whole off the new census (see maintainAppended)
-    val bpeM = buildInc(BpeMergesName)(operators.TextAnalysis.bpeTrainFrom(
-      spark, readNewA(TokenFreqName).groupBy("token")
-        .agg(sum("n").as("n")),
-      operators.TextAnalysis.BpeSteps))
-    // image grids: per-doc rows — retract the gone docs, decode only
-    // the changed docs' media (the band-index shape for pixels)
-    val imgGrids = buildSegInc(ImageGridsName, Some(dGone),
-      operators.Multimodal.imageGridRows(docsChangedNew))(
-      readOldA(ImageGridsName)
-        .join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.Multimodal.imageGridRows(docsChangedNew)))
-    // image IVF: rebuilt WHOLE against the new grid artifact (see
-    // maintainAppended — the sample, and so the model and every
-    // assignment, moves with any corpus change)
-    lazy val imgQuantN = Checkpoints.checkpoint(
-      operators.Multimodal.imageQuantRows(readNewA(ImageGridsName)))
-    val imgIvfC = buildInc(ImageIvfCentroidsName)(
-      operators.Ivf.centroidsFrame(spark, operators.Ivf.trainOrEmpty(imgQuantN)))
-    val imgIvfA = buildInc(ImageIvfCellsName)(
-      operators.Ivf.assignFrame(imgQuantN,
-        operators.Ivf.collectCentroids(readNewA(ImageIvfCentroidsName))))
-    // video/audio signatures: retract the gone docs, decode only the
-    // changed docs' media
-    val vidSigs = buildSegInc(VideoSigsName, Some(dGone),
-      operators.Multimodal.videoSigRows(docsChangedNew))(
-      readOldA(VideoSigsName)
-        .join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.Multimodal.videoSigRows(docsChangedNew)))
-    val audSigs = buildSegInc(AudioSigsName, Some(dGone),
-      operators.Multimodal.audioSigRows(docsChangedNew))(
-      readOldA(AudioSigsName)
-        .join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.Multimodal.audioSigRows(docsChangedNew)))
-    // lexical decontam flags: rebuilt whole from the new shingle
-    // indexes (see maintainAppended)
-    val lexFlags = buildInc(EvalFlagsLexName)(
-      operators.EvalSets.lexFlagRows(readNewA(Shingles8Name),
-        readNewA(EvalShinglesName)))
-    // text-gate bits: per-doc rows — retract the gone docs, evaluate
-    // only the changed docs' gates
-    val txtGates = buildSegInc(TextGatesName, Some(dGone),
-      operators.Curation.textGateRows(docsChangedNew))(
-      readOldA(TextGatesName)
-        .join(dGone, Seq("doc_id"), "left_anti")
-        .unionByName(operators.Curation.textGateRows(docsChangedNew)))
-    // trained quality family: rebuilt WHOLE against the new snapshot
-    // (see maintainAppended — the training sample, and so the model and
-    // every score, moves with any corpus change)
-    val qModel = buildInc(QualityModelName)(
-      operators.QualityTrain.modelFrame(spark, newDir))
-    val qScores = buildInc(QualityScoresName)(
-      operators.QualityTrain.scoresFrame(spark, newDir,
-        operators.QualityTrain.modelFromFrame(readNewA(QualityModelName))))
     pruneSweep(spark, newDir, AllNames, Set(fpNew))
-    IncrementalResult("incremental",
-      (Seq(postings, counts, spans, bands, hashes, pairs, keepers, sh8,
-        evalSh, lexFlags, tokFreq, bgFreq, chunkPost, tokPos, tokDf,
-        lineDfA, bpeM, imgGrids, imgIvfC, imgIvfA, vidSigs, audSigs,
-        txtGates, qModel, qScores) ++ tokPost ++ tokCounts).toMap,
-      nAdd, nChg, nRem, nAffected, nVerts)
+    IncrementalResult("incremental", counts.toMap,
+      nAdd, nChg, nRem, incK.affectedComponents, incK.ccVertices)
   }
 }
