@@ -197,6 +197,18 @@ class ArtifactsSpec extends SparkSpec {
     try {
       Artifacts.setRoot(tmp.getAbsolutePath)
       Artifacts.materializeAll(spark, sf)
+      // every artifact materializeAll committed — the eval state
+      // included, documents- and embeddings-keyed alike — resolves as
+      // materialized against the fingerprint of the table it versions with
+      val committedNames = new java.io.File(tmp, Artifacts.corpusKey(sf))
+        .listFiles().filter(_.isDirectory).map(_.getName).toSeq
+      assert(committedNames.contains(Artifacts.NearDupTruthName) &&
+        Artifacts.AnnEvalNames.forall(committedNames.contains),
+        s"eval state missing after materializeAll: $committedNames")
+      val unresolved = committedNames.filterNot(
+        Artifacts.isMaterialized(spark, sf, _))
+      assert(unresolved.isEmpty,
+        s"committed by materializeAll but not isMaterialized: $unresolved")
       // every file under the root, with its mtime: a rebuilt artifact
       // commits fresh task-UUID part files and a fresh _SUCCESS marker
       def files(f: java.io.File): Set[String] =

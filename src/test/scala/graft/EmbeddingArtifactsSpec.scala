@@ -16,6 +16,20 @@ class EmbeddingArtifactsSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** Every committed `ivf_cells.cell` is a cell of the committed
+    * `ivf_centroids` — an assignment outside the centroid spine would
+    * drop out of q152's per-cell shares silently.
+    */
+  private def assertCellsInCentroids(dir: String): Unit = {
+    val cells = Artifacts.readCommitted(spark, dir, Artifacts.IvfCellsName)
+      .select("cell").distinct()
+    val spine = Artifacts.readCommitted(spark, dir, Artifacts.IvfCentroidsName)
+      .select("cell")
+    val orphans = cells.join(spine, Seq("cell"), "left_anti").collect()
+    assert(orphans.isEmpty,
+      s"ivf_cells names cells outside ivf_centroids in $dir: ${orphans.toSeq}")
+  }
+
   test("materializeEmbeddings builds both indexes; artifact ≡ inline; idempotent") {
     val root = Files.createTempDirectory("graft-emb-root").toFile
     try {
@@ -196,9 +210,11 @@ class EmbeddingArtifactsSpec extends SparkSpec {
 
       Artifacts.setRoot(root.getAbsolutePath)
       Artifacts.materializeEmbeddings(spark, oldDir)
+      assertCellsInCentroids(oldDir)
       val res = Artifacts.maintainEmbeddingsIncremental(spark, oldDir, newDir)
       assert(res.mode == "incremental", res)
       assert(res.added == 9 && res.changed == 7 && res.removed > 0, res)
+      assertCellsInCentroids(newDir)
 
       // every maintained artifact is hash-identical to the inline frame
       // over the new corpus (what a scratch build would commit)
@@ -318,6 +334,7 @@ class EmbeddingArtifactsSpec extends SparkSpec {
       writeEmb(initial, corpus)
       Artifacts.setRoot(root.getAbsolutePath)
       Artifacts.materializeEmbeddings(spark, corpus)
+      assertCellsInCentroids(corpus)
       val fpOld = Artifacts.embeddingsFingerprint(spark, corpus)
       newRows.write.mode("append").parquet(s"$corpus/embeddings.parquet")
       Tables.invalidate(corpus)
@@ -325,6 +342,7 @@ class EmbeddingArtifactsSpec extends SparkSpec {
         batch)
       assert(res.mode == "append", res)
       assert(res.added == newRows.count(), res)
+      assertCellsInCentroids(corpus)
       val eNew = Tables.embeddings(spark, corpus)
       val scratchQuant = Checkpoints.checkpoint(
         graft.operators.Ivf.quantized(eNew))
