@@ -49,8 +49,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * maintained. [[AllNames]], [[EmbeddingNames]], the segment layout,
   * the fingerprint every read resolves against, [[materialize]],
   * [[materializeEmbeddings]], the eval-state builds, the upgrade
-  * backfill, both append paths and both promotion paths all derive from
-  * the table, so adding an artifact is one entry plus its accessor.
+  * backfill, both append paths, both promotion paths and the serve path
+  * all derive from the table, so adding an artifact is one entry.
   *
   * == Layout: per-doc artifacts are SEGMENTED ==
   *
@@ -63,11 +63,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * artifacts need. See the segment-layout notes above [[segmentKeysOf]]
   * for the full contract (commit protocol, compaction, sweep).
   *
-  * Contract: every read path returns EXACTLY the frame the inline
-  * computation produces (`ArtifactsSpec` proves hash-equality), so
-  * consumers are oblivious — [[keepers]]/[[minhashBands]]/[[dupSpans]]
-  * serve the artifact when one is committed for the corpus's current
-  * fingerprint and fall back to inline computation otherwise. Verify
+  * == Serving: one path per shape ==
+  *
+  * [[serve]] returns the committed version when one resolves for the
+  * current fingerprint, else the entry's own build inline, with every
+  * parent served the same way — so the inline fallback IS the build and
+  * artifact ≡ inline holds by construction (`ArtifactsSpec` checks it
+  * row for row). [[current]] is the Option form, for consumers whose
+  * inline form is a column over a scan they make anyway. Verify
   * runs with no root configured and therefore always exercises the real
   * compute path; Bench materializes once up front (reported separately
   * as `artifact_build_sec`) and times queries the way production runs
@@ -577,7 +580,8 @@ object Artifacts {
   /** What an entry's `build` sees: the corpus directory being built, its
     * tables, [[committed]] — the parents that come earlier in the table,
     * resolved by the caller (the committed version for a build or a
-    * maintenance, the inline frame for a backfill) — and [[shared]]
+    * maintenance, read-through-or-inline for a serve or a backfill —
+    * see [[Inline]]) — and [[shared]]
     * frames several entries of one call train from.
     */
   private final class BuildCtx(val spark: SparkSession, val dir: String,
@@ -633,12 +637,14 @@ object Artifacts {
     * may read only entries above it (the digest and pair artifacts
     * commit BEFORE keepers — the keeper build reads them back as its
     * edge sources; derived indexes follow the index they derive from).
-    * Adding a documents-keyed artifact is one entry here plus its
-    * accessor.
+    * Adding a documents-keyed artifact is one entry here.
     */
   private val TextArtifacts: Seq[ArtifactDef] = {
     import operators._
     import org.apache.spark.sql.functions.{col, sum}
+    // the image IVF's quantized grid vectors, trained on and assigned once
+    def imageQuant(c: BuildCtx) = c.shared("imageQuant")(
+      Multimodal.imageQuantRows(c.committed(ImageGridsName)))
     Seq(
       perDoc(NgramPostingsName, Dedup.shingleIndex),
       additive(SpanCountsName, Seq("sh"), "ndocs", CorpusOps.spanCounts),
@@ -696,10 +702,9 @@ object Artifacts {
       // a deterministic function of the full grid frame, so any change
       // can move every centroid.
       ArtifactDef(ImageIvfCentroidsName, Docs, Whole,
-        c => Ivf.centroidsFrame(c.spark, Ivf.trainOrEmpty(Checkpoints.checkpoint(
-          Multimodal.imageQuantRows(c.committed(ImageGridsName)))))),
+        c => Ivf.centroidsFrame(c.spark, Ivf.trainOrEmpty(imageQuant(c)))),
       ArtifactDef(ImageIvfCellsName, Docs, Whole,
-        c => Ivf.assignFrame(Multimodal.imageQuantRows(c.committed(ImageGridsName)),
+        c => Ivf.assignFrame(imageQuant(c),
           Ivf.collectCentroids(c.committed(ImageIvfCentroidsName)))),
       // video/audio signatures: the other two modalities' ONE decode pass
       perDoc(VideoSigsName, Multimodal.videoSigRows),
@@ -786,7 +791,7 @@ object Artifacts {
   }
 
   /** The artifact table: every artifact with a standing build, in build
-    * order. Adding one is an entry here plus its accessor.
+    * order. Adding one is an entry here.
     */
   private val ArtifactTable: Seq[ArtifactDef] =
     TextArtifacts ++ VectorArtifacts ++ EvalArtifacts
@@ -1026,18 +1031,27 @@ object Artifacts {
 
   private val warned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** The entry point whose rerun refreshes a stale `name`: its table
+    * entry's, or — for a tokenizer's counts or postings outside the
+    * table — the per-tokenizer build ([[materializeTokenCounts]],
+    * [[materializeTokenPostings]]); [[materialize]] never builds those.
+    */
+  private def entryPointOf(name: String): String =
+    ByName.get(name).fold(
+      if (name.startsWith(TokenPostingsPrefix)) "materializeTokenPostings"
+      else "materializeTokenCounts")(_.entryPoint)
+
   /** The committed artifact for the CURRENT fingerprint of the table it
     * versions with, if one resolves — `None` under no root,
     * never-materialized, or stale (with the stale case warned once,
     * naming the entry point that rebuilds it, or thrown under
-    * [[setStrict]]). Every accessor resolves through here. The
-    * Option shape (vs [[readOrCompute]]) exists for consumers whose
-    * inline form is a COLUMN over a scan they make anyway: wrapping such
-    * a consumer in a computed DataFrame would cost a self-join in inline
-    * mode, so they branch — artifact resolves → join it; else keep the
-    * exact inline plan.
+    * [[setStrict]]). The Option shape (vs [[serve]]) exists for
+    * consumers whose inline form is a COLUMN over a scan they make
+    * anyway: wrapping such a consumer in a computed DataFrame would cost
+    * a self-join in inline mode, so they branch — artifact resolves →
+    * join it; else keep the exact inline plan.
     */
-  private def readIfCurrent(spark: SparkSession, corpusDir: String,
+  def current(spark: SparkSession, corpusDir: String,
       name: String): Option[DataFrame] =
     rootOpt.flatMap { _ =>
       val fp = currentFp(spark, corpusDir, name)
@@ -1048,7 +1062,7 @@ object Artifacts {
         if (anyVersionCommitted(spark, corpusDir, name)) {
           val msg = s"[artifacts] $name for $corpusDir is STALE: committed " +
             s"version(s) exist but none matches current fingerprint $fp — " +
-            s"re-run Artifacts.${ByName.get(name).fold(Docs.entryPoint)(_.entryPoint)} " +
+            s"re-run Artifacts.${entryPointOf(name)} " +
             "after the underlying table changes"
           if (strict) throw new IllegalStateException(msg)
           if (warned.add(s"$corpusDir/$name/$fp")) System.err.println(
@@ -1058,94 +1072,43 @@ object Artifacts {
       }
     }
 
-  private def readOrCompute(spark: SparkSession, corpusDir: String,
-      name: String)(compute: => DataFrame): DataFrame =
-    readIfCurrent(spark, corpusDir, name).getOrElse(compute)
-
-  /** The q40 dedup-keeper assignment `(doc_id, keeper_id, is_keeper)`,
-    * one row per document — read from the materialized artifact when
-    * fresh, else computed inline (the full candidate-graph
-    * connected-components fixpoint).
+  /** Table entry `name` for `corpusDir`: the committed version when one
+    * resolves for the current fingerprint ([[current]]), else the
+    * entry's own build inline — its parents served the same way, so a
+    * committed parent is read back and a missing one built inline. The
+    * one serve path of every DataFrame-shaped artifact consumer.
     */
-  def keepers(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, KeepersName)(
-      operators.Dedup.keeperAssignment(spark, corpusDir))
+  def serve(spark: SparkSession, corpusDir: String, name: String): DataFrame =
+    new Inline(spark, corpusDir)(name)
 
-  /** The MinHash LSH band index `(doc_id, sig, band, bucket)` — read
-    * from the materialized artifact when fresh, else computed inline
-    * (shingle explode + 16-way min aggregate + banding over the whole
-    * corpus). The precomputed-signature table q50's incremental dedup
-    * joins each new crawl against.
+  /** One serve context over `corpusDir`: [[apply]] resolves an entry
+    * read-through or builds it inline, memoized per context (with one
+    * [[BuildCtx.shared]] memo), so a parent that several pieces read —
+    * `ivf_centroids` under both halves of [[ivfModel]] — trains at most
+    * once.
     */
-  def minhashBands(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, MinhashBandsName)(
-      operators.Dedup.bandedSignatures(Tables.documents(spark, corpusDir)))
+  private final class Inline(spark: SparkSession, corpusDir: String) {
+    private val served = scala.collection.mutable.Map.empty[String, DataFrame]
+    private val ctx = buildCtxs(spark, corpusDir, apply)
+    def apply(name: String): DataFrame = served.getOrElseUpdate(name,
+      current(spark, corpusDir, name).getOrElse(build(name)))
+    /** The entry's build, parents served — no read-through for `name`. */
+    def build(name: String): DataFrame = ByName.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown artifact $name"))
+      .build(ctx(name))
+  }
 
-  /** The duplicated-span dictionary `(sh)` — every 10-gram span occurring
-    * in ≥ 2 distinct documents; the duplicate table exact-substring
-    * diagnose/strip/rollup passes (q54/q59/q67) join against.
-    */
-  def dupSpans(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, DupSpansName)(
-      operators.CorpusOps.dupSpanSet(spark, corpusDir))
-
-  /** The near-dup pair table `(doc_a, doc_b, n_inter, jaccard)` — q20's
-    * verdicts and the keeper build's near-edge set (see
-    * [[DupPairsName]]) — read from the materialized artifact when fresh,
-    * else computed inline (shingle index + capped inverted-index
-    * self-join over the whole corpus).
-    */
-  def dupPairs(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, DupPairsName)(
-      operators.Dedup.jaccardPairs(
-        operators.Dedup.shingleIndex(Tables.documents(spark, corpusDir))))
-
-  /** The 3-shingle posting index `(doc_id, sh)` (internal — see
-    * [[NgramPostingsName]]).
-    */
-  private[graft] def ngramPostings(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, NgramPostingsName)(
-      operators.Dedup.shingleIndex(Tables.documents(spark, corpusDir)))
-
-  /** The 10-gram span distinct-doc counts `(sh, ndocs)` (internal — see
-    * [[SpanCountsName]]).
-    */
-  private[graft] def spanCounts(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, SpanCountsName)(
-      operators.CorpusOps.spanCounts(Tables.documents(spark, corpusDir)))
-
-  /** The per-document distinct 8-gram shingle rows `(doc_id, sh)` — read
-    * from the materialized artifact when fresh, else computed inline
-    * (tokenize + shingle kernel over the documents scan). Consumers
-    * treat this as a standalone subtree, so the DataFrame shape (not
-    * Option) is right here.
-    */
-  def shingles8(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, Shingles8Name)(
-      operators.CorpusOps.docShingles8(Tables.documents(spark, corpusDir)))
-
-  /** The per-eval-set shingle index `(set_id, set_version, doc_id, sh)`
-    * — read from the materialized artifact when fresh, else derived
-    * inline from [[shingles8]] (which itself resolves artifact-first, so
-    * even the inline fallback re-shingles nothing when the parent
-    * artifact is current).
-    */
-  def evalShingles(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, EvalShinglesName)(
-      operators.EvalSets.evalShingleRows(shingles8(spark, corpusDir))
-        .unionByName(operators.EvalSets.externalShingleRows(spark)))
-
-  /** [[shingles8]] for plans that reference the frame MORE THAN ONCE
-    * (q105's two aggregations, q112's cap + test + train legs): the
-    * artifact read is returned as-is — a parquet re-scan per reference
-    * is cheap and keeps the artifact path visible to the plan guards —
-    * while the INLINE fallback is checkpointed, so the corpus-scale
-    * tokenize+shingle pass runs once instead of once per reference.
+  /** [[serve]] of the `shingles8` entry for plans that reference the
+    * frame MORE THAN ONCE (q105's two aggregations, q112's cap + test +
+    * train legs): the artifact read is returned as-is — a parquet
+    * re-scan per reference is cheap and keeps the artifact path visible
+    * to the plan guards — while the INLINE build is checkpointed, so the
+    * corpus-scale tokenize+shingle pass runs once instead of once per
+    * reference.
     */
   def shingles8Shared(spark: SparkSession, corpusDir: String): DataFrame =
-    readIfCurrent(spark, corpusDir, Shingles8Name).getOrElse(
-      Checkpoints.checkpoint(
-        operators.CorpusOps.docShingles8(Tables.documents(spark, corpusDir))))
+    current(spark, corpusDir, Shingles8Name).getOrElse(Checkpoints.checkpoint(
+      new Inline(spark, corpusDir).build(Shingles8Name)))
 
   /** The inline form of the vector-digest artifact. */
   private[graft] def vecHashesFrame(e: DataFrame): DataFrame = {
@@ -1153,115 +1116,51 @@ object Artifacts {
     e.select(col("vec_id").as("id"), xxhash64(col("embedding")).as("h"))
   }
 
-  /** The per-label centroid table — artifact when the embeddings
-    * fingerprint resolves, else the inline [[operators.Similarity]]
-    * aggregation (one `VectorCentroid` pass over the embeddings scan).
-    * Components are decimal-rounded before the artifact writes, so the
-    * parquet round-trip is exact and consumers are bit-oblivious.
+  /** A trained model and its per-row piece from ONE serve context:
+    * `modelName` decoded to literals, `rowsName` derived from the same
+    * (committed or just-trained) model — so the two always agree, and a
+    * model with no committed version trains once for both.
     */
-  def labelCentroids(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, LabelCentroidsName)(
-      operators.Similarity.labelCentroidsFrame(
-        Tables.embeddings(spark, corpusDir)))
+  private def model[M](spark: SparkSession, corpusDir: String,
+      modelName: String, rowsName: String)(decode: DataFrame => M): (M, DataFrame) = {
+    val in = new Inline(spark, corpusDir)
+    (decode(in(modelName)), in(rowsName))
+  }
 
-  /** The trained IVF model: (centroids as literals, cell-assignment
-    * frame). Artifact-first on BOTH pieces — centroids collect from the
-    * committed (cells × dim) table, assignments read the committed
-    * per-vector table; with no committed version the model trains
-    * inline ([[operators.Ivf.train]] — [[operators.Ivf.Iters]] corpus
-    * passes over a checkpointed quantized frame) and the assignment
-    * derives from those centroids, so the two pieces always agree
-    * within a call whichever path produced them.
+  /** The trained IVF model: (centroids as literals, `(vec_id, cell)`
+    * assignment frame) — the `ivf_centroids` / `ivf_cells` entries,
+    * served as one [[model]].
     */
   def ivfModel(spark: SparkSession,
-      corpusDir: String): (Seq[(Int, Array[Long])], DataFrame) = {
-    readIfCurrent(spark, corpusDir, IvfCentroidsName) match {
-      case Some(cdf) =>
-        val cents = operators.Ivf.collectCentroids(cdf)
-        val cells = readIfCurrent(spark, corpusDir, IvfCellsName).getOrElse(
-          operators.Ivf.assignFrame(
-            operators.Ivf.quantized(Tables.embeddings(spark, corpusDir)),
-            cents))
-        (cents, cells)
-      case None =>
-        val quant = Checkpoints.checkpoint(
-          operators.Ivf.quantized(Tables.embeddings(spark, corpusDir)))
-        val cents = operators.Ivf.train(quant)
-        (cents, operators.Ivf.assignFrame(quant, cents))
-    }
-  }
+      corpusDir: String): (Seq[(Int, Array[Long])], DataFrame) =
+    model(spark, corpusDir, IvfCentroidsName, IvfCellsName)(
+      operators.Ivf.collectCentroids)
 
   /** The trained PQ model: (codebooks as literals, `(vec_id, code)`
-    * frame) — [[ivfModel]]'s discipline applied to the product
-    * quantizer: artifact-first on both pieces, codes always derive
-    * from the COMMITTED codebooks, inline fused-Lloyd training when no
-    * version resolves.
+    * frame) — the `pq_codebooks` / `pq_codes` entries as one [[model]].
     */
   def pqModel(spark: SparkSession,
-      corpusDir: String): (Seq[(Int, Int, Array[Long])], DataFrame) = {
-    readIfCurrent(spark, corpusDir, PqCodebooksName) match {
-      case Some(cdf) =>
-        val cb = operators.Pq.collectCodebooks(cdf)
-        val codes = readIfCurrent(spark, corpusDir, PqCodesName).getOrElse(
-          operators.Pq.codesFrame(
-            operators.Pq.subvectors(operators.Ivf.quantized(
-              Tables.embeddings(spark, corpusDir))),
-            operators.Pq.codebookFrame(spark, cb)))
-        (cb, codes)
-      case None =>
-        val sub = Checkpoints.checkpoint(
-          operators.Pq.subvectors(operators.Ivf.quantized(
-            Tables.embeddings(spark, corpusDir))))
-        val cb = operators.Pq.train(spark, sub)
-        (cb, operators.Pq.codesFrame(sub,
-          operators.Pq.codebookFrame(spark, cb)))
-    }
-  }
+      corpusDir: String): (Seq[(Int, Int, Array[Long])], DataFrame) =
+    model(spark, corpusDir, PqCodebooksName, PqCodesName)(
+      operators.Pq.collectCodebooks)
 
-  /** The trained RESIDUAL PQ model ([[pqModel]]'s discipline over the
-    * residual space): codebooks/codes from the committed
-    * `pq_res_codebooks`/`pq_res_codes` when current, else inline —
-    * residuals against the [[ivfModel]] (itself artifact-first), one
-    * fused Lloyd over the residual subvectors.
+  /** The trained RESIDUAL PQ model — [[pqModel]] over the residual
+    * space (`pq_res_codebooks` / `pq_res_codes`), its residuals taken
+    * against the IVF model served in the same context.
     */
   def pqResModel(spark: SparkSession,
-      corpusDir: String): (Seq[(Int, Int, Array[Long])], DataFrame) = {
-    def resSub(): DataFrame = {
-      val (cents, cells) = ivfModel(spark, corpusDir)
-      operators.Pq.subvectors(operators.Pq.residuals(
-        operators.Ivf.quantized(Tables.embeddings(spark, corpusDir)),
-        cells, cents))
-    }
-    readIfCurrent(spark, corpusDir, PqResCodebooksName) match {
-      case Some(cdf) =>
-        val cb = operators.Pq.collectCodebooks(cdf)
-        val codes = readIfCurrent(spark, corpusDir, PqResCodesName).getOrElse(
-          operators.Pq.codesFrame(resSub(),
-            operators.Pq.codebookFrame(spark, cb)))
-        (cb, codes)
-      case None =>
-        val sub = Checkpoints.checkpoint(resSub())
-        val cb = operators.Pq.train(spark, sub)
-        (cb, operators.Pq.codesFrame(sub,
-          operators.Pq.codebookFrame(spark, cb)))
-    }
-  }
+      corpusDir: String): (Seq[(Int, Int, Array[Long])], DataFrame) =
+    model(spark, corpusDir, PqResCodebooksName, PqResCodesName)(
+      operators.Pq.collectCodebooks)
 
-  /** The q23 ANN index rows — artifact when the embeddings fingerprint
-    * resolves, else the inline sign-sketch derivation. At production
-    * scale this IS the vector index: the per-vector (tables × bits ×
-    * dim) projection pass is the dominant embedding-side compute, paid
-    * once per embedding snapshot instead of once per search.
+  /** The trained IMAGE IVF model — [[ivfModel]] over the grid
+    * embeddings (`image_ivf_centroids` / `image_ivf_cells`), resolved
+    * by the DOCUMENTS fingerprint.
     */
-  def lshAnnIndex(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, LshAnnIndexName)(
-      operators.Similarity.annIndexFrame(Tables.embeddings(spark, corpusDir)))
-
-  /** The q82 near-dup index rows — same resolution as [[lshAnnIndex]]. */
-  def lshNearDupIndex(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, LshNearDupIndexName)(
-      operators.Similarity.nearDupIndexFrame(
-        Tables.embeddings(spark, corpusDir)))
+  def imageIvfModel(spark: SparkSession,
+      corpusDir: String): (Seq[(Int, Array[Long])], DataFrame) =
+    model(spark, corpusDir, ImageIvfCentroidsName, ImageIvfCellsName)(
+      operators.Ivf.collectCentroids)
 
   /** Build-once for the embeddings-keyed artifacts, the [[materialize]]
     * contract applied to the vector side: every [[EmbeddingNames]] entry
@@ -1381,14 +1280,6 @@ object Artifacts {
     IncrementalResult("incremental", counts.toMap, nAdd, nChg, nRem, -1, -1)
   }
 
-  /** The `(source, token, n)` frequency index, IF a version committed for
-    * the corpus's current fingerprint resolves (Option shape — the
-    * inline fallback wants a checkpoint the artifact read does not,
-    * so the consumer decides).
-    */
-  def tokenFreq(spark: SparkSession, corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, TokenFreqName)
-
   /** Committed row count of `name`'s CURRENT version read from its
     * manifest alone — no Spark job, just one small file. None when no
     * committed current version exists or the layout carries no
@@ -1407,52 +1298,21 @@ object Artifacts {
           // plain layout: the committed parquet footers carry the exact
           // row count — driver-side metadata, no job (same class of
           // read as the manifest itself)
-          .orElse(scala.util.Try {
-            val conf = spark.sessionState.newHadoopConf()
-            val dir = new Path(p)
-            dir.getFileSystem(conf).listStatus(dir)
-              .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-              .map { st =>
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                  org.apache.parquet.hadoop.util.HadoopInputFile
-                    .fromStatus(st, conf))
-                try r.getRecordCount finally r.close()
-              }.sum
-          }.toOption)
+          .orElse(scala.util.Try(Tables.footerRows(spark, p)).toOption)
       }
 
-  /** The standing `(source, w1, w2, n)` bigram frequencies when the
-    * corpus's current fingerprint resolves (same Option shape as
-    * [[tokenFreq]]).
-    */
-  def bigramFreq(spark: SparkSession, corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, BigramFreqName)
-
-  /** Corpus-wide token totals `(token, n)`: the standing `(source,
-    * token, n)` frequency index re-aggregated over sources when one
-    * resolves (the source dimension sums away exactly — every document
-    * row carries a source value, null included), else one inline
-    * explode+count over the documents scan. ONE definition for every
-    * whole-corpus rarity consumer (q86 surprisal, q61 vocabulary
-    * coverage, q102 term mining), so the artifact-vs-inline resolution
-    * cannot drift between them.
+  /** Corpus-wide token totals `(token, n)`: the served `(source, token,
+    * n)` frequency index re-aggregated over sources (the source
+    * dimension sums away exactly — every document row carries a source
+    * value, null included). ONE definition for every whole-corpus rarity
+    * consumer (q86 surprisal, q61 vocabulary coverage, q102 term
+    * mining), so the artifact-vs-inline resolution cannot drift between
+    * them.
     */
   def tokenTotals(spark: SparkSession, corpusDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    tokenFreq(spark, corpusDir) match {
-      case Some(tf) => tf.groupBy("token").agg(sum("n").as("n"))
-      case None => Tables.documents(spark, corpusDir)
-        .select(explode(operators.Dedup.tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("n"))
-    }
+    import org.apache.spark.sql.functions.sum
+    serve(spark, corpusDir, TokenFreqName).groupBy("token").agg(sum("n").as("n"))
   }
-
-  /** The per-document digest frame `(doc_id, h)` — artifact when fresh,
-    * else computed from the documents scan.
-    */
-  def docHashes(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, DocHashesName)(
-      docHashesFrame(Tables.documents(spark, corpusDir)))
 
   /** The inline form of the digest artifact. */
   def docHashesFrame(docs: DataFrame): DataFrame = {
@@ -1460,165 +1320,14 @@ object Artifacts {
     docs.select(col("doc_id"), md5(col("text")).as("h"))
   }
 
-  /** The per-document image-grid frame `(doc_id, gx, gy, sums, cnts,
-    * fingerprint)` — artifact when fresh, else decoded inline
-    * (`Multimodal.imageGridRows`: one `mapPartitions` decode pass).
-    */
-  def imageGrids(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, ImageGridsName)(
-      operators.Multimodal.imageGridRows(
-        Tables.documents(spark, corpusDir)))
-
-  /** The trained IMAGE IVF model: (centroids as literals,
-    * cell-assignment frame) — [[ivfModel]]'s discipline over the grid
-    * embeddings, resolved by the DOCUMENTS fingerprint. Artifact-first
-    * on both pieces; with no committed version the model trains inline
-    * over the (artifact-first) grid frame, and the assignment derives
-    * from those same centroids, so the two pieces always agree within
-    * a call whichever path produced them.
-    */
-  def imageIvfModel(spark: SparkSession,
-      corpusDir: String): (Seq[(Int, Array[Long])], DataFrame) = {
-    readIfCurrent(spark, corpusDir, ImageIvfCentroidsName) match {
-      case Some(cdf) =>
-        val cents = operators.Ivf.collectCentroids(cdf)
-        val cells = readIfCurrent(spark, corpusDir, ImageIvfCellsName)
-          .getOrElse(operators.Ivf.assignFrame(
-            operators.Multimodal.imageQuantRows(
-              imageGrids(spark, corpusDir)), cents))
-        (cents, cells)
-      case None =>
-        val quant = Checkpoints.checkpoint(
-          operators.Multimodal.imageQuantRows(imageGrids(spark, corpusDir)))
-        val cents = operators.Ivf.trainOrEmpty(quant)
-        (cents, operators.Ivf.assignFrame(quant, cents))
-    }
-  }
-
-  /** The standing BPE merge table when the corpus fingerprint resolves
-    * (Option shape — q135's fallback is the same iterative train
-    * computed inline).
-    */
-  def bpeMerges(spark: SparkSession, corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, BpeMergesName)
-
-  /** The per-take video signature frame `(doc_id, n_frames,
-    * fingerprint)` — artifact when fresh, else decoded inline
-    * (`Multimodal.videoSigRows`: one `mapPartitions` decode pass).
-    */
-  def videoSigs(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, VideoSigsName)(
-      operators.Multimodal.videoSigRows(
-        Tables.documents(spark, corpusDir)))
-
-  /** The per-take audio signature frame — [[videoSigs]]'s twin. */
-  def audioSigs(spark: SparkSession, corpusDir: String): DataFrame =
-    readOrCompute(spark, corpusDir, AudioSigsName)(
-      operators.Multimodal.audioSigRows(
-        Tables.documents(spark, corpusDir)))
-
-  /** The standing lexical decontam flags when the corpus's current
-    * fingerprint resolves (Option shape — q124's fallback is the same
-    * standing-index join computed inline).
-    */
-  def evalFlagsLex(spark: SparkSession,
-      corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, EvalFlagsLexName)
-
-  /** The standing semantic decontam flags when the EMBEDDINGS
-    * fingerprint resolves (Option shape — q142's fallback recomputes
-    * the within-cell screen against the standing IVF model).
-    */
-  def evalFlagsSem(spark: SparkSession,
-      corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, EvalFlagsSemName)
-
-  /** The standing text-gate bits `(doc_id, gopher_keep, lang_ok,
-    * len_ok, rep_ok, quality_ok)` when the corpus's current fingerprint
-    * resolves (Option shape — q138's fallback recomputes the gate
-    * passes inline).
-    */
-  def textGates(spark: SparkSession, corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, TextGatesName)
-
-  /** The committed trained-model frame `(feature, weight)`, IF a version
-    * committed for the corpus's current fingerprint resolves (Option
-    * shape — consumers fall back to retraining, which is deterministic,
-    * so both paths serve the same model).
-    */
-  def qualityModelFrame(spark: SparkSession,
-      corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, QualityModelName)
-
   /** The committed trained model, reconstructed
     * (`QualityTrain.modelFromFrame` — integer weights, exact
     * round-trip).
     */
   def qualityModel(spark: SparkSession,
       corpusDir: String): Option[operators.TextAnalysis.QualityModel] =
-    qualityModelFrame(spark, corpusDir)
+    current(spark, corpusDir, QualityModelName)
       .map(operators.QualityTrain.modelFromFrame)
-
-  /** The standing per-document trained scores `(doc_id, n_tokens,
-    * quality_score)` when the corpus's current fingerprint resolves
-    * (Option shape — the fallback is one scoring pass the consumer
-    * checkpoints itself).
-    */
-  def qualityScores(spark: SparkSession,
-      corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, QualityScoresName)
-
-  /** The per-document token counts `(doc_id, n_tokens)` for `tok`, IF a
-    * version committed for the corpus's current fingerprint resolves
-    * (Option shape — see [[readIfCurrent]]: token-count consumers fall
-    * back to the count as a column over their own scan, not to a
-    * standalone recompute). The column's value and type are exactly
-    * `tok.count(text)`'s, nulls included, so a consumer substituting the
-    * artifact for the expression is bit-identical.
-    */
-  def tokenCounts(spark: SparkSession, corpusDir: String,
-      tok: functions.Tokenizer): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, tokenCountsName(tok))
-
-  /** The standing `(doc_id, token, tf)` inverted index for `tok`, IF a
-    * version committed for the corpus's current fingerprint resolves
-    * (Option shape — the lexical-search consumers' inline form is a
-    * filter-before-aggregate explode whose plan they keep when no
-    * artifact resolves, so they branch rather than wrap).
-    */
-  def tokenPostings(spark: SparkSession, corpusDir: String,
-      tok: functions.Tokenizer = functions.Tokenizer.Whitespace): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, tokenPostingsName(tok))
-
-  /** The standing `(doc_id, token, pos)` positional index when the
-    * corpus's current fingerprint resolves (same Option shape as
-    * [[tokenPostings]] — phrase consumers filter it term-bounded).
-    */
-  def tokenPositions(spark: SparkSession, corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, TokenPositionsName)
-
-  /** The standing `(doc_id, chunk_id, token, tf)` passage index when the
-    * corpus's current fingerprint resolves (same Option shape as
-    * [[tokenPostings]]).
-    */
-  def chunkPostings(spark: SparkSession,
-      corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, ChunkPostingsName)
-
-  /** The standing `(token, df)` document frequencies when the corpus's
-    * current fingerprint resolves (same Option shape — the consumer's
-    * fallback is an aggregation of whatever postings frame it already
-    * holds, not a standalone recompute).
-    */
-  def tokenDf(spark: SparkSession, corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, TokenDfName)
-
-  /** The standing `(line, line_df)` line document frequencies when the
-    * corpus's current fingerprint resolves (same Option shape — q129's
-    * fallback aggregates the lines frame it already checkpointed).
-    */
-  def lineDf(spark: SparkSession, corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, LineDfName)
 
   /** The inline form of the token-count artifact. */
   def tokenCountsFrame(docs: DataFrame, tok: functions.Tokenizer): DataFrame = {
@@ -1672,13 +1381,6 @@ object Artifacts {
     (tok, materializeTokenCounts(spark, corpusDir, tok))
   }
 
-  /** The standing ground truth when the embeddings fingerprint
-    * resolves — q21's consumer seam (`None` → the guarded inline
-    * brute force, unchanged semantics).
-    */
-  def nearDupTruth(spark: SparkSession, corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, NearDupTruthName)
-
   /** Build and commit the near-dup ground truth — idempotent per
     * embeddings fingerprint. A corpus over
     * `operators.Dedup.MaxBruteForceVectors` (the brute-force guard that
@@ -1694,12 +1396,6 @@ object Artifacts {
     else buildSnapshotOnly(spark, corpusDir, NearDupTruthName)
   }
 
-  /** The standing calibration when the documents fingerprint resolves —
-    * q141's consumer seam (`None` → the inline four-config pass).
-    */
-  def lshCalibration(spark: SparkSession, corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, LshCalibrationName)
-
   /** Build and commit the calibration table — idempotent per documents
     * fingerprint; Bench's untimed phase calls it beside
     * [[materializeNearDupTruth]].
@@ -1708,13 +1404,6 @@ object Artifacts {
     requireRoot("materializeLshCalibration")
     buildSnapshotOnly(spark, corpusDir, LshCalibrationName)
   }
-
-  /** The standing report when the documents fingerprint resolves —
-    * q112's consumer seam (`None` → the inline join).
-    */
-  def evalContamination(spark: SparkSession,
-      corpusDir: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, EvalContaminationName)
 
   /** Build and commit the contamination report — idempotent per
     * documents fingerprint; Bench's untimed phase calls it beside
@@ -1725,14 +1414,6 @@ object Artifacts {
     requireRoot("materializeEvalContamination")
     buildSnapshotOnly(spark, corpusDir, EvalContaminationName)
   }
-
-  /** The standing eval table `name` when the embeddings fingerprint
-    * resolves — q140/q143/q146's consumer seam (`None` → the inline
-    * scoring pass, unchanged semantics).
-    */
-  def annEval(spark: SparkSession, corpusDir: String,
-      name: String): Option[DataFrame] =
-    readIfCurrent(spark, corpusDir, name)
 
   /** Build and commit all three eval tables — idempotent per embeddings
     * fingerprint; Bench's untimed phase calls it beside
@@ -1979,8 +1660,8 @@ object Artifacts {
   // per-key entries segment by their retract key (`doc_id`, or the
   // vector `id`), additive entries by their aggregate keys, rebuilt-whole
   // and snapshot-only entries are plain, and the hand-maintained entries
-  // name their own keys. Adding one is a table entry plus its accessor —
-  // the builds, the backfill, the maintenance paths, the layout and the
+  // name their own keys. Adding one is a table entry — the builds, the
+  // backfill, the maintenance paths, the serve path, the layout and the
   // status probe all read the table.
   //
   // Commit protocol is unchanged (`_SUCCESS` gates readers; a version
@@ -2606,28 +2287,16 @@ object Artifacts {
     counts.toMap
   }
 
-  /** The inline frame for one artifact name against a corpus dir — the
-    * entry's `build` with every parent resolved inline instead of read
-    * back, used by the upgrade BACKFILL: when an old snapshot is missing
-    * only SOME artifacts (the artifact set widened in a newer library
-    * version), the incremental paths build exactly those against the old
-    * corpus instead of demoting the whole refresh to a corpus-bounded
-    * rebuild of the new one. Marginally more compute than materialize's
-    * scan-sharing, on a one-time backfill of typically cheap artifacts.
-    */
-  private def inlineFrame(spark: SparkSession, corpusDir: String,
-      name: String): DataFrame = {
-    lazy val ctx: String => BuildCtx = buildCtxs(spark, corpusDir, frame)
-    def frame(n: String): DataFrame = ByName.get(n)
-      .getOrElse(throw new IllegalArgumentException(s"unknown artifact $n"))
-      .build(ctx(n))
-    frame(name)
-  }
-
   /** Backfill `names` for `corpusDir` at fingerprint `fp` (which must
-    * still match the corpus — the caller checked). Returns true when
-    * the backfill is the right move: some but not all artifacts were
-    * missing, and all are committed afterwards.
+    * still match the corpus — the caller checked): when an old snapshot
+    * is missing only SOME artifacts (the artifact set widened in a newer
+    * library version), the promotion builds exactly those against the
+    * old corpus instead of demoting the whole refresh to a
+    * corpus-bounded rebuild of the new one. Each is its entry's build in
+    * one serve context ([[Inline]]), so parents committed — or
+    * backfilled just before, in table order — are read back. Returns
+    * true when the backfill is the right move: some but not all
+    * artifacts were missing, and all are committed afterwards.
     */
   private def backfillOld(spark: SparkSession, corpusDir: String, fp: String,
       names: Seq[String]): Boolean = {
@@ -2635,8 +2304,8 @@ object Artifacts {
     System.err.println(s"[artifacts] backfilling ${names.mkString(", ")} " +
       s"for $corpusDir (artifact set widened since this snapshot was " +
       "materialized)")
-    names.foreach(n => write(spark, corpusDir, fp, n,
-      inlineFrame(spark, corpusDir, n)))
+    val in = new Inline(spark, corpusDir)
+    names.foreach(n => write(spark, corpusDir, fp, n, in.build(n)))
     AllNames.forall(n => isCommitted(spark, versionPath(corpusDir, n, fp), n))
   }
 

@@ -37,7 +37,7 @@ object CorpusAudit {
     * tokenize+shingle pass otherwise.
     */
   def q60SplitOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val sh = graft.Artifacts.shingles8(spark, dir)
+    val sh = graft.Artifacts.serve(spark, dir, graft.Artifacts.Shingles8Name)
       .withColumn("split", Curation.splitOf(col("doc_id")))
     def flag(s: String) =
       max(when(col("split") === s, 1L).otherwise(0L)).as(s"in_$s")
@@ -308,7 +308,7 @@ object CorpusAudit {
     * grain.
     */
   def q70ClusterProfile(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.keepers(spark, dir)
+    graft.Artifacts.serve(spark, dir, graft.Artifacts.KeepersName)
       .groupBy("keeper_id").agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size")
       .agg(count(lit(1)).as("n_clusters"),
@@ -453,7 +453,8 @@ object CorpusAudit {
     // the (source, token, n) index is a standing artifact when one
     // resolves (a parquet read feeds all three consumers — no checkpoint
     // needed); inline mode derives and pins it as before
-    val idx = graft.Artifacts.tokenFreq(spark, dir).getOrElse(
+    val idx = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.TokenFreqName).getOrElse(
       graft.Checkpoints.checkpoint(
         CorpusOps.tokenFreqRows(Tables.documentsFanned(spark, dir))))
     val norms = idx.groupBy("source").agg(
@@ -540,7 +541,7 @@ object CorpusAudit {
     */
   def q90SourceDivergence(spark: SparkSession, dir: String): DataFrame = {
     val tf = graft.Checkpoints.checkpoint(
-      graft.Artifacts.tokenFreq(spark, dir).getOrElse(
+      graft.Artifacts.current(spark, dir, graft.Artifacts.TokenFreqName).getOrElse(
         CorpusOps.tokenFreqRows(Tables.documentsFanned(spark, dir))))
     val srcTot = tf.groupBy("source").agg(sum("n").as("src_total"))
     val corpus = tf.groupBy("token").agg(sum("n").as("nc"))
@@ -748,9 +749,11 @@ object CorpusAudit {
     * mode pays the two explode passes the artifacts retire.
     */
   def q110DiversityProfile(spark: SparkSession, dir: String): DataFrame = {
-    val tf = graft.Artifacts.tokenFreq(spark, dir).getOrElse(
+    val tf = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.TokenFreqName).getOrElse(
       CorpusOps.tokenFreqRows(Tables.documentsFanned(spark, dir)))
-    val bf = graft.Artifacts.bigramFreq(spark, dir).getOrElse(
+    val bf = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.BigramFreqName).getOrElse(
       CorpusOps.bigramFreqRows(Tables.documentsFanned(spark, dir)))
     val t1 = tf.groupBy("source")
       .agg(sum("n").as("n_tokens"), count(lit(1)).as("uniq_tokens"))
@@ -833,7 +836,7 @@ object CorpusAudit {
     // pure function of the standing shingles8 artifact, so the df-cap
     // and test×train join run once per corpus snapshot — the eval
     // team reads the standing per-item report
-    graft.Artifacts.evalContamination(spark, dir)
+    graft.Artifacts.current(spark, dir, graft.Artifacts.EvalContaminationName)
       .map(_.orderBy("doc_id"))
       .getOrElse(evalContaminationFrame(spark, dir))
 
@@ -922,7 +925,7 @@ object CorpusAudit {
     * output is ≤ |sources|² rows. Never recomputes the pair chain.
     */
   def q122SourceDupMatrix(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.Artifacts.dupPairs(spark, dir)
+    val pairs = graft.Artifacts.serve(spark, dir, graft.Artifacts.DupPairsName)
     val src = Tables.documents(spark, dir)
       .select(col("doc_id"), coalesce(col("source"), lit("(null)")).as("src"))
     pairs

@@ -162,7 +162,7 @@ object CorpusOps {
     // and in inline mode Catalyst pushes the split filters below the
     // shingle explode (predicates referencing only non-generated
     // columns), keeping the pre-artifact plan
-    val sh = graft.Artifacts.shingles8(spark, dir)
+    val sh = graft.Artifacts.serve(spark, dir, graft.Artifacts.Shingles8Name)
       .withColumn("split", Curation.splitOf(col("doc_id")))
     // LEFT SEMI against the (non-distinct) test-side shingle rows: a
     // semi join never multiplies the probe side, so the distinct's
@@ -239,7 +239,8 @@ object CorpusOps {
     // the artifact's row set); the train side needs POSITIONS and keeps
     // the inline positional kernel
     // non-distinct, joined LEFT SEMI below — see q47's eval side
-    val evalShingles = graft.Artifacts.shingles8(spark, dir)
+    val evalShingles = graft.Artifacts.serve(spark, dir,
+      graft.Artifacts.Shingles8Name)
       .withColumn("split", Curation.splitOf(col("doc_id")))
       .filter(col("split") === "test")
       .select("sh")
@@ -367,7 +368,8 @@ object CorpusOps {
     */
   private def packCounts(spark: SparkSession, dir: String,
       tok: graft.functions.Tokenizer): DataFrame =
-    graft.Artifacts.tokenCounts(spark, dir, tok).getOrElse(
+    graft.Artifacts.current(spark, dir,
+        graft.Artifacts.tokenCountsName(tok)).getOrElse(
       graft.Checkpoints.checkpoint(Tables.documentsFanned(spark, dir)
         .select(col("doc_id"), tok.count(col("text")).as("n_tokens"))))
 
@@ -777,16 +779,6 @@ object CorpusOps {
       .select("token", "n", "id")
   }
 
-  /** Corpus-wide `(token, n)` counts for the export vocabulary — the
-    * standing per-source `token_freq` artifact re-aggregated over
-    * sources when it resolves (zero documents scan), else one inline
-    * tokenizing pass.
-    */
-  private[graft] def vocabCounts(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.tokenFreq(spark, dir)
-      .getOrElse(tokenFreqRows(Tables.documents(spark, dir)))
-      .groupBy("token").agg(sum("n").as("n"))
-
   /** Single-window semantic form (the definition the two-level plan must
     * reproduce; the cross-engine hash match proves the equivalence).
     * Integer boundary math throughout — the one double division
@@ -921,12 +913,12 @@ object CorpusOps {
       corpus: DataFrame, incoming: DataFrame): DataFrame = {
     val d = Tables.documents(spark, dir)
     // the exact-dup side runs off the standing digest artifact when one
-    // is materialized (readOrCompute falls back to hashing the scan)
-    val hashes = graft.Artifacts.docHashes(spark, dir)
+    // is materialized (serve falls back to hashing the scan)
+    val hashes = graft.Artifacts.serve(spark, dir, graft.Artifacts.DocHashesName)
     val banded =
       if (graft.Artifacts.isMaterialized(spark, dir,
           graft.Artifacts.MinhashBandsName))
-        graft.Artifacts.minhashBands(spark, dir)
+        graft.Artifacts.serve(spark, dir, graft.Artifacts.MinhashBandsName)
       else graft.Checkpoints.checkpoint(Dedup.bandedSignatures(d))
     dedupVerdictsOf(incoming,
       hashes.join(incoming.select("doc_id"), "doc_id"),
@@ -1161,7 +1153,8 @@ object CorpusOps {
     */
   private def stratumTokenMass(spark: SparkSession, dir: String,
       tok: graft.functions.Tokenizer): DataFrame = {
-    val docTokens = graft.Artifacts.tokenCounts(spark, dir, tok) match {
+    val docTokens = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.tokenCountsName(tok)) match {
       case Some(tc) => Tables.documents(spark, dir)
         .select("doc_id", "lang", "source")
         .join(tc, "doc_id")
@@ -1391,7 +1384,8 @@ object CorpusOps {
   def q155EpochSamplePlan(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorOps.round6
     val tok = graft.functions.Tokenizer.Whitespace
-    val docTokens = graft.Artifacts.tokenCounts(spark, dir, tok) match {
+    val docTokens = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.tokenCountsName(tok)) match {
       case Some(tc) => Tables.documents(spark, dir)
         .select("doc_id", "lang", "source")
         .join(tc, "doc_id")
@@ -1679,7 +1673,8 @@ object CorpusOps {
   def lengthQuantiles(spark: SparkSession, dir: String,
       tok: graft.functions.Tokenizer): DataFrame = {
     import graft.functions.VectorOps.round6
-    val sized = graft.Artifacts.tokenCounts(spark, dir, tok) match {
+    val sized = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.tokenCountsName(tok)) match {
       case Some(tc) => Tables.documents(spark, dir)
         .select("doc_id", "source")
         .join(tc, "doc_id")
@@ -1797,6 +1792,8 @@ object CorpusOps {
     * materialized corpus artifact ([[graft.Artifacts]]): exact-substring
     * work at scale builds the duplicate table ONCE per snapshot (Lee et
     * al.'s shape) and every diagnose/strip/rollup pass joins against it.
+    * Consumers read it through `Artifacts.serve`; this fanned form is the
+    * independent reference the artifact specs compare against.
     */
   private[graft] def dupSpanSet(spark: SparkSession, dir: String): DataFrame =
     dupSpansFromCounts(spanCounts(Tables.documentsFanned(spark, dir)))
@@ -1835,7 +1832,8 @@ object CorpusOps {
           Dedup.tokens(col("text"))), SpanN))
     val d = Tables.documentsFanned(spark, dir)
     val idx = d.select(col("doc_id"), explode(allSh).as("sh"))
-    val dup = idx.join(graft.Artifacts.dupSpans(spark, dir), "sh")
+    val dup = idx.join(graft.Artifacts.serve(spark, dir,
+      graft.Artifacts.DupSpansName), "sh")
       .groupBy("doc_id").agg(count(lit(1)).as("n_dup_spans"))
     val totals = d.select(col("doc_id"),
       greatest(size(Dedup.tokens(col("text"))) - (SpanN - 1), lit(0))
@@ -1875,7 +1873,7 @@ object CorpusOps {
     val d = Tables.documentsFanned(spark, dir)
     val idx = d.select(col("doc_id"), posexplode(posSh).as(Seq("start", "sh")))
     val dupStarts = idx
-      .join(graft.Artifacts.dupSpans(spark, dir), "sh")
+      .join(graft.Artifacts.serve(spark, dir, graft.Artifacts.DupSpansName), "sh")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(col("start"))).as("starts"))
     val removed = array_distinct(flatten(transform(col("starts"),
@@ -1951,7 +1949,7 @@ object CorpusOps {
     */
   def q132DupRuns(spark: SparkSession, dir: String): DataFrame =
     dupRunsFrom(Tables.documentsFanned(spark, dir),
-      graft.Artifacts.dupSpans(spark, dir),
+      graft.Artifacts.serve(spark, dir, graft.Artifacts.DupSpansName),
       // the reattach leg reads doc_id only — the fan exchange would be
       // pure overhead on a metadata projection
       reattach = Some(Tables.documents(spark, dir)))
@@ -2221,8 +2219,8 @@ object CorpusOps {
     // materialized (after refreshSnapshot's maintenance leg, both are),
     // so the verdict leg re-hashes no text on either side
     val incoming = snapshotDiff(
-        graft.Artifacts.docHashes(spark, oldDir),
-        graft.Artifacts.docHashes(spark, newDir))
+        graft.Artifacts.serve(spark, oldDir, graft.Artifacts.DocHashesName),
+        graft.Artifacts.serve(spark, newDir, graft.Artifacts.DocHashesName))
       .filter(col("status").isin("added", "changed"))
       .select("doc_id", "status")
     val corpus = Tables.documents(spark, newDir).select("doc_id")

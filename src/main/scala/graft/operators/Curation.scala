@@ -70,7 +70,7 @@ object Curation {
       TextAnalysis.langPred(col("text")).as("pred_lang"))
     // served from the materialized corpus artifact when one exists —
     // the funnel's only expensive subtree becomes a parquet join
-    val keepers = graft.Artifacts.keepers(spark, dir)
+    val keepers = graft.Artifacts.serve(spark, dir, graft.Artifacts.KeepersName)
     signals.join(keepers, "doc_id")
       .withColumn("selected",
         col("is_keeper") && col("pred_lang") === "en" &&
@@ -258,7 +258,7 @@ object Curation {
     * constants.
     */
   def q85ClusterSafeSplit(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.keepers(spark, dir)
+    graft.Artifacts.serve(spark, dir, graft.Artifacts.KeepersName)
       .select(
         col("doc_id"),
         col("keeper_id"),
@@ -317,7 +317,7 @@ object Curation {
     // distinct: two requests naming the same doc must not fan out the
     // is_seed join and double-count the removal report
     val s = graft.Checkpoints.checkpoint(seeds.distinct())
-    val keepers = graft.Artifacts.keepers(spark, dir)
+    val keepers = graft.Artifacts.serve(spark, dir, graft.Artifacts.KeepersName)
       .select("doc_id", "keeper_id")
     val hitClusters = keepers.join(s, "doc_id")
       .select("keeper_id").distinct()
@@ -468,7 +468,8 @@ object Curation {
     // token mass from the standing artifact when one resolves: the scan
     // side then reads only (doc_id, source) — no text bytes, no
     // tokenizer evaluation
-    val raw = graft.Artifacts.tokenCounts(spark, dir, tok) match {
+    val raw = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.tokenCountsName(tok)) match {
       case Some(tc) => Tables.documents(spark, dir)
         .select("doc_id", "source")
         .join(tc, "doc_id")
@@ -607,11 +608,12 @@ object Curation {
     * the budget scan then reads no text bytes and decodes no media.
     */
   def q170MultimodalBudget(spark: SparkSession, dir: String): DataFrame = {
-    val patches = graft.Artifacts.imageGrids(spark, dir)
+    val patches = graft.Artifacts.serve(spark, dir, graft.Artifacts.ImageGridsName)
       .select(col("doc_id"),
         (col("gx") * col("gy")).cast("long").as("patch_tokens"))
     val ws = graft.functions.Tokenizer.Whitespace
-    val text = graft.Artifacts.tokenCounts(spark, dir, ws) match {
+    val text = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.tokenCountsName(ws)) match {
       case Some(tc) => tc.select(col("doc_id"),
         col("n_tokens").cast("long").as("text_tokens"))
       case None => Tables.documents(spark, dir).select(col("doc_id"),
@@ -955,7 +957,7 @@ object Curation {
     */
   private def ledgerFrom(spark: SparkSession, dir: String,
       bits: DataFrame): DataFrame = {
-    val keepers = graft.Artifacts.keepers(spark, dir)
+    val keepers = graft.Artifacts.serve(spark, dir, graft.Artifacts.KeepersName)
       .select(col("doc_id"), col("is_keeper"))
     bits.join(keepers, "doc_id")
       .select(col("doc_id"),
@@ -986,7 +988,7 @@ object Curation {
       model: TextAnalysis.QualityModel): DataFrame = {
     val bits =
       if (model == TextAnalysis.DefaultQualityModel)
-        graft.Artifacts.textGates(spark, dir)
+        graft.Artifacts.current(spark, dir, graft.Artifacts.TextGatesName)
           .getOrElse(textGateRows(Tables.documentsFanned(spark, dir)))
       else textGateRows(Tables.documentsFanned(spark, dir), model)
     ledgerFrom(spark, dir, bits)

@@ -194,7 +194,7 @@ object Dedup {
       .cast("double") / NumHashes
 
   def q18DedupMinhash(spark: SparkSession, dir: String): DataFrame = {
-    val banded = graft.Artifacts.minhashBands(spark, dir)
+    val banded = graft.Artifacts.serve(spark, dir, graft.Artifacts.MinhashBandsName)
     val kept = capBuckets(banded, MaxBucketPop, "band", "bucket")
 
     val a = kept.select(col("band"), col("bucket"),
@@ -321,7 +321,7 @@ object Dedup {
     // capped self-joins run once per corpus snapshot — a consumer
     // reads the 4-row standing table (re-ordered after the parquet
     // round-trip; the inline plan carries its own orderBy)
-    graft.Artifacts.lshCalibration(spark, dir)
+    graft.Artifacts.current(spark, dir, graft.Artifacts.LshCalibrationName)
       .map(_.orderBy("bands"))
       .getOrElse(lshCalibrationFrame(spark, dir))
 
@@ -332,7 +332,7 @@ object Dedup {
       dir: String): DataFrame = {
     import spark.implicits._
     val sigs = graft.Checkpoints.checkpoint(
-      graft.Artifacts.minhashBands(spark, dir)
+      graft.Artifacts.serve(spark, dir, graft.Artifacts.MinhashBandsName)
         .select("doc_id", "sig").dropDuplicates("doc_id"))
     def candPairs(bands: Int): DataFrame = {
       val r = NumHashes / bands
@@ -511,21 +511,16 @@ object Dedup {
     // confirm downstream is the op's per-pair CPU; when the whole corpus
     // is below one scan split AQE coalesces that exchange to 1 task by
     // its BYTES and the confirm runs serial (profiled: a 147 ms 1-task
-    // stage). Pin the dedup's own exchange to the fan width under the
-    // same single-split guard as Tables.fanOut — the numbered hash
-    // repartition satisfies the dedup's required distribution, so this
-    // adds no exchange; past one split the guard is false and AQE keeps
-    // sizing by bytes (the corpus-scale posture, as in q82's confirm).
-    val ss = spark
-    val pinWidth = ss.sparkContext.defaultParallelism > 1 &&
-      Tables.documents(spark, dir).queryExecution.optimizedPlan.stats
-        .sizeInBytes < ss.sessionState.conf.filesMaxPartitionBytes
+    // stage). Pin the dedup's own exchange to the fan width under
+    // Tables.fanOut's single-split decision (Tables.fanWidth) — the
+    // numbered hash repartition satisfies the dedup's required
+    // distribution, so this adds no exchange; past one split there is no
+    // width and AQE keeps sizing by bytes (the corpus-scale posture, as
+    // in q82's confirm).
     val pairs0 = a.join(b, Seq("chunk", "chunk_val"))
       .filter(col("doc_a") < col("doc_b"))
-    val pairs = if (pinWidth)
-        pairs0.repartition(math.min(ss.sparkContext.defaultParallelism, 8),
-          col("doc_a"), col("doc_b"))
-      else pairs0
+    val pairs = Tables.fanWidth(Tables.documents(spark, dir))
+      .fold(pairs0)(n => pairs0.repartition(n, col("doc_a"), col("doc_b")))
     pairs
       .dropDuplicates("doc_a", "doc_b")
       .withColumn("hamming",
@@ -608,7 +603,7 @@ object Dedup {
     * snapshot, not once per consumer.
     */
   def q20NgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.dupPairs(spark, dir)
+    graft.Artifacts.serve(spark, dir, graft.Artifacts.DupPairsName)
       .orderBy("doc_a", "doc_b")
 
   /** q20's pair chain over a given (doc_id, sh) postings frame (the
@@ -708,7 +703,7 @@ object Dedup {
     */
   def q100JaccardBands(spark: SparkSession, dir: String): DataFrame = {
     val banded = graft.Checkpoints.checkpoint(
-      graft.Artifacts.dupPairs(spark, dir)
+      graft.Artifacts.serve(spark, dir, graft.Artifacts.DupPairsName)
         .withColumn("band", floor(col("jaccard") * 20).cast("int"))
         .select("band", "doc_a", "doc_b"))
     val pairCounts = banded.groupBy("band")
@@ -775,7 +770,7 @@ object Dedup {
     * refusal stays loud in both modes.
     */
   def q21EmbeddingNearDup(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.nearDupTruth(spark, dir)
+    graft.Artifacts.current(spark, dir, graft.Artifacts.NearDupTruthName)
       .map(_.select("id_a", "id_b", "cos").orderBy("id_a", "id_b"))
       .getOrElse(embeddingNearDupPairsFrom(Tables.embeddings(spark, dir)))
 
@@ -1033,7 +1028,7 @@ object Dedup {
     * over the same edge set ([[q40OracleSql]]).
     */
   def q40DedupKeepers(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.keepers(spark, dir).orderBy("doc_id")
+    graft.Artifacts.serve(spark, dir, graft.Artifacts.KeepersName).orderBy("doc_id")
 
   /** Inline-rebuild cost note (round-8 profile, sf0.1 local[32]): of the
     * ~2.7 s isolated inline q40, ~2.0 s is the EDGE DERIVATION (the q20
@@ -1047,7 +1042,9 @@ object Dedup {
   /** The q40 keeper assignment WITHOUT its presentation sort — the frame
     * [[graft.Artifacts]] materializes as the `keepers` corpus artifact
     * and every keeper consumer (q41/q43/q69/q70) joins on. Columns
-    * `(doc_id, keeper_id, is_keeper)`, one row per document.
+    * `(doc_id, keeper_id, is_keeper)`, one row per document. Consumers
+    * read it through `Artifacts.serve`; this fanned form is the
+    * independent reference the artifact specs compare against.
     */
   private[graft] def keeperAssignment(spark: SparkSession, dir: String): DataFrame =
     keeperAssignmentFrom(Tables.documentsFanned(spark, dir),
@@ -1413,7 +1410,7 @@ object Dedup {
     */
   def q106QualityKeepers(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val members = graft.Artifacts.keepers(spark, dir)
+    val members = graft.Artifacts.serve(spark, dir, graft.Artifacts.KeepersName)
       .select(col("doc_id"), col("keeper_id").as("cluster_id"))
     val scores = TextAnalysis
       .scoredQuality(graft.Tables.documentsFanned(spark, dir), "text")

@@ -255,9 +255,7 @@ object EvalSets {
     * the corpus pass count is independent of the registry size.
     */
   def q124EvalDecontam(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.evalFlagsLex(spark, dir).getOrElse(
-      lexFlagRows(graft.Artifacts.shingles8(spark, dir),
-        graft.Artifacts.evalShingles(spark, dir)))
+    graft.Artifacts.serve(spark, dir, graft.Artifacts.EvalFlagsLexName)
       .orderBy("doc_id", "set_id")
 
   /** q124's verdict rows over caller-supplied shingle frames — the

@@ -356,7 +356,8 @@ object Extraction {
     // the line-grain shuffle rides the standing `line_df` artifact when
     // one resolves — recurrent runs re-aggregate nothing; the inline
     // fallback derives from the already-checkpointed lines frame
-    val lineDf = graft.Artifacts.lineDf(spark, dir).getOrElse(
+    val lineDf = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.LineDfName).getOrElse(
       lines.groupBy("line").agg(countDistinct("doc_id").as("line_df")))
     val kept = col("line_df") <= MaxLineDf
     lines.join(lineDf, "line")

@@ -417,7 +417,7 @@ object Ivf {
     // artifact-first (the lsh_calibration posture, vector side): the
     // sweep is a pure function of the embeddings table and the standing
     // coarse index — a consumer reads the |ProbeSweep|-row table
-    graft.Artifacts.annEval(spark, dir, graft.Artifacts.NprobeSweepEvalName)
+    graft.Artifacts.current(spark, dir, graft.Artifacts.NprobeSweepEvalName)
       .map(_.orderBy("nprobe"))
       .getOrElse(nprobeSweepFrame(spark, dir))
 

@@ -1123,7 +1123,7 @@ object Multimodal {
     * else [[imageGridRows]] inline.
     */
   private def imageFingerprints(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.imageGrids(spark, dir)
+    graft.Artifacts.serve(spark, dir, graft.Artifacts.ImageGridsName)
 
   def q163ImagePhashDups(spark: SparkSession, dir: String): DataFrame =
     imageFingerprints(spark, dir)
@@ -1475,7 +1475,7 @@ object Multimodal {
     * (distance-0 groups) and q177 (banded Hamming tail).
     */
   private def audioSignatures(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.audioSigs(spark, dir)
+    graft.Artifacts.serve(spark, dir, graft.Artifacts.AudioSigsName)
 
   /** The signature derivation over ANY docs frame — the [[videoSigRows]]
     * twin in amplitude space: what the standing `audio_sigs` artifact
@@ -1841,7 +1841,7 @@ object Multimodal {
     * Hamming join (one derivation, the q163/q165 split at video grain).
     */
   private def videoSignatures(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.videoSigs(spark, dir)
+    graft.Artifacts.serve(spark, dir, graft.Artifacts.VideoSigsName)
 
   /** The signature derivation over ANY docs frame — one decode pass →
     * per-doc ≤ [[Y4mSamples]]-row aggregate. This is what the standing

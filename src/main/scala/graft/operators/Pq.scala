@@ -318,7 +318,7 @@ object Pq {
     // so the scoring pass runs once per embeddings snapshot — a
     // consumer reads the probe-grain standing table (re-ordered after
     // the parquet round-trip; the inline plan carries its own orderBy)
-    graft.Artifacts.annEval(spark, dir, graft.Artifacts.IvfAdcEvalName)
+    graft.Artifacts.current(spark, dir, graft.Artifacts.IvfAdcEvalName)
       .map(_.orderBy("probe_id"))
       .getOrElse(ivfAdcRecallFrame(spark, dir))
 
@@ -377,7 +377,7 @@ object Pq {
     */
   def q146IvfAdcResidualRecall(spark: SparkSession, dir: String): DataFrame =
     // artifact-first (see [[q140IvfAdcRecall]])
-    graft.Artifacts.annEval(spark, dir, graft.Artifacts.IvfAdcResEvalName)
+    graft.Artifacts.current(spark, dir, graft.Artifacts.IvfAdcResEvalName)
       .map(_.orderBy("probe_id"))
       .getOrElse(ivfAdcResidualRecallFrame(spark, dir))
 

@@ -193,7 +193,7 @@ object QualityTrain {
     * read it).
     */
   def scoredCorpus(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.qualityScores(spark, dir).getOrElse(
+    graft.Artifacts.current(spark, dir, graft.Artifacts.QualityScoresName).getOrElse(
       graft.Checkpoints.checkpoint(scoresFrame(spark, dir, modelOf(spark, dir))))
 
   /** q148 — the trained model as a frame `(feature, weight)`: every
@@ -204,7 +204,7 @@ object QualityTrain {
     * committed, else trained inline.
     */
   def q148QualityTrain(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.qualityModelFrame(spark, dir)
+    graft.Artifacts.current(spark, dir, graft.Artifacts.QualityModelName)
       .getOrElse(modelFrame(spark, dir))
       .orderBy("feature")
 
@@ -498,7 +498,8 @@ object QualityTrain {
     */
   def trainedGate(spark: SparkSession, dir: String): TrainedGate = {
     val m = modelOf(spark, dir)
-    val scored = graft.Artifacts.qualityScores(spark, dir).getOrElse(
+    val scored = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.QualityScoresName).getOrElse(
       graft.Checkpoints.checkpoint(scoresFrame(spark, dir, m)))
     val chosen = pickCutoff(sweepFrom(spark, dir, scored).collect())
     TrainedGate(m, chosen.getAs[Int]("band"),

@@ -20,6 +20,14 @@ object Search {
   /** Result count. */
   private val TopK = 20
 
+  /** The whitespace tokenizer's postings and counts artifacts — the
+    * tokenizer every lexical query here and its DuckDB oracle share.
+    */
+  private val WsPostings =
+    graft.Artifacts.tokenPostingsName(graft.functions.Tokenizer.Whitespace)
+  private val WsCounts =
+    graft.Artifacts.tokenCountsName(graft.functions.Tokenizer.Whitespace)
+
   /** BM25 term-frequency saturation constant (k₁; no length
     * normalization — the corpus is near-uniform doc length, and dropping
     * the b-term keeps the score a pure rational function, bit-exact
@@ -36,7 +44,7 @@ object Search {
   private def docCount(spark: SparkSession, dir: String): DataFrame =
     (if (graft.Artifacts.isMaterialized(spark, dir,
         graft.Artifacts.DocHashesName))
-      graft.Artifacts.docHashes(spark, dir)
+      graft.Artifacts.serve(spark, dir, graft.Artifacts.DocHashesName)
     else Tables.documents(spark, dir))
       .agg(count(lit(1)).as("n_total"))
 
@@ -50,7 +58,7 @@ object Search {
     * the filter below the aggregate in its inline plan.
     */
   private[operators] def postingsOrInline(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.tokenPostings(spark, dir).getOrElse(
+    graft.Artifacts.current(spark, dir, WsPostings).getOrElse(
       graft.Checkpoints.checkpoint(
         Tables.documentsFanned(spark, dir).select(col("doc_id"),
             explode(Dedup.tokens(col("text"))).as("token"))
@@ -67,7 +75,7 @@ object Search {
     */
   private def restrictedTf(spark: SparkSession, dir: String,
       restrict: DataFrame => DataFrame): DataFrame =
-    graft.Artifacts.tokenPostings(spark, dir) match {
+    graft.Artifacts.current(spark, dir, WsPostings) match {
       case Some(p) => restrict(p).select("doc_id", "token", "tf")
       case None => restrict(
         Tables.documents(spark, dir).select(col("doc_id"),
@@ -195,15 +203,15 @@ object Search {
       floor((nTok + lit(Segments.ChunkStride - 1)) /
         lit(Segments.ChunkStride.toDouble)).cast("long"))
       .otherwise(0L)
-    val nChunks = graft.Artifacts.tokenCounts(spark, dir,
-        graft.functions.Tokenizer.Whitespace) match {
+    val nChunks = graft.Artifacts.current(spark, dir, WsCounts) match {
       case Some(tc) => tc.agg(
         coalesce(sum(chunksOf(col("n_tokens"))), lit(0L)).as("n_total"))
       case None => Tables.documents(spark, dir).agg(
         coalesce(sum(chunksOf(size(Dedup.tokens(col("text"))))), lit(0L))
           .as("n_total"))
     }
-    val tf = graft.Artifacts.chunkPostings(spark, dir) match {
+    val tf = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.ChunkPostingsName) match {
       case Some(cp) => cp.filter(col("token").isin(QueryTerms: _*))
         .select("doc_id", "chunk_id", "token", "tf")
       case None => Segments.chunkTokenFrame(spark, dir)
@@ -287,7 +295,7 @@ object Search {
     // document and silently empty the lexical leg. Artifact mode reads
     // the probe's postings row (tf IS the occurrence count); inline
     // explodes the one probe document.
-    val probeCounts = graft.Artifacts.tokenPostings(spark, dir) match {
+    val probeCounts = graft.Artifacts.current(spark, dir, WsPostings) match {
       case Some(p) => p.filter(col("doc_id") === HybridProbe)
         .select(col("token"), col("tf").as("n_probe"))
       case None => Tables.documents(spark, dir)
@@ -519,7 +527,8 @@ object Search {
     // idf side from the standing token_df aggregate when fresh — the
     // per-query vocabulary-grain shuffle of the postings drops out —
     // else aggregated from the same postings frame the scoring joins
-    val dfc = graft.Artifacts.tokenDf(spark, dir).getOrElse(
+    val dfc = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.TokenDfName).getOrElse(
       CorpusOps.dfFromPostings(postings))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
       .orderBy(col("score").desc, col("token").asc)
@@ -590,9 +599,7 @@ object Search {
   def q121Bm25Full(spark: SparkSession, dir: String): DataFrame = {
     val tf = restrictedTf(spark, dir,
       _.filter(col("token").isin(QueryTerms: _*)))
-    val ws = graft.functions.Tokenizer.Whitespace
-    val dl = graft.Artifacts.tokenCounts(spark, dir, ws).getOrElse(
-      graft.Artifacts.tokenCountsFrame(Tables.documents(spark, dir), ws))
+    val dl = graft.Artifacts.serve(spark, dir, WsCounts)
     val totals = dl.agg(count(lit(1)).as("n_total"),
       sum("n_tokens").as("tok_total"))
     val dfc = tf.groupBy("token").agg(count(lit(1)).as("df"))
@@ -673,7 +680,7 @@ object Search {
     */
   private def restrictedPositions(spark: SparkSession, dir: String,
       restrict: DataFrame => DataFrame): DataFrame =
-    graft.Artifacts.tokenPositions(spark, dir) match {
+    graft.Artifacts.current(spark, dir, graft.Artifacts.TokenPositionsName) match {
       case Some(p) => restrict(p).select("doc_id", "token", "pos")
       case None => graft.Checkpoints.checkpoint(restrict(
         Tables.documents(spark, dir).select(col("doc_id"),
@@ -727,9 +734,7 @@ object Search {
       .filter(col("k") === col("plen"))
       .groupBy("phrase", "doc_id").agg(count(lit(1)).as("tf"))
 
-    val ws = graft.functions.Tokenizer.Whitespace
-    val dl = graft.Artifacts.tokenCounts(spark, dir, ws).getOrElse(
-      graft.Artifacts.tokenCountsFrame(Tables.documents(spark, dir), ws))
+    val dl = graft.Artifacts.serve(spark, dir, WsCounts)
     val totals = dl.agg(count(lit(1)).as("n_total"),
       sum("n_tokens").as("tok_total"))
     val dfc = matches.groupBy("phrase").agg(count(lit(1)).as("df"))

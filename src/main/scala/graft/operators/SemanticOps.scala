@@ -315,7 +315,7 @@ object SemanticOps {
     * no pass structure. The Lloyd training never re-runs here.
     */
   def q142SemDecontam(spark: SparkSession, dir: String): DataFrame =
-    graft.Artifacts.evalFlagsSem(spark, dir)
+    graft.Artifacts.current(spark, dir, graft.Artifacts.EvalFlagsSemName)
       .map(_.orderBy("vec_id", "set_id"))
       .getOrElse(q142SemInline(spark, dir))
 

@@ -131,7 +131,7 @@ object Similarity {
     // artifact is materialized ([[graft.Artifacts]]) each side is a
     // cheap parquet re-scan; inline computation is checkpointed once so
     // the fixpoint never runs twice in one plan.
-    val assignment = graft.Artifacts.keepers(spark, dir)
+    val assignment = graft.Artifacts.serve(spark, dir, graft.Artifacts.KeepersName)
     val keepers = (if (graft.Artifacts.isMaterialized(spark, dir,
         graft.Artifacts.KeepersName)) assignment
       else graft.Checkpoints.checkpoint(assignment))
@@ -218,7 +218,7 @@ object Similarity {
     lshIndexWith(e, idCol, vecCol, hyperplanes)
 
   /** The q23 ANN index over the standard embeddings schema — the frame
-    * `Artifacts.lshAnnIndex` materializes and q23 consumes. ONE
+    * `lsh_ann_index` artifact materializes and q23 consumes. ONE
     * definition, so the standing index can never drift from the inline
     * derivation.
     */
@@ -226,7 +226,7 @@ object Similarity {
     lshIndex(e, "vec_id", "embedding")
 
   /** The q82 near-dup index over the standard embeddings schema — the
-    * frame `Artifacts.lshNearDupIndex` materializes and q82 consumes.
+    * frame the `lsh_neardup_index` artifact materializes and q82 consumes.
     */
   private[graft] def nearDupIndexFrame(e: DataFrame): DataFrame =
     lshIndexWith(e, "vec_id", "embedding", nearDupPlanes)
@@ -234,7 +234,7 @@ object Similarity {
   /** Per-label centroid cells `(label, centroid)` — ONE
     * [[graft.functions.VectorCentroid]] aggregation with decimal-rounded
     * components, shared by q35 (coarse-quantizer cells) and q103
-    * (outlier reference), and the frame `Artifacts.labelCentroids`
+    * (outlier reference), and the frame the `label_centroids` artifact
     * materializes. One definition, so the standing table can never
     * drift from the inline derivation, and a rounding change lands
     * everywhere at once.
@@ -263,7 +263,7 @@ object Similarity {
     // the standing centroid table when the embeddings fingerprint
     // resolves (the one corpus-wide aggregation in this query, paid
     // once per embedding snapshot), inline aggregation otherwise
-    val cells = graft.Artifacts.labelCentroids(spark, dir)
+    val cells = graft.Artifacts.serve(spark, dir, graft.Artifacts.LabelCentroidsName)
 
     val p = probes(e).withColumn("pn", VectorOps.norm(col("pv")))
     val cellRank = Window.partitionBy("probe_id")
@@ -349,7 +349,7 @@ object Similarity {
     // the standing vector index when the embeddings fingerprint
     // resolves (the per-vector projection pass paid once per snapshot),
     // inline sign sketches otherwise
-    val idx = graft.Artifacts.lshAnnIndex(spark, dir)
+    val idx = graft.Artifacts.serve(spark, dir, graft.Artifacts.LshAnnIndexName)
     val probeIdx = idx.filter(col("id") < NumProbes)
       .withColumnRenamed("id", "probe_id")
     val cand = broadcast(probeIdx).join(idx, Seq("table", "bucket"))
@@ -476,7 +476,7 @@ object Similarity {
       // standing near-dup index when the embeddings fingerprint
       // resolves, inline sign sketches otherwise (shared frame
       // definition either way)
-      graft.Artifacts.lshNearDupIndex(spark, dir))
+      graft.Artifacts.serve(spark, dir, graft.Artifacts.LshNearDupIndexName))
 
   /** [[q82AnnNearDupPairs]] over caller-supplied embeddings + index
     * frames — the seam q117's deterministic sample runs the bucketed
@@ -520,20 +520,14 @@ object Similarity {
     // candidate pair); when the whole embeddings table is below one
     // scan split, AQE coalesces the pair dedup's exchange to 1-2 tasks
     // by its BYTES and the confirm runs nearly serial — pin the dedup's
-    // own exchange to the fan width instead (the numbered repartition
-    // already satisfies the dedup's required distribution, so this adds
-    // no exchange). Past one split the guard is false and AQE keeps
-    // sizing by bytes — the honest posture at corpus scale, where pair
-    // volume dwarfs the coalesce floor anyway.
-    val ss = e.sparkSession
-    val pinWidth = ss.sparkContext.defaultParallelism > 1 &&
-      e.queryExecution.optimizedPlan.stats.sizeInBytes <
-        ss.sessionState.conf.filesMaxPartitionBytes
+    // own exchange to the fan width instead (Tables.fanWidth; the
+    // numbered repartition already satisfies the dedup's required
+    // distribution, so this adds no exchange). Past one split there is
+    // no width and AQE keeps sizing by bytes — the honest posture at
+    // corpus scale, where pair volume dwarfs the coalesce floor anyway.
     val cand0 = fullPairs.unionByName(starPairs)
-    val cand = (if (pinWidth)
-        cand0.repartition(math.min(ss.sparkContext.defaultParallelism, 8),
-          col("id_a"), col("id_b"))
-      else cand0)
+    val cand = Tables.fanWidth(e)
+      .fold(cand0)(n => cand0.repartition(n, col("id_a"), col("id_b")))
       .dropDuplicates("id_a", "id_b")
     val withNorm = e.select(col("vec_id"), col("embedding"),
       VectorOps.norm(col("embedding")).as("nrm"))
@@ -761,7 +755,7 @@ object Similarity {
     // standing centroid table when fresh — the corpus-wide aggregation
     // drops out of the per-query plan (plan-guarded: no VectorCentroid
     // leaf in artifact mode), leaving one scan for the distance pass
-    val cells = graft.Artifacts.labelCentroids(spark, dir)
+    val cells = graft.Artifacts.serve(spark, dir, graft.Artifacts.LabelCentroidsName)
     // NULLS LAST explicitly on both engines: a null/zero-norm embedding
     // yields a NULL cosine, and Spark's ASC default (NULLS FIRST) would
     // otherwise elect it rank-1 while DuckDB ranks it last
@@ -956,7 +950,7 @@ object Similarity {
         s"${Dedup.MaxBruteForceVectors} the truth pass runs under; " +
         "choose a target with sampling headroom below the cap")
     val idx = graft.Checkpoints.checkpoint(
-      graft.Artifacts.lshNearDupIndex(spark, dir)
+      graft.Artifacts.serve(spark, dir, graft.Artifacts.LshNearDupIndexName)
         .filter(inSample(col("id"))))
     bandedRecall(Dedup.embeddingNearDupPairsFrom(se),
       annNearDupPairsFrom(se, idx, idxCheckpointed = true))
@@ -1014,7 +1008,7 @@ object Similarity {
     * artifact resolves.
     */
   def q116LshBucketAudit(spark: SparkSession, dir: String): DataFrame = {
-    val idx = graft.Artifacts.lshNearDupIndex(spark, dir)
+    val idx = graft.Artifacts.serve(spark, dir, graft.Artifacts.LshNearDupIndexName)
     idx.groupBy(col("table").as("tbl"), col("bucket"))
       .agg(count(lit(1)).as("pop"))
       .groupBy("tbl")

@@ -148,8 +148,9 @@ object TextAnalysis {
     val bpe = graft.functions.Tokenizer.BpePre
     // artifact mode: both count columns are standing per-doc state — the
     // document TEXT is never scanned, let alone tokenized twice
-    (graft.Artifacts.tokenCounts(spark, dir, tok),
-      graft.Artifacts.tokenCounts(spark, dir, bpe)) match {
+    (graft.Artifacts.current(spark, dir, graft.Artifacts.tokenCountsName(tok)),
+      graft.Artifacts.current(spark, dir,
+          graft.Artifacts.tokenCountsName(bpe))) match {
       case (Some(tc), Some(bc)) =>
         tc.select(col("doc_id"), col("n_tokens").as("ws_tokens"))
           .join(bc.select(col("doc_id"), col("n_tokens").as("bpe_tokens")),
@@ -543,7 +544,8 @@ object TextAnalysis {
     val bigrams = bigramsOf(Tables.documentsFanned(spark, dir), Seq("doc_id"))
     // artifact mode retires the counting scan: the standing
     // (source, w1, w2, n) frequencies re-aggregate to pair grain
-    val counts = graft.Artifacts.bigramFreq(spark, dir) match {
+    val counts = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.BigramFreqName) match {
       case Some(bf) => bf.groupBy("w1", "w2").agg(sum("n").as("n"))
       case None => bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("n"))
     }
@@ -710,7 +712,7 @@ object TextAnalysis {
     // standing text_gates bits' quality_ok column (one committed scoring
     // pass per snapshot), so the artifact retires a full tokenize+fold
     // scan here; inline fallback keeps the identical kernel
-    val keep = graft.Artifacts.textGates(spark, dir)
+    val keep = graft.Artifacts.current(spark, dir, graft.Artifacts.TextGatesName)
       .map(_.filter(col("quality_ok")).select("doc_id"))
       .getOrElse(scoredQuality(docs, "text")
         .filter(col("quality_label") === "keep").select("doc_id"))
@@ -893,7 +895,8 @@ object TextAnalysis {
     * `TakeOrderedAndProject` cutoff.
     */
   def q119PmiCollocations(spark: SparkSession, dir: String): DataFrame = {
-    val bg = graft.Artifacts.bigramFreq(spark, dir) match {
+    val bg = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.BigramFreqName) match {
       case Some(b) => b.groupBy("w1", "w2").agg(sum("n").as("n_ab"))
       case None => bigramsOf(Tables.documentsFanned(spark, dir), Seq.empty)
         .groupBy("w1", "w2").agg(count(lit(1)).as("n_ab"))
@@ -970,7 +973,8 @@ object TextAnalysis {
     * source-grain.
     */
   def q120OovRate(spark: SparkSession, dir: String): DataFrame = {
-    val perSource = graft.Artifacts.tokenFreq(spark, dir).getOrElse(
+    val perSource = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.TokenFreqName).getOrElse(
       CorpusOps.tokenFreqRows(Tables.documentsFanned(spark, dir)))
     val vocab = graft.Artifacts.tokenTotals(spark, dir)
       .orderBy(col("n").desc, col("token").asc).limit(OovVocabK)
@@ -1057,7 +1061,7 @@ object TextAnalysis {
     // artifact-first: the merge table is TRAINED state, computed once
     // per snapshot (`bpe_merges`) — the iterative collect-per-step
     // train runs only when no committed version resolves
-    graft.Artifacts.bpeMerges(spark, dir)
+    graft.Artifacts.current(spark, dir, graft.Artifacts.BpeMergesName)
       .map(_.select("step", "lhs", "rhs", "merged", "weight")
         .orderBy("step"))
       .getOrElse(
@@ -1211,10 +1215,11 @@ object TextAnalysis {
     // inline fallback pays ONE tokenizing scan shared by training and
     // scoring (the q90 checkpoint posture); artifact mode reads the
     // standing index — and the standing MERGES — and never re-trains
-    val tf = graft.Artifacts.tokenFreq(spark, dir).getOrElse(
+    val tf = graft.Artifacts.current(spark, dir,
+        graft.Artifacts.TokenFreqName).getOrElse(
       graft.Checkpoints.checkpoint(
         CorpusOps.tokenFreqRows(Tables.documentsFanned(spark, dir))))
-    graft.Artifacts.bpeMerges(spark, dir) match {
+    graft.Artifacts.current(spark, dir, graft.Artifacts.BpeMergesName) match {
       case Some(m) =>
         scoredFertility(tf, m.collect().sortBy(_.getAs[Int]("step"))
           .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"))).toSeq)

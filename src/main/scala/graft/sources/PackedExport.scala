@@ -95,7 +95,8 @@ object PackedExport {
   private def occurrences(spark: SparkSession, dir: String,
       tok: graft.functions.Tokenizer): DataFrame =
     (if (tok == graft.functions.Tokenizer.Whitespace)
-       graft.Artifacts.tokenPositions(spark, dir) else None)
+       graft.Artifacts.current(spark, dir,
+         graft.Artifacts.TokenPositionsName) else None)
       // inline fallback is checkpointed: the stream join and (for a
       // custom tokenizer) the vocab count both read it
       .getOrElse(graft.Checkpoints.checkpoint(Tables.documents(spark, dir)
@@ -148,7 +149,7 @@ object PackedExport {
     // for the whitespace default, else counted off the occurrence stream
     val counts =
       if (tok == graft.functions.Tokenizer.Whitespace)
-        CorpusOps.vocabCounts(spark, dir)
+        graft.Artifacts.tokenTotals(spark, dir)
       else occ.groupBy("token").agg(count(lit(1)).as("n"))
     val vocab = CorpusOps.frequencyVocab(counts)
 

@@ -609,7 +609,7 @@ object StreamingOps {
     // novelty core q109 uses — shared definition, not a parallel copy
     graft.operators.CorpusOps.shingleNovelty(
       batch.dropDuplicates(idCol), Seq(idCol), textCol,
-      graft.Artifacts.shingles8(spark, corpusDir))
+      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.Shingles8Name))
 
   /** q124's verdict at INTAKE time: per micro-batch, screen each
     * arriving document against the STANDING per-set eval-shingle index
@@ -638,7 +638,8 @@ object StreamingOps {
         .select(col(idCol),
           explode(CorpusOps.shinglesN(Dedup.tokens(col(textCol)),
             CorpusOps.DecontamN)).as("sh")),
-      idCol, graft.Artifacts.evalShingles(spark, corpusDir))
+      idCol, graft.Artifacts.serve(spark, corpusDir,
+        graft.Artifacts.EvalShinglesName))
   }
 
   /** q50's verdict at INTAKE time: each arriving document checked
@@ -676,8 +677,8 @@ object StreamingOps {
       b.select("doc_id"),
       graft.Artifacts.docHashesFrame(b),
       Dedup.bandedSignatures(b),
-      graft.Artifacts.docHashes(spark, corpusDir),
-      graft.Artifacts.minhashBands(spark, corpusDir))
+      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.DocHashesName),
+      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.MinhashBandsName))
       .withColumnRenamed("doc_id", idCol)
   }
 
@@ -704,7 +705,7 @@ object StreamingOps {
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
     Multimodal.phashVerdictsOf(
       Multimodal.imageGridRows(b),
-      graft.Artifacts.imageGrids(spark, corpusDir))
+      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.ImageGridsName))
       .withColumnRenamed("doc_id", idCol)
   }
 
@@ -730,7 +731,7 @@ object StreamingOps {
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
     Multimodal.sigVerdictsOf(
       Multimodal.videoSigRows(b),
-      graft.Artifacts.videoSigs(spark, corpusDir))
+      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.VideoSigsName))
       .withColumnRenamed("doc_id", idCol)
   }
 
@@ -748,7 +749,7 @@ object StreamingOps {
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
     Multimodal.sigVerdictsOf(
       Multimodal.audioSigRows(b),
-      graft.Artifacts.audioSigs(spark, corpusDir))
+      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.AudioSigsName))
       .withColumnRenamed("doc_id", idCol)
   }
 
@@ -879,15 +880,16 @@ object StreamingOps {
       b.select("doc_id"),
       graft.Artifacts.docHashesFrame(b),
       Dedup.bandedSignaturesFrom(sh3),
-      graft.Artifacts.docHashes(spark, corpusDir),
-      graft.Artifacts.minhashBands(spark, corpusDir))
+      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.DocHashesName),
+      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.MinhashBandsName))
       .withColumnRenamed("verdict", "dedup_verdict")
       .withColumnRenamed("match_id", "dedup_match_id")
     val novelty = CorpusOps.noveltyOfShingles(b.select("doc_id"), sh8,
-      Seq("doc_id"), graft.Artifacts.shingles8(spark, corpusDir))
+      Seq("doc_id"), graft.Artifacts.serve(spark, corpusDir,
+        graft.Artifacts.Shingles8Name))
     val contam = EvalSets.contaminationOfShingles(
         sh8.filter(!EvalSets.inAnySet(col("doc_id"))), "doc_id",
-        graft.Artifacts.evalShingles(spark, corpusDir))
+        graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.EvalShinglesName))
       .groupBy("doc_id").agg(count(lit(1)).as("n_eval_sets"))
     val quality = gate.fold(TextAnalysis.scoredQuality(b, "text"))(g =>
         TextAnalysis.scoredQuality(b, "text", g.model))
@@ -900,16 +902,16 @@ object StreamingOps {
       .select(col("doc_id"), col("clipped").as("audio_clipped"),
         col("silent").as("audio_silent"), col("keep").as("audio_keep"))
     val imageDup = Multimodal.phashVerdictsOf(grids,
-        graft.Artifacts.imageGrids(spark, corpusDir))
+        graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.ImageGridsName))
       .withColumnRenamed("verdict", "image_verdict")
       .withColumnRenamed("match_id", "image_match_id")
     val videoDup = Multimodal.sigVerdictsOf(videoSigs,
-        graft.Artifacts.videoSigs(spark, corpusDir))
+        graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.VideoSigsName))
       .withColumnRenamed("verdict", "video_verdict")
       .withColumnRenamed("match_id", "video_match_id")
     val audioDup = Multimodal.sigVerdictsOf(
         Multimodal.audioSigsFromWindows(b, audioWin),
-        graft.Artifacts.audioSigs(spark, corpusDir))
+        graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.AudioSigsName))
       .withColumnRenamed("verdict", "audio_verdict")
       .withColumnRenamed("match_id", "audio_match_id")
 

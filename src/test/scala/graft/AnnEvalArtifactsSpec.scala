@@ -62,7 +62,7 @@ class AnnEvalArtifactsSpec extends SparkSpec {
       Tables.invalidate(corpus)
       Artifacts.setRoot(root.getAbsolutePath)
       assert(Artifacts.materializeAnnEvals(spark, corpus) >= 0L)
-      assert(Artifacts.annEval(spark, corpus,
+      assert(Artifacts.current(spark, corpus,
         Artifacts.NprobeSweepEvalName).nonEmpty)
       // shrink the table in place → fingerprint moves → fallback inline
       val shrunk = spark.read.parquet(s"$corpus/embeddings.parquet")
@@ -73,7 +73,7 @@ class AnnEvalArtifactsSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
       Tables.invalidate(corpus)
       Artifacts.AnnEvalNames.foreach { name =>
-        assert(Artifacts.annEval(spark, corpus, name).isEmpty,
+        assert(Artifacts.current(spark, corpus, name).isEmpty,
           s"a stale $name must never be served")
       }
       val got = rows(Ivf.q143NprobeSweep(spark, corpus))

@@ -128,13 +128,13 @@ class ArtifactsSpec extends SparkSpec {
       assert(!Artifacts.isMaterialized(spark, corpus, Artifacts.KeepersName),
         "stale artifact still resolves as materialized")
       // read-through must reflect corpus v2, not v1's committed artifact
-      assert(Artifacts.keepers(spark, corpus).count() == n2)
+      assert(Artifacts.serve(spark, corpus, Artifacts.KeepersName).count() == n2)
       Checkpoints.releaseAll()
 
       // strict posture: stale + unmaterialized = loud failure
       Artifacts.setStrict(true)
       val e = intercept[IllegalStateException] {
-        Artifacts.keepers(spark, corpus).count()
+        Artifacts.serve(spark, corpus, Artifacts.KeepersName).count()
       }
       assert(e.getMessage.contains("STALE"))
       Artifacts.setStrict(false)
@@ -145,7 +145,7 @@ class ArtifactsSpec extends SparkSpec {
       Artifacts.SegmentSweepGraceMs = 0L
       Artifacts.materialize(spark, corpus)
       assert(Artifacts.isMaterialized(spark, corpus, Artifacts.KeepersName))
-      assert(Artifacts.keepers(spark, corpus).count() == n2)
+      assert(Artifacts.serve(spark, corpus, Artifacts.KeepersName).count() == n2)
       val keeperDir = new java.io.File(tmpRoot,
         tmpRoot.listFiles().head.getName + "/" + Artifacts.KeepersName)
       val versions = keeperDir
@@ -227,6 +227,122 @@ class ArtifactsSpec extends SparkSpec {
     }
   }
 
+  test("serve with no root ≡ the committed version of every entry; a " +
+      "missing entry builds inline over its committed parents") {
+    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // additive artifacts may be stored as several ± segments: compare
+    // them folded — the count column (last) summed per key, zeros dropped
+    def fold(df: DataFrame): DataFrame =
+      df.groupBy(df.columns.init.map(col): _*)
+        .agg(sum(col(df.columns.last)).as(df.columns.last))
+        .filter(col(df.columns.last) > 0)
+    def sameRows(a: DataFrame, b: DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val tmp = Files.createTempDirectory("graft-artifacts-serve").toFile
+    try {
+      Artifacts.setRoot(tmp.getAbsolutePath)
+      Artifacts.materializeAll(spark, sf)
+      val additive = Artifacts.status(spark, sf)
+        .filter(_.layout == "additive").map(_.name).toSet
+      assert(additive.contains(Artifacts.TokenFreqName), additive)
+      val committed = (Artifacts.AllNames ++ Artifacts.EmbeddingNames)
+        .map(n => n -> Artifacts.readCommitted(spark, sf, n))
+      Artifacts.clearRoot()
+      committed.foreach { case (n, art) =>
+        val served = Artifacts.serve(spark, sf, n)
+        val same =
+          if (additive(n)) sameRows(fold(art), fold(served))
+          else sameRows(art, served)
+        Checkpoints.releaseAll()
+        assert(same, s"$n: inline serve drifted from the committed version")
+      }
+
+      // delete the committed keepers version: serve builds it inline,
+      // reading its doc_hashes and dup_pairs parents back from the root
+      Artifacts.setRoot(tmp.getAbsolutePath)
+      def sorted(df: DataFrame): Seq[String] =
+        df.collect().map(_.toString).sorted.toSeq
+      val before = sorted(Artifacts.readCommitted(spark, sf, Artifacts.KeepersName))
+      deleteRecursively(new java.io.File(tmp, s"${Artifacts.corpusKey(sf)}/" +
+        s"${Artifacts.KeepersName}/fp=${Artifacts.corpusFingerprint(spark, sf)}"))
+      assert(!Artifacts.isMaterialized(spark, sf, Artifacts.KeepersName))
+      // every plan the serve executes, its edge checkpoint included
+      val scanned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      def walk(p: SparkPlan): Unit = p.foreach {
+        case f: FileSourceScanExec =>
+          f.relation.location.rootPaths.foreach(r => scanned.add(r.toString))
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case _ =>
+      }
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit = walk(qe.executedPlan)
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val got =
+        try {
+          val rows = sorted(Artifacts.serve(spark, sf, Artifacts.KeepersName))
+          org.apache.spark.sql.GraftListenerBridge.drain(spark.sparkContext)
+          rows
+        } finally spark.listenerManager.unregister(listener)
+      assert(got == before, "inline keepers drifted from the deleted version")
+      val root = tmp.getName
+      Seq(Artifacts.DocHashesName, Artifacts.DupPairsName).foreach { parent =>
+        assert(scanned.toArray.exists { p =>
+          val s = p.toString; s.contains(root) && s.contains(s"/$parent/")
+        }, s"serve(keepers) did not read $parent back: $scanned")
+      }
+    } finally {
+      Artifacts.clearRoot()
+      deleteRecursively(tmp)
+      Checkpoints.releaseAll()
+    }
+  }
+
+  test("a stale non-default tokenizer artifact names its own build") {
+    // materialize never builds a tokenizer's counts or postings outside
+    // the default lists, so the stale hint must name the per-tokenizer
+    // entry points instead
+    import org.apache.spark.sql.functions.col
+    val fixture = graft.functions.Tokenizer.BpeFixture
+    val tmpRoot = Files.createTempDirectory("graft-artifacts-tokstale").toFile
+    val corpus = Files.createTempDirectory("graft-corpus-tokstale").toString
+    try {
+      val src = Tables.documents(spark, sf)
+      src.filter(col("doc_id") % 2 === 0).write.parquet(s"$corpus/documents.parquet")
+      Artifacts.setRoot(tmpRoot.getAbsolutePath)
+      Artifacts.materializeTokenCounts(spark, corpus, fixture)
+      Artifacts.materializeTokenPostings(spark, corpus, fixture)
+      val counts = Artifacts.tokenCountsName(fixture)
+      val postings = Artifacts.tokenPostingsName(fixture)
+      assert(Artifacts.current(spark, corpus, counts).isDefined)
+      // change the corpus files in place: both versions go stale
+      src.filter(col("doc_id") % 4 === 0)
+        .write.mode("overwrite").parquet(s"$corpus/documents.parquet")
+      Tables.invalidate(corpus)
+      Artifacts.setStrict(true)
+      Seq(counts -> "materializeTokenCounts",
+          postings -> "materializeTokenPostings").foreach { case (name, ep) =>
+        val e = intercept[IllegalStateException] {
+          Artifacts.current(spark, corpus, name)
+        }
+        assert(e.getMessage.contains("STALE") &&
+          e.getMessage.contains(s"Artifacts.$ep "), e.getMessage)
+      }
+    } finally {
+      Artifacts.clearRoot()
+      Artifacts.setStrict(false)
+      deleteRecursively(tmpRoot)
+      deleteRecursively(new java.io.File(corpus))
+      Checkpoints.releaseAll()
+    }
+  }
+
   test("a marker with no data reads as not committed and rebuilds") {
     // a crash between a sweep's partial delete and its directory removal
     // can leave _SUCCESS with no data files — that version must rebuild,
@@ -277,7 +393,7 @@ class ArtifactsSpec extends SparkSpec {
       Seq(ws, bpe).foreach { t =>
         val name = Artifacts.tokenCountsName(t)
         assert(counts.contains(name), counts)
-        val art = Artifacts.tokenCounts(spark, sf, t)
+        val art = Artifacts.current(spark, sf, Artifacts.tokenCountsName(t))
         assert(art.isDefined, s"$name not served")
         assert(rows(art.get.orderBy("doc_id")) == inline(t),
           s"$name drifted from inline")
@@ -285,7 +401,7 @@ class ArtifactsSpec extends SparkSpec {
       // a NON-materialized tokenizer must not resolve — the id is in the
       // path, so ws counts can never masquerade as fixture counts
       assert(fixture.id != ws.id && fixture.id != bpe.id)
-      assert(Artifacts.tokenCounts(spark, sf, fixture).isEmpty,
+      assert(Artifacts.current(spark, sf, Artifacts.tokenCountsName(fixture)).isEmpty,
         "unmaterialized tokenizer resolved an artifact")
       // consumers under the swapped tokenizer fall back inline and match
       assert(rows(operators.CorpusOps.packSequences(spark, sf, fixture)) ==
@@ -293,7 +409,7 @@ class ArtifactsSpec extends SparkSpec {
       // materializing the swapped tokenizer's counts flips its consumers
       // to artifact mode with identical rows
       Artifacts.materializeTokenCounts(spark, sf, fixture)
-      val art = Artifacts.tokenCounts(spark, sf, fixture)
+      val art = Artifacts.current(spark, sf, Artifacts.tokenCountsName(fixture))
       assert(art.isDefined)
       assert(rows(art.get.orderBy("doc_id")) == inline(fixture))
       assert(rows(operators.TextAnalysis.tokenCounts(spark, sf, fixture)) ==
@@ -316,10 +432,11 @@ class ArtifactsSpec extends SparkSpec {
       // build commits whitespace only; a production tokenizer's index
       // stands up via materializeTokenPostings and can never be served
       // another tokenizer's rows
-      assert(Artifacts.tokenPostings(spark, sf, fixture).isEmpty,
+      assert(Artifacts.current(spark, sf,
+        Artifacts.tokenPostingsName(fixture)).isEmpty,
         "unmaterialized tokenizer resolved a postings artifact")
       Artifacts.materializeTokenPostings(spark, sf, fixture)
-      val post = Artifacts.tokenPostings(spark, sf, fixture)
+      val post = Artifacts.current(spark, sf, Artifacts.tokenPostingsName(fixture))
       assert(post.isDefined)
       // content comparison at (doc_id, token) grain: the artifact's FILE
       // order is not part of its contract (the write rebalances for
@@ -328,7 +445,7 @@ class ArtifactsSpec extends SparkSpec {
         rows(operators.CorpusOps.tokenPostingsRows(docs, fixture)
           .orderBy("doc_id", "token")),
         "fixture-tokenizer postings drifted from inline")
-      assert(rows(Artifacts.tokenPostings(spark, sf, ws).get
+      assert(rows(Artifacts.current(spark, sf, Artifacts.tokenPostingsName(ws)).get
           .orderBy("doc_id", "token")) !=
         rows(post.get.orderBy("doc_id", "token")),
         "two tokenizers' postings cannot coincide here")
@@ -380,7 +497,7 @@ class ArtifactsSpec extends SparkSpec {
       Artifacts.setRoot(tmp.getAbsolutePath)
       // root set but nothing materialized: no _SUCCESS marker → inline
       assert(!Artifacts.isMaterialized(spark, sf, Artifacts.KeepersName))
-      assert(Artifacts.keepers(spark, sf).count() ==
+      assert(Artifacts.serve(spark, sf, Artifacts.KeepersName).count() ==
         Tables.documents(spark, sf).count())
       Checkpoints.releaseAll()
     } finally {

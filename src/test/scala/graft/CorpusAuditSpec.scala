@@ -299,7 +299,7 @@ class CorpusAuditSpec extends SparkSpec {
       Artifacts.setRoot(tmp.getAbsolutePath)
       try {
         Artifacts.materialize(spark, sf)
-        assert(Artifacts.tokenFreq(spark, sf).nonEmpty,
+        assert(Artifacts.current(spark, sf, Artifacts.TokenFreqName).nonEmpty,
           "token_freq artifact did not resolve after materialize")
         assert(CorpusAudit.q90SourceDivergence(spark, sf).collect().toSeq
             == inline,

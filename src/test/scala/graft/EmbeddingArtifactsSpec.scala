@@ -44,7 +44,7 @@ class EmbeddingArtifactsSpec extends SparkSpec {
       assert(Artifacts.EmbeddingNames.forall(
         Artifacts.isMaterialized(spark, sf, _)))
       // artifact-mode reads serve the identical frames
-      assert(rows(Artifacts.lshAnnIndex(spark, sf)) == idxInline)
+      assert(rows(Artifacts.serve(spark, sf, Artifacts.LshAnnIndexName)) == idxInline)
       assert(rows(Similarity.q23AnnLsh(spark, sf)) == q23Inline)
       assert(rows(Similarity.q82AnnNearDupPairs(spark, sf)) == q82Inline)
       // the artifact path must actually appear in the consumer's plan
@@ -107,7 +107,7 @@ class EmbeddingArtifactsSpec extends SparkSpec {
         .find(_.name == Artifacts.LshAnnIndexName)
       assert(stStale.exists(s => !s.committed && s.staleVersions >= 1),
         s"status must report the stale vector index: $stStale")
-      val idx = Artifacts.lshAnnIndex(spark, corpus)
+      val idx = Artifacts.serve(spark, corpus, Artifacts.LshAnnIndexName)
       assert(rows(idx) == rows(Similarity.annIndexFrame(
         Tables.embeddings(spark, corpus))),
         "stale artifact must never be served — inline over new data")

@@ -47,14 +47,16 @@ class EvalContaminationArtifactSpec extends SparkSpec {
       Tables.invalidate(corpus)
       Artifacts.setRoot(root.getAbsolutePath)
       Artifacts.materializeEvalContamination(spark, corpus)
-      assert(Artifacts.evalContamination(spark, corpus).nonEmpty,
+      assert(Artifacts.current(spark, corpus,
+        Artifacts.EvalContaminationName).nonEmpty,
         "fresh corpus must resolve the committed table")
       spark.read.parquet(s"$sf/documents.parquet")
         .orderBy(col("doc_id").desc).limit(5)
         .withColumn("doc_id", col("doc_id") + lit(900000L))
         .write.mode("append").parquet(s"$corpus/documents.parquet")
       Tables.invalidate(corpus)
-      assert(Artifacts.evalContamination(spark, corpus).isEmpty,
+      assert(Artifacts.current(spark, corpus,
+        Artifacts.EvalContaminationName).isEmpty,
         "a stale report must never be served")
       val fresh = rows(CorpusAudit.evalContaminationFrame(spark, corpus))
       assert(rows(CorpusAudit.q112EvalContamination(spark, corpus)) == fresh,

@@ -95,7 +95,8 @@ class EvalSetsSpec extends SparkSpec {
         .collect().map(_.toSeq).toSet
       Artifacts.setRoot(tmp.getAbsolutePath)
       Artifacts.materialize(spark, sf)
-      val art = Artifacts.evalShingles(spark, sf).collect().map(_.toSeq).toSet
+      val art = Artifacts.serve(spark, sf,
+        Artifacts.EvalShinglesName).collect().map(_.toSeq).toSet
       assert(art == inline)
       // and q124 itself is row-identical across modes
       val withArt = EvalSets.q124EvalDecontam(spark, sf).collect().map(_.toSeq)

@@ -47,7 +47,7 @@ class LshCalibrationArtifactSpec extends SparkSpec {
       Tables.invalidate(corpus)
       Artifacts.setRoot(root.getAbsolutePath)
       Artifacts.materializeLshCalibration(spark, corpus)
-      assert(Artifacts.lshCalibration(spark, corpus).nonEmpty,
+      assert(Artifacts.current(spark, corpus, Artifacts.LshCalibrationName).nonEmpty,
         "fresh corpus must resolve the committed table")
       // mutate the corpus: the standing table's fingerprint no longer
       // resolves, so the consumer recomputes inline on the NEW corpus
@@ -56,7 +56,7 @@ class LshCalibrationArtifactSpec extends SparkSpec {
         .withColumn("doc_id", col("doc_id") + lit(900000L))
         .write.mode("append").parquet(s"$corpus/documents.parquet")
       Tables.invalidate(corpus)
-      assert(Artifacts.lshCalibration(spark, corpus).isEmpty,
+      assert(Artifacts.current(spark, corpus, Artifacts.LshCalibrationName).isEmpty,
         "a stale calibration must never be served")
       val fresh = rows(Dedup.lshCalibrationFrame(spark, corpus))
       assert(rows(Dedup.q141LshCalibration(spark, corpus)) == fresh,

@@ -136,7 +136,7 @@ class PackedExportSpec extends SparkSpec {
   }
 
   test("frequencyVocab's two-level rank equals the single-window definition") {
-    val counts = CorpusOps.vocabCounts(spark, sf)
+    val counts = Artifacts.tokenTotals(spark, sf)
     val got = CorpusOps.frequencyVocab(counts).collect()
       .map(r => r.getAs[String]("token") -> r.getAs[Int]("id")).toMap
     val expected = counts.collect()

@@ -144,7 +144,7 @@ class PhraseSearchSpec extends SparkSpec {
         Tables.documents(spark, sf)).collect().map(_.toSeq).toSet
       Artifacts.setRoot(tmp.getAbsolutePath)
       Artifacts.materialize(spark, sf)
-      val art = Artifacts.tokenPositions(spark, sf)
+      val art = Artifacts.current(spark, sf, Artifacts.TokenPositionsName)
         .getOrElse(fail("positions artifact did not resolve"))
         .collect().map(_.toSeq).toSet
       assert(art == inline)

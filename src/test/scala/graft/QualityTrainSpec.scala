@@ -281,7 +281,7 @@ class QualityTrainSpec extends SparkSpec {
       assert(Artifacts.qualityModel(spark, sf).get ==
         QualityTrain.train(spark, sf))
       // scores artifact content == one inline scoring pass
-      assert(rows(Artifacts.qualityScores(spark, sf).get) ==
+      assert(rows(Artifacts.current(spark, sf, Artifacts.QualityScoresName).get) ==
         rows(QualityTrain.scoresFrame(spark, sf,
           QualityTrain.train(spark, sf))))
       // every consumer reads artifact-first and returns the same frame

@@ -152,7 +152,8 @@ class SplitSurprisalSpec extends SparkSpec {
       Artifacts.setRoot(root.getPath)
       try {
         Artifacts.materialize(spark, dir.getPath)
-        assert(Artifacts.bigramFreq(spark, dir.getPath).nonEmpty,
+        assert(Artifacts.current(spark, dir.getPath,
+          Artifacts.BigramFreqName).nonEmpty,
           "bigram_freq artifact did not resolve after materialize")
         val artifact = TextAnalysis.q87BigramSurprisal(spark, dir.getPath)
           .collect().toSeq
@@ -172,7 +173,8 @@ class SplitSurprisalSpec extends SparkSpec {
       Artifacts.setRoot(root.getPath)
       try {
         Artifacts.materialize(spark, dir.getPath)
-        assert(Artifacts.tokenFreq(spark, dir.getPath).nonEmpty,
+        assert(Artifacts.current(spark, dir.getPath,
+          Artifacts.TokenFreqName).nonEmpty,
           "token_freq artifact did not resolve after materialize")
         val artifact = TextAnalysis.q86UnigramSurprisal(spark, dir.getPath)
           .collect().toSeq

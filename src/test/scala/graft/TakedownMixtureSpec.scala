@@ -63,7 +63,7 @@ class TakedownMixtureSpec extends SparkSpec {
   }
 
   test("q88 closure is cluster-complete and seed-covering on the corpus") {
-    val keepers = graft.Artifacts.keepers(spark, sf)
+    val keepers = graft.Artifacts.serve(spark, sf, graft.Artifacts.KeepersName)
       .select("doc_id", "keeper_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val out = Curation.q88TakedownCascade(spark, sf).collect()
