@@ -189,6 +189,13 @@ object Ivf {
     s"CASE WHEN ($s) >= 0 THEN (2 * ($s) + ($n)) // (2 * ($n)) " +
       s"ELSE -((-2 * ($s) + ($n)) // (2 * ($n))) END"
 
+  /** Lloyd trainings actually run in this JVM — the plan-guard specs'
+    * probe that artifact-mode queries pay ZERO training at query time;
+    * nothing else reads it.
+    */
+  private[graft] val trainsPerformed =
+    new java.util.concurrent.atomic.AtomicLong
+
   /** Train [[K]] centroids by [[Iters]] Lloyd iterations over the
     * deterministic hash sample of a quantized frame. Init = the [[K]]
     * smallest sampled `vec_id`s' vectors, cell ids in that order; an
@@ -201,27 +208,19 @@ object Ivf {
     * pure arithmetic, and running it as Spark jobs paid [[Iters]]×
     * (assignment + aggregate) of job-scheduling floor to move no data
     * (11.7 s of the sf0.1 artifact build before this). The arithmetic
-    * is bit-identical to the distributed form (exact integer L2, ties
-    * toward the smaller cell, [[roundDiv]] means), which the oracle
-    * replay and the local-replay specs pin.
+    * is exact integer L2 with ties toward the smaller cell and
+    * [[roundDiv]] means, which the oracle replay and the local-replay
+    * specs pin.
     *
-    * `sampled = false` keeps the distributed per-iteration
-    * (cells × dim) aggregate over the FULL frame (checkpoint it first)
-    * — the eval knob the sampled-vs-full recall spec turns, never the
-    * production path.
+    * `sampled = false` runs the same loop over the UNFILTERED frame
+    * (collected whole, so only for spec-sized frames) — the full-corpus
+    * reference the sampled-vs-full recall spec compares against, never
+    * the production path.
     */
-  /** Lloyd trainings actually run in this JVM — the plan-guard specs'
-    * probe that artifact-mode queries pay ZERO training at query time;
-    * nothing else reads it.
-    */
-  private[graft] val trainsPerformed =
-    new java.util.concurrent.atomic.AtomicLong
-
   def train(quant: DataFrame,
       sampled: Boolean = true): Seq[(Int, Array[Long])] = {
     trainsPerformed.incrementAndGet()
-    if (!sampled) return trainDistributed(quant)
-    val mod = sampleModulus(quant.count())
+    val mod = if (sampled) sampleModulus(quant.count()) else 1L
     val tq =
       if (mod == 1L) quant
       else quant.filter(inTrainSample(col("vec_id"), mod))
@@ -230,9 +229,8 @@ object Ivf {
         r.getAs[scala.collection.Seq[Long]]("q").toArray))
       .sortBy(_._1)
     require(sample.nonEmpty, "empty training frame")
-    // a corpus smaller than K trains min(K, n) centroids — the
-    // distributed form's limit(K) degradation, which the tiny streaming
-    // intake batches rely on
+    // a corpus smaller than K trains min(K, n) centroids, which the
+    // tiny streaming intake batches rely on
     var cents: Array[Array[Long]] = sample.take(K).map(_._2.clone)
     val kk = cents.length
     for (_ <- 1 to Iters) {
@@ -264,32 +262,6 @@ object Ivf {
     var i = 0
     while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
     s
-  }
-
-  /** The distributed full-frame Lloyd loop: each iteration one
-    * assignment pass + one collected (cells × dim) sum/count aggregate
-    * — driver state is vocabulary-sized, never corpus-sized.
-    */
-  private def trainDistributed(quant: DataFrame): Seq[(Int, Array[Long])] = {
-    val init = quant.orderBy("vec_id").limit(K).collect()
-      .map(r => r.getAs[scala.collection.Seq[Long]]("q").toArray)
-      .zipWithIndex.map { case (q, i) => (i, q) }.toSeq
-    (1 to Iters).foldLeft(init) { case (cents, _) =>
-      val sums = quant
-        .select(cellOf(col("q"), cents).as("cell"),
-          posexplode(col("q")).as(Seq("pos", "v")))
-        .groupBy("cell", "pos")
-        .agg(sum("v").as("s"), count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getAs[Int]("cell"))
-      cents.map { case (k, old) =>
-        k -> sums.get(k).map { rows =>
-          rows.sortBy(_.getAs[Int]("pos"))
-            .map(r => roundDiv(r.getAs[Long]("s"), r.getAs[Long]("n")))
-            .toArray
-        }.getOrElse(old)
-      }
-    }
   }
 
   /** [[train]] tolerant of an EMPTY frame: a corpus with no vectors of

@@ -1063,28 +1063,188 @@ object Multimodal {
        |FROM cells ORDER BY doc_id, cell_y, cell_x""".stripMargin
   }
 
+  // ---- the perceptual-dedup core (image, video, audio) ----------------------
+
+  /** Every perceptual signature — the ≤ 16-bit image grid fingerprint,
+    * the ≤ 12-bit video and audio signatures — is a `(doc_id, class,
+    * fingerprint)` frame, comparable only within its class column (`gy`
+    * for images, `n_frames` for takes). One core serves all three
+    * modalities: [[sigGroups]] (distance 0: q163/q172/q176),
+    * [[hammingPairs]] (Hamming 1–[[HammingMax]]: q165/q173/q177) and
+    * [[verdictsOf]] (the intake verdicts: [[phashVerdictsOf]] /
+    * [[sigVerdictsOf]]), with [[sigGroupsSql]] / [[hammingPairsSql]] as
+    * the oracle's tails over each family's own signature replay.
+    *
+    * The near-dup joins split a fingerprint into [[HammingBands]]
+    * disjoint bands of `bandBits` bits ([[GridBandBits]] for grids,
+    * [[SigBandBits]] for takes). Recall at Hamming ≤ [[HammingMax]] is
+    * EXACT by pigeonhole: 3 differing bits cannot touch all 4 bands,
+    * so every qualifying pair shares at least one band bucket, and the
+    * `bit_count(xor)` check makes the output exact, not candidates. A
+    * take with fewer sampled frames has a shorter signature; its
+    * constantly-zero high bands are shared by its whole class only.
+    */
+  val HammingMax = 3
+  val HammingBands = 4
+  private[graft] val GridBandBits = 4
+  private[graft] val SigBandBits = 3
+
+  /** The one band split: `df` exploded to one row per band `b`, with
+    * `bits` = that band's `bandBits`-wide slice of column `fp`.
+    */
+  private[graft] def withBands(df: DataFrame, fp: String, bandBits: Int,
+      b: String = "b", bits: String = "bits"): DataFrame =
+    df.withColumn(b, explode(sequence(lit(0), lit(HammingBands - 1))))
+      .withColumn(bits, expr(s"shiftright($fp, $bandBits * $b) & " +
+        s"CAST(${(1L << bandBits) - 1} AS BIGINT)"))
+
+  /** Distance-0 dup groups: signatures shared by ≥ 2 documents within a
+    * class, with member count and ordered member list — ONE shuffle on
+    * the signature (the q17 exact-dedup shape). `cls` is reported as
+    * `outCol`.
+    */
+  private def sigGroups(sigs: DataFrame, cls: String,
+      outCol: String): DataFrame =
+    sigs.groupBy(col(cls).as(outCol), col("fingerprint"))
+      .agg(count(lit(1)).as("n_docs"),
+        concat_ws(",", transform(sort_array(collect_list(col("doc_id"))),
+          x => x.cast("string"))).as("doc_ids"))
+      .filter(col("n_docs") >= 2)
+      .orderBy(outCol, "fingerprint")
+
+  /** Near-dup pairs at Hamming 1–[[HammingMax]] within a class, at
+    * DISTINCT-SIGNATURE grain: pairing *documents* would be quadratic in
+    * the dup-group sizes, so the band join runs over the distinct
+    * signatures and each row carries both groups' document counts —
+    * the document-grain pair count is `n_docs_a·n_docs_b` without
+    * materializing it (the q21/q82 capped-candidate discipline,
+    * achieved structurally rather than by a cap).
+    *
+    * Scale shape: signature-grain aggregate → 4-row band explode →
+    * equi-join on (class, band, bits) → popcount filter. No doc-grain
+    * pair ever exists.
+    */
+  private def hammingPairs(sigs: DataFrame, cls: String, outCol: String,
+      bandBits: Int): DataFrame = {
+    val bands = withBands(sigs.groupBy(cls, "fingerprint")
+      .agg(count(lit(1)).as("n_docs")), "fingerprint", bandBits)
+    def side(t: String) = bands.select(col(cls), col("b"), col("bits"),
+      col("fingerprint").as(s"fp_$t"), col("n_docs").as(s"n_docs_$t"))
+    side("a").join(side("b"), Seq(cls, "b", "bits"))
+      .filter(col("fp_a") < col("fp_b"))
+      .select(cls, "fp_a", "n_docs_a", "fp_b", "n_docs_b").distinct()
+      .withColumn("hamming", expr("CAST(bit_count(fp_a ^ fp_b) AS INT)"))
+      .filter(col("hamming") <= HammingMax)
+      .select(col(cls).as(outCol), col("fp_a"), col("fp_b"),
+        col("hamming"), col("n_docs_a"), col("n_docs_b"))
+      .orderBy(outCol, "fp_a", "fp_b")
+  }
+
+  /** The verdict cores' standing side at distinct-signature grain: one
+    * `(keyCol, fingerprint, min_id)` row per distinct signature. Both
+    * verdict paths reduce to `min(doc_id)` over the matches, and a
+    * group's min is preserved by taking the min per distinct signature
+    * first — so this is a pure re-bracketing of the same aggregate,
+    * while the exact and band joins downstream see each corpus
+    * signature once however many takes carry it. A boilerplate image
+    * with k corpus copies would otherwise put k rows in every one of
+    * its band buckets and fan each probe out k ways.
+    */
+  private[graft] def distinctStanding(standing: DataFrame, keyCol: String): DataFrame =
+    standing.groupBy(col(keyCol), col("fingerprint"))
+      .agg(min(col("doc_id")).as("min_id"))
+
+  /** The perceptual INTAKE verdict: probe rows `(doc_id, cls,
+    * fingerprint)` against a standing frame of the same shape — `exact`
+    * when an identical (class, fingerprint) exists, `near` at Hamming
+    * 1–[[HammingMax]] through the band join, else `new`; `match_id` =
+    * the smallest matching standing doc, exact winning over near. The
+    * probe side is batch-bounded; the standing side is one artifact
+    * read ([[distinctStanding]]) plus map-only band arithmetic — no
+    * corpus media is ever re-decoded.
+    */
+  private def verdictsOf(probes: DataFrame, standing: DataFrame, cls: String,
+      bandBits: Int, exact: String, near: String): DataFrame = {
+    val p = probes.select(col("doc_id"), col(cls).cast("long").as("cls"),
+      col("fingerprint"))
+    val s = distinctStanding(standing, cls)
+      .select(col("min_id").as("m_id"), col(cls).cast("long").as("m_cls"),
+        col("fingerprint").as("m_fp"))
+    val exactIds = p
+      .join(s, col("cls") === col("m_cls") && col("fingerprint") === col("m_fp"))
+      .groupBy("doc_id").agg(min("m_id").as("exact_id"))
+    val nearIds = withBands(p, "fingerprint", bandBits)
+      .join(withBands(s, "m_fp", bandBits, "m_b", "m_bits"),
+        col("cls") === col("m_cls") && col("b") === col("m_b") &&
+          col("bits") === col("m_bits"))
+      .filter(expr(s"bit_count(fingerprint ^ m_fp) BETWEEN 1 AND $HammingMax"))
+      .groupBy("doc_id").agg(min("m_id").as("near_id"))
+    p.select("doc_id")
+      .join(exactIds, Seq("doc_id"), "left")
+      .join(nearIds, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("exact_id").isNotNull, exact)
+          .when(col("near_id").isNotNull, near)
+          .otherwise("new").as("verdict"),
+        coalesce(col("exact_id"), col("near_id")).as("match_id"))
+  }
+
+  /** The image intake verdict ([[verdictsOf]] over grid rows `(doc_id,
+    * gy, fingerprint)`): `exact_phash` / `near_phash` / `new`.
+    */
+  def phashVerdictsOf(probes: DataFrame, standing: DataFrame): DataFrame =
+    verdictsOf(probes, standing, "gy", GridBandBits, "exact_phash", "near_phash")
+
+  /** The video/audio intake verdict ([[verdictsOf]] over take signatures
+    * `(doc_id, n_frames, fingerprint)`): `exact_sig` / `near_sig` / `new`.
+    */
+  def sigVerdictsOf(probes: DataFrame, standing: DataFrame): DataFrame =
+    verdictsOf(probes, standing, "n_frames", SigBandBits, "exact_sig", "near_sig")
+
+  /** Oracle twin of [[sigGroups]] over the signature CTE `src` of the
+    * replay `ctes`.
+    */
+  private def sigGroupsSql(ctes: String, src: String, cls: String,
+      outCol: String): String =
+    s"""WITH $ctes
+       |SELECT $cls AS $outCol, fingerprint,
+       |       CAST(count(*) AS BIGINT) AS n_docs,
+       |       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
+       |         AS doc_ids
+       |FROM $src GROUP BY $cls, fingerprint HAVING count(*) >= 2
+       |ORDER BY $outCol, fingerprint""".stripMargin
+
+  /** Oracle twin of [[hammingPairs]] over the signature CTE `src` of the
+    * replay `ctes`.
+    */
+  private def hammingPairsSql(ctes: String, src: String, cls: String,
+      outCol: String, bandBits: Int): String =
+    s"""WITH $ctes, grp AS (
+       |  SELECT $cls, fingerprint, CAST(count(*) AS BIGINT) AS n_docs
+       |  FROM $src GROUP BY $cls, fingerprint
+       |), bands AS (
+       |  SELECT $cls, fingerprint, n_docs,
+       |         unnest(generate_series(0, ${HammingBands - 1})) AS b
+       |  FROM grp
+       |), b2 AS (
+       |  SELECT $cls, fingerprint, n_docs, b,
+       |         (fingerprint >> CAST($bandBits * b AS INTEGER))
+       |           & ${(1L << bandBits) - 1} AS bits
+       |  FROM bands
+       |), cand AS (
+       |  SELECT DISTINCT a.$cls, a.fingerprint AS fp_a, a.n_docs AS n_docs_a,
+       |         c.fingerprint AS fp_b, c.n_docs AS n_docs_b
+       |  FROM b2 a JOIN b2 c ON a.$cls = c.$cls AND a.b = c.b
+       |    AND a.bits = c.bits AND a.fingerprint < c.fingerprint
+       |)
+       |SELECT $cls AS $outCol, fp_a, fp_b,
+       |       CAST(bit_count(xor(fp_a, fp_b)) AS INTEGER) AS hamming,
+       |       n_docs_a, n_docs_b
+       |FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= $HammingMax
+       |ORDER BY $outCol, fp_a, fp_b""".stripMargin
+
   // ---- q163: perceptual-hash image near-dup ---------------------------------
 
-  /** q163 — multimodal DEDUP: the classic average-hash (aHash) over
-    * q162's grids. Per image, bit c = (cell c's mean ≥ the image's
-    * global pixel mean), compared integer-exactly as
-    * `s_c·N ≥ S·n_c` (no division, no float, no tie ambiguity); the
-    * ≤ 16 bits pack into one BIGINT fingerprint. Images whose
-    * fingerprints collide are perceptual near-duplicates — the
-    * image-dedup posture of the large crawl pipelines, where
-    * re-encoded/lightly-retouched copies survive exact byte dedup but
-    * land on the same coarse luminance shape. Output is the dup groups
-    * (≥ 2 members): grid height (fingerprints are only comparable
-    * within a geometry; gx is constant 4 here since w ≥ 8 by the width
-    * derivation), fingerprint, member count, and the ordered member
-    * list.
-    *
-    * Scale shape: one `mapPartitions` decode pass, per-doc column
-    * arithmetic over a 16-element array, then ONE shuffle on the
-    * fingerprint (the exact-dedup q17 shape — at 100 TB the
-    * fingerprint column is the standing artifact and near-dup at
-    * Hamming distance > 0 adds a band join, exactly like MinHash's).
-    */
   /** The standing `image_grids` artifact rows, one per document: grid
     * geometry, block sums/counts, and the packed aHash fingerprint —
     * q163's scoring stage, shared with q162's thumbnail cells, q165's
@@ -1125,14 +1285,28 @@ object Multimodal {
   private def imageFingerprints(spark: SparkSession, dir: String): DataFrame =
     graft.Artifacts.serve(spark, dir, graft.Artifacts.ImageGridsName)
 
+  /** q163 — multimodal DEDUP: the classic average-hash (aHash) over
+    * q162's grids. Per image, bit c = (cell c's mean ≥ the image's
+    * global pixel mean), compared integer-exactly as
+    * `s_c·N ≥ S·n_c` (no division, no float, no tie ambiguity); the
+    * ≤ 16 bits pack into one BIGINT fingerprint. Images whose
+    * fingerprints collide are perceptual near-duplicates — the
+    * image-dedup posture of the large crawl pipelines, where
+    * re-encoded/lightly-retouched copies survive exact byte dedup but
+    * land on the same coarse luminance shape. Output is the dup groups
+    * (≥ 2 members): grid height (fingerprints are only comparable
+    * within a geometry; gx is constant 4 here since w ≥ 8 by the width
+    * derivation), fingerprint, member count, and the ordered member
+    * list.
+    *
+    * Scale shape: one `mapPartitions` decode pass, per-doc column
+    * arithmetic over a 16-element array, then the shared [[sigGroups]]
+    * core — ONE shuffle on the fingerprint (at 100 TB the fingerprint
+    * column is the standing artifact, and near-dup at Hamming
+    * distance > 0 adds q165's band join, exactly like MinHash's).
+    */
   def q163ImagePhashDups(spark: SparkSession, dir: String): DataFrame =
-    imageFingerprints(spark, dir)
-      .groupBy(col("gy").as("grid_rows"), col("fingerprint"))
-      .agg(count(lit(1)).as("n_docs"),
-        concat_ws(",", transform(sort_array(collect_list(col("doc_id"))),
-          x => x.cast("string"))).as("doc_ids"))
-      .filter(col("n_docs") >= 2)
-      .orderBy("grid_rows", "fingerprint")
+    sigGroups(imageFingerprints(spark, dir), "gy", "grid_rows")
 
   /** The shared fingerprint replay (`base` … `fp`): [[gridCellsCtes]]
     * plus the per-document global totals and the packed aHash bits —
@@ -1153,13 +1327,7 @@ object Multimodal {
        |)""".stripMargin
 
   lazy val q163OracleSql: String =
-    s"""WITH $fpCtes
-       |SELECT gy AS grid_rows, fingerprint,
-       |       CAST(count(*) AS BIGINT) AS n_docs,
-       |       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
-       |         AS doc_ids
-       |FROM fp GROUP BY gy, fingerprint HAVING count(*) >= 2
-       |ORDER BY grid_rows, fingerprint""".stripMargin
+    sigGroupsSql(fpCtes, "fp", "gy", "grid_rows")
 
   // ---- q164: audio frame-window features ------------------------------------
 
@@ -1295,77 +1463,17 @@ object Multimodal {
 
   // ---- q165: banded Hamming near-dup over image fingerprints ----------------
 
-  /** Maximum Hamming distance q165 reports. With [[HammingBands]] bands
-    * over the 16 fingerprint bits, recall at ≤ [[HammingMax]] is EXACT
-    * by pigeonhole: 3 differing bits cannot touch all 4 bands, so every
-    * qualifying pair shares at least one band bucket.
+  /** q165 — NEAR-duplicate images at Hamming distance 1–[[HammingMax]]
+    * over q163's aHash fingerprints: the shared [[hammingPairs]] core
+    * per grid geometry, over [[GridBandBits]]-wide bands of the ≤ 16
+    * fingerprint bits. q163's groups are the distance-0 story; this is
+    * the tail where a retouch moved a cell across the global mean.
     */
-  val HammingMax = 3
-  val HammingBands = 4
-
-  /** q165 — NEAR-duplicate images at Hamming distance 1–[[HammingMax]]:
-    * the band-bucket join over q163's aHash fingerprints, at
-    * FINGERPRINT grain. q163's groups are the distance-0 story (linear
-    * in group size); pairing *documents* at distance > 0 would be
-    * quadratic in the dup-group sizes, so the join runs over the
-    * DISTINCT fingerprints instead — per grid geometry there are at
-    * most 2¹⁶ of them, each band bucket stays tiny, and each emitted
-    * row carries the two groups' document counts so the document-grain
-    * pair count is `n_docs_a·n_docs_b` without materializing it (the
-    * q21/q82 capped-candidate discipline, achieved structurally rather
-    * than by a cap). Bands are 4-bit fingerprint slices — the MinHash
-    * band trick transplanted to Hamming space — and the verdict
-    * `bit_count(xor) ≤ 3` is exact, so the output is
-    * provably-complete near-dup groups, not candidates.
-    *
-    * Scale shape: fingerprint-grain aggregate (≤ 2¹⁶ rows) → 4-row
-    * band explode → equi-join on (geometry, band, bits) → popcount
-    * filter. No doc-grain pair ever exists.
-    */
-  def q165ImageHammingPairs(spark: SparkSession, dir: String): DataFrame = {
-    val grp = imageFingerprints(spark, dir)
-      .groupBy("gy", "fingerprint").agg(count(lit(1)).as("n_docs"))
-    val bands = grp.select(col("gy"), col("fingerprint"), col("n_docs"),
-        explode(sequence(lit(0), lit(HammingBands - 1))).as("b"))
-      .withColumn("bits",
-        expr("shiftright(fingerprint, 4 * b) & CAST(15 AS BIGINT)"))
-    val left = bands.select(col("gy"), col("b"), col("bits"),
-      col("fingerprint").as("fp_a"), col("n_docs").as("n_docs_a"))
-    val right = bands.select(col("gy"), col("b"), col("bits"),
-      col("fingerprint").as("fp_b"), col("n_docs").as("n_docs_b"))
-    left.join(right, Seq("gy", "b", "bits"))
-      .filter(col("fp_a") < col("fp_b"))
-      .select("gy", "fp_a", "n_docs_a", "fp_b", "n_docs_b").distinct()
-      .withColumn("hamming", expr("CAST(bit_count(fp_a ^ fp_b) AS INT)"))
-      .filter(col("hamming") <= HammingMax)
-      .select(col("gy").as("grid_rows"), col("fp_a"), col("fp_b"),
-        col("hamming"), col("n_docs_a"), col("n_docs_b"))
-      .orderBy("grid_rows", "fp_a", "fp_b")
-  }
+  def q165ImageHammingPairs(spark: SparkSession, dir: String): DataFrame =
+    hammingPairs(imageFingerprints(spark, dir), "gy", "grid_rows", GridBandBits)
 
   lazy val q165OracleSql: String =
-    s"""WITH $fpCtes, grp AS (
-       |  SELECT gy, fingerprint, CAST(count(*) AS BIGINT) AS n_docs
-       |  FROM fp GROUP BY gy, fingerprint
-       |), bands AS (
-       |  SELECT gy, fingerprint, n_docs,
-       |         unnest(generate_series(0, ${HammingBands - 1})) AS b
-       |  FROM grp
-       |), b2 AS (
-       |  SELECT gy, fingerprint, n_docs, b,
-       |         (fingerprint >> CAST(4 * b AS INTEGER)) & 15 AS bits
-       |  FROM bands
-       |), cand AS (
-       |  SELECT DISTINCT a.gy, a.fingerprint AS fp_a, a.n_docs AS n_docs_a,
-       |         c.fingerprint AS fp_b, c.n_docs AS n_docs_b
-       |  FROM b2 a JOIN b2 c ON a.gy = c.gy AND a.b = c.b AND a.bits = c.bits
-       |    AND a.fingerprint < c.fingerprint
-       |)
-       |SELECT gy AS grid_rows, fp_a, fp_b,
-       |       CAST(bit_count(xor(fp_a, fp_b)) AS INTEGER) AS hamming,
-       |       n_docs_a, n_docs_b
-       |FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= $HammingMax
-       |ORDER BY grid_rows, fp_a, fp_b""".stripMargin
+    hammingPairsSql(fpCtes, "fp", "gy", "grid_rows", GridBandBits)
 
   // ---- q166: audio quality screen -------------------------------------------
 
@@ -1477,9 +1585,10 @@ object Multimodal {
   private def audioSignatures(spark: SparkSession, dir: String): DataFrame =
     graft.Artifacts.serve(spark, dir, graft.Artifacts.AudioSigsName)
 
-  /** The signature derivation over ANY docs frame — the [[videoSigRows]]
-    * twin in amplitude space: what the standing `audio_sigs` artifact
-    * materializes and what the intake gate runs batch-bounded.
+  /** The signature derivation over ANY docs frame — [[videoSigRows]]'s
+    * quantize-and-pack in amplitude space: what the standing
+    * `audio_sigs` artifact materializes and what the intake gate runs
+    * batch-bounded.
     */
   def audioSigRows(docs: DataFrame): DataFrame =
     audioSigsFromWindows(docs, audioWindowsOf(docs))
@@ -1513,17 +1622,10 @@ object Multimodal {
     * member lists.
     *
     * Scale shape: the one decode pass → per-doc ≤ 3-row aggregate →
-    * ONE shuffle on the signature (the q17/q163/q172 exact-dedup
-    * shape).
+    * the shared [[sigGroups]] core (ONE shuffle on the signature).
     */
   def q176AudioPhashDups(spark: SparkSession, dir: String): DataFrame =
-    audioSignatures(spark, dir)
-      .groupBy(col("n_frames"), col("fingerprint"))
-      .agg(count(lit(1)).as("n_docs"),
-        concat_ws(",", transform(sort_array(collect_list(col("doc_id"))),
-          x => x.cast("string"))).as("doc_ids"))
-      .filter(col("n_docs") >= 2)
-      .orderBy("n_frames", "fingerprint")
+    sigGroups(audioSignatures(spark, dir), "n_frames", "n_frames")
 
   /** The shared signature replay (`base` … `asig`): [[audioWindowCtes]]
     * plus the 4-bit amplitude quantization, the positional pack, and
@@ -1551,66 +1653,19 @@ object Multimodal {
        |)""".stripMargin
 
   lazy val q176OracleSql: String =
-    s"""WITH $audioSigCtes
-       |SELECT n_frames, fingerprint,
-       |       CAST(count(*) AS BIGINT) AS n_docs,
-       |       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
-       |         AS doc_ids
-       |FROM asig GROUP BY n_frames, fingerprint HAVING count(*) >= 2
-       |ORDER BY n_frames, fingerprint""".stripMargin
+    sigGroupsSql(audioSigCtes, "asig", "n_frames", "n_frames")
 
   /** q177 — NEAR-duplicate audio at Hamming 1–[[HammingMax]] over
-    * q176's signatures: the 4×3-bit band-bucket join at SIGNATURE grain
-    * per frame-count class (q165's image tail and q173's video tail, in
-    * amplitude space — the re-master that moved one window's loudness a
-    * quantization step). Pigeonhole-complete at ≤ [[HammingMax]]; each
-    * row carries both groups' member counts.
+    * q176's signatures: the shared [[hammingPairs]] core per
+    * frame-count class over [[SigBandBits]]-wide bands — the re-master
+    * that moved one window's loudness a quantization step.
     */
-  def q177AudioHammingPairs(spark: SparkSession, dir: String): DataFrame = {
-    val grp = audioSignatures(spark, dir)
-      .groupBy("n_frames", "fingerprint").agg(count(lit(1)).as("n_docs"))
-    val bands = grp.select(col("n_frames"), col("fingerprint"), col("n_docs"),
-        explode(sequence(lit(0), lit(VideoHammingBands - 1))).as("b"))
-      .withColumn("bits",
-        expr("shiftright(fingerprint, 3 * b) & CAST(7 AS BIGINT)"))
-    val left = bands.select(col("n_frames"), col("b"), col("bits"),
-      col("fingerprint").as("fp_a"), col("n_docs").as("n_docs_a"))
-    val right = bands.select(col("n_frames"), col("b"), col("bits"),
-      col("fingerprint").as("fp_b"), col("n_docs").as("n_docs_b"))
-    left.join(right, Seq("n_frames", "b", "bits"))
-      .filter(col("fp_a") < col("fp_b"))
-      .select("n_frames", "fp_a", "n_docs_a", "fp_b", "n_docs_b").distinct()
-      .withColumn("hamming", expr("CAST(bit_count(fp_a ^ fp_b) AS INT)"))
-      .filter(col("hamming") <= HammingMax)
-      .select(col("n_frames"), col("fp_a"), col("fp_b"),
-        col("hamming"), col("n_docs_a"), col("n_docs_b"))
-      .orderBy("n_frames", "fp_a", "fp_b")
-  }
+  def q177AudioHammingPairs(spark: SparkSession, dir: String): DataFrame =
+    hammingPairs(audioSignatures(spark, dir), "n_frames", "n_frames",
+      SigBandBits)
 
   lazy val q177OracleSql: String =
-    s"""WITH $audioSigCtes, grp AS (
-       |  SELECT n_frames, fingerprint, CAST(count(*) AS BIGINT) AS n_docs
-       |  FROM asig GROUP BY n_frames, fingerprint
-       |), bands AS (
-       |  SELECT n_frames, fingerprint, n_docs,
-       |         unnest(generate_series(0, ${VideoHammingBands - 1})) AS b
-       |  FROM grp
-       |), b2 AS (
-       |  SELECT n_frames, fingerprint, n_docs, b,
-       |         (fingerprint >> CAST(3 * b AS INTEGER)) & 7 AS bits
-       |  FROM bands
-       |), cand AS (
-       |  SELECT DISTINCT a.n_frames, a.fingerprint AS fp_a,
-       |         a.n_docs AS n_docs_a,
-       |         c.fingerprint AS fp_b, c.n_docs AS n_docs_b
-       |  FROM b2 a JOIN b2 c ON a.n_frames = c.n_frames AND a.b = c.b
-       |    AND a.bits = c.bits AND a.fingerprint < c.fingerprint
-       |)
-       |SELECT n_frames, fp_a, fp_b,
-       |       CAST(bit_count(xor(fp_a, fp_b)) AS INTEGER) AS hamming,
-       |       n_docs_a, n_docs_b
-       |FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= $HammingMax
-       |ORDER BY n_frames, fp_a, fp_b""".stripMargin
+    hammingPairsSql(audioSigCtes, "asig", "n_frames", "n_frames", SigBandBits)
 
   // ---- q167: image-embedding kNN --------------------------------------------
 
@@ -1819,23 +1874,6 @@ object Multimodal {
 
   // ---- q172: video perceptual dedup -------------------------------------------
 
-  /** q172 — VIDEO perceptual dedup, closing the dedup story across all
-    * three modalities (q163 images, q165 their Hamming tail — this is
-    * the video analog): each take's signature is its sampled frames'
-    * luma means quantized to 4 bits each
-    * (`min(⌊sum·16 ÷ (255·n_px)⌋, 15)` — integer-exact, no float, no
-    * tie ambiguity) packed by sample position into one BIGINT, keyed
-    * by the take's frame count (signatures are only comparable within
-    * a length class, the q163 geometry rule). Takes sharing
-    * (n_frames, signature) are perceptual near-duplicates — the same
-    * footage re-containered or lightly re-encoded lands on the same
-    * coarse luma trajectory. Output is the dup groups (≥ 2 members)
-    * with ordered member lists.
-    *
-    * Scale shape: the one decode pass → per-doc 3-row aggregate →
-    * ONE shuffle on the signature (the q17/q163 exact-dedup shape; at
-    * 100 TB the signature column joins the standing artifacts).
-    */
   /** The per-take quantized luma signature `(doc_id, n_frames,
     * fingerprint)` — q172's scoring stage, shared with q173's banded
     * Hamming join (one derivation, the q163/q165 split at video grain).
@@ -1857,15 +1895,25 @@ object Multimodal {
       .groupBy("doc_id", "n_frames")
       .agg(sum(expr("shiftleft(q, 4 * frame_idx)")).as("fingerprint"))
 
-  def q172VideoPhashDups(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = videoSignatures(spark, dir)
-    sigs.groupBy(col("n_frames"), col("fingerprint"))
-      .agg(count(lit(1)).as("n_docs"),
-        concat_ws(",", transform(sort_array(collect_list(col("doc_id"))),
-          x => x.cast("string"))).as("doc_ids"))
-      .filter(col("n_docs") >= 2)
-      .orderBy("n_frames", "fingerprint")
-  }
+  /** q172 — VIDEO perceptual dedup, closing the dedup story across all
+    * three modalities (q163 images, q165 their Hamming tail — this is
+    * the video analog): each take's signature is its sampled frames'
+    * luma means quantized to 4 bits each
+    * (`min(⌊sum·16 ÷ (255·n_px)⌋, 15)` — integer-exact, no float, no
+    * tie ambiguity) packed by sample position into one BIGINT, keyed
+    * by the take's frame count (signatures are only comparable within
+    * a length class, the q163 geometry rule). Takes sharing
+    * (n_frames, signature) are perceptual near-duplicates — the same
+    * footage re-containered or lightly re-encoded lands on the same
+    * coarse luma trajectory. Output is the dup groups (≥ 2 members)
+    * with ordered member lists.
+    *
+    * Scale shape: the one decode pass → per-doc 3-row aggregate →
+    * the shared [[sigGroups]] core (ONE shuffle on the signature; at
+    * 100 TB the signature column joins the standing artifacts).
+    */
+  def q172VideoPhashDups(spark: SparkSession, dir: String): DataFrame =
+    sigGroups(videoSignatures(spark, dir), "n_frames", "n_frames")
 
   /** The shared signature replay (`base` … `sig`): [[videoFrameCtes]]
     * plus the 4-bit quantization and the positional pack — q172 groups
@@ -1885,199 +1933,23 @@ object Multimodal {
        |)""".stripMargin
 
   lazy val q172OracleSql: String =
-    s"""WITH $videoSigCtes
-       |SELECT nf AS n_frames, fingerprint,
-       |       CAST(count(*) AS BIGINT) AS n_docs,
-       |       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
-       |         AS doc_ids
-       |FROM sig GROUP BY nf, fingerprint HAVING count(*) >= 2
-       |ORDER BY n_frames, fingerprint""".stripMargin
+    sigGroupsSql(videoSigCtes, "sig", "nf", "n_frames")
 
   // ---- q173: banded Hamming near-dup over video signatures -------------------
 
-  /** q173's band geometry: [[VideoHammingBands]] bands of 3 bits over
-    * the ≤ 12-bit signature (4 bits × ≤ [[Y4mSamples]] sampled frames).
-    * Recall at Hamming ≤ [[HammingMax]] is EXACT by pigeonhole — 3
-    * differing bits cannot touch all 4 bands — the q165 argument at
-    * video grain. Takes with fewer than [[Y4mSamples]] sampled frames
-    * have shorter signatures; the `n_frames` key already separates
-    * length classes, and their constantly-zero high bands are harmless
-    * (every class member shares them, adding candidates only within
-    * the class).
-    */
-  val VideoHammingBands = 4
-
   /** q173 — NEAR-duplicate videos at Hamming distance 1–[[HammingMax]]
-    * over q172's quantized luma signatures: the band-bucket join at
-    * SIGNATURE grain (q165's shape — q172's groups are the distance-0
-    * story; this is the tail where one sampled frame's coarse luma
-    * moved a quantization step, the re-encode/re-grade case). Each row
-    * carries both groups' member counts, so the document-grain pair
-    * count is `n_docs_a·n_docs_b` without materializing it.
-    *
-    * Scale shape: signature-grain aggregate → 4-row band explode →
-    * equi-join on (length class, band, bits) → popcount filter. No
-    * doc-grain pair ever exists.
+    * over q172's quantized luma signatures: the shared [[hammingPairs]]
+    * core per frame-count class, over [[SigBandBits]]-wide bands of the
+    * ≤ 12-bit signature (4 bits × ≤ [[Y4mSamples]] sampled frames) —
+    * the tail where one sampled frame's coarse luma moved a
+    * quantization step, the re-encode/re-grade case.
     */
-  def q173VideoHammingPairs(spark: SparkSession, dir: String): DataFrame = {
-    val grp = videoSignatures(spark, dir)
-      .groupBy("n_frames", "fingerprint").agg(count(lit(1)).as("n_docs"))
-    val bands = grp.select(col("n_frames"), col("fingerprint"), col("n_docs"),
-        explode(sequence(lit(0), lit(VideoHammingBands - 1))).as("b"))
-      .withColumn("bits",
-        expr("shiftright(fingerprint, 3 * b) & CAST(7 AS BIGINT)"))
-    val left = bands.select(col("n_frames"), col("b"), col("bits"),
-      col("fingerprint").as("fp_a"), col("n_docs").as("n_docs_a"))
-    val right = bands.select(col("n_frames"), col("b"), col("bits"),
-      col("fingerprint").as("fp_b"), col("n_docs").as("n_docs_b"))
-    left.join(right, Seq("n_frames", "b", "bits"))
-      .filter(col("fp_a") < col("fp_b"))
-      .select("n_frames", "fp_a", "n_docs_a", "fp_b", "n_docs_b").distinct()
-      .withColumn("hamming", expr("CAST(bit_count(fp_a ^ fp_b) AS INT)"))
-      .filter(col("hamming") <= HammingMax)
-      .select(col("n_frames"), col("fp_a"), col("fp_b"),
-        col("hamming"), col("n_docs_a"), col("n_docs_b"))
-      .orderBy("n_frames", "fp_a", "fp_b")
-  }
+  def q173VideoHammingPairs(spark: SparkSession, dir: String): DataFrame =
+    hammingPairs(videoSignatures(spark, dir), "n_frames", "n_frames",
+      SigBandBits)
 
   lazy val q173OracleSql: String =
-    s"""WITH $videoSigCtes, grp AS (
-       |  SELECT nf, fingerprint, CAST(count(*) AS BIGINT) AS n_docs
-       |  FROM sig GROUP BY nf, fingerprint
-       |), bands AS (
-       |  SELECT nf, fingerprint, n_docs,
-       |         unnest(generate_series(0, ${VideoHammingBands - 1})) AS b
-       |  FROM grp
-       |), b2 AS (
-       |  SELECT nf, fingerprint, n_docs, b,
-       |         (fingerprint >> CAST(3 * b AS INTEGER)) & 7 AS bits
-       |  FROM bands
-       |), cand AS (
-       |  SELECT DISTINCT a.nf, a.fingerprint AS fp_a, a.n_docs AS n_docs_a,
-       |         c.fingerprint AS fp_b, c.n_docs AS n_docs_b
-       |  FROM b2 a JOIN b2 c ON a.nf = c.nf AND a.b = c.b AND a.bits = c.bits
-       |    AND a.fingerprint < c.fingerprint
-       |)
-       |SELECT nf AS n_frames, fp_a, fp_b,
-       |       CAST(bit_count(xor(fp_a, fp_b)) AS INTEGER) AS hamming,
-       |       n_docs_a, n_docs_b
-       |FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= $HammingMax
-       |ORDER BY n_frames, fp_a, fp_b""".stripMargin
-
-  // ---- phash verdict core (intake gate) --------------------------------------
-
-  /** The gate cores' standing side at distinct-signature grain: one
-    * `(keyCol, fingerprint, min_id)` row per distinct signature. Both
-    * verdict paths reduce to `min(doc_id)` over the matches, and a
-    * group's min is preserved by taking the min per distinct signature
-    * first — so this is a pure re-bracketing of the same aggregate,
-    * while the exact and band joins downstream see each corpus
-    * signature once however many takes carry it.
-    */
-  private[graft] def distinctStanding(standing: DataFrame, keyCol: String): DataFrame =
-    standing.groupBy(col(keyCol), col("fingerprint"))
-      .agg(min(col("doc_id")).as("min_id"))
-
-  /** Verdict core for the perceptual-dup INTAKE gate: probe grid rows
-    * `(doc_id, gy, fingerprint)` against a standing grid frame —
-    * `exact_phash` when an identical (geometry, fingerprint) exists,
-    * `near_phash` at Hamming 1–[[HammingMax]] through q165's band
-    * join (complete by pigeonhole), else `new`; `match_id` = the
-    * smallest matching standing doc, exact winning over near. The
-    * probe side is batch-bounded; the standing side is one artifact
-    * read plus map-only band arithmetic — no corpus media is ever
-    * re-decoded.
-    *
-    * The standing side joins at DISTINCT-SIGNATURE grain: both exact
-    * and near resolve to `min(doc_id)`, so collapsing the frame to one
-    * `(geometry, fingerprint) → min(doc_id)` row first is
-    * verdict-identical ([[distinctStanding]]) — and it bounds band-
-    * bucket population by DISTINCT fingerprints, not take count. A
-    * boilerplate image with k corpus copies would otherwise put k rows
-    * in every one of its band buckets and fan each probe out k ways —
-    * the same signature-grain argument the q165/q173 batch tails make.
-    */
-  def phashVerdictsOf(probes: DataFrame, standing: DataFrame): DataFrame = {
-    val p = probes.select("doc_id", "gy", "fingerprint")
-    val s = distinctStanding(standing, "gy")
-      .select(col("min_id").as("m_id"), col("gy").as("m_gy"),
-        col("fingerprint").as("m_fp"))
-    val exact = p
-      .join(s, col("gy") === col("m_gy") && col("fingerprint") === col("m_fp"))
-      .groupBy("doc_id").agg(min("m_id").as("exact_id"))
-    val pb = p.select(col("doc_id"), col("gy"), col("fingerprint"),
-        explode(sequence(lit(0), lit(HammingBands - 1))).as("b"))
-      .withColumn("bits",
-        expr("shiftright(fingerprint, 4 * b) & CAST(15 AS BIGINT)"))
-    val sb = s.select(col("m_id"), col("m_gy"), col("m_fp"),
-        explode(sequence(lit(0), lit(HammingBands - 1))).as("m_b"))
-      .withColumn("m_bits",
-        expr("shiftright(m_fp, 4 * m_b) & CAST(15 AS BIGINT)"))
-    val near = pb
-      .join(sb, col("gy") === col("m_gy") && col("b") === col("m_b") &&
-        col("bits") === col("m_bits"))
-      .filter(expr(s"bit_count(fingerprint ^ m_fp) BETWEEN 1 AND $HammingMax"))
-      .groupBy("doc_id").agg(min("m_id").as("near_id"))
-    p.select("doc_id")
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_id").isNotNull, "exact_phash")
-          .when(col("near_id").isNotNull, "near_phash")
-          .otherwise("new").as("verdict"),
-        coalesce(col("exact_id"), col("near_id")).as("match_id"))
-  }
-
-  /** Verdict core for the VIDEO/AUDIO perceptual-dup intake gates —
-    * [[phashVerdictsOf]] over the `(doc_id, n_frames, fingerprint)`
-    * signature shape both modalities share: `exact_sig` when an
-    * identical (length class, signature) exists in the standing frame,
-    * `near_sig` at Hamming 1–[[HammingMax]] through the
-    * [[VideoHammingBands]]×3-bit band join (complete by pigeonhole —
-    * the q173/q177 argument), else `new`; `match_id` = the smallest
-    * matching standing doc, exact winning over near. The probe side is
-    * batch-bounded; the standing side is one artifact read plus
-    * map-only band arithmetic — corpus media is never re-decoded at
-    * batch time.
-    *
-    * Like [[phashVerdictsOf]], the standing side joins at
-    * DISTINCT-SIGNATURE grain ([[distinctStanding]]): band-bucket
-    * population bounds by distinct signatures, so a duplicate-flooded
-    * corpus take cannot fan the gate's band join out per copy.
-    */
-  def sigVerdictsOf(probes: DataFrame, standing: DataFrame): DataFrame = {
-    val p = probes.select(col("doc_id"),
-      col("n_frames").cast("long").as("n_frames"), col("fingerprint"))
-    val s = distinctStanding(standing, "n_frames")
-      .select(col("min_id").as("m_id"),
-        col("n_frames").cast("long").as("m_nf"),
-        col("fingerprint").as("m_fp"))
-    val exact = p
-      .join(s, col("n_frames") === col("m_nf") &&
-        col("fingerprint") === col("m_fp"))
-      .groupBy("doc_id").agg(min("m_id").as("exact_id"))
-    val pb = p.select(col("doc_id"), col("n_frames"), col("fingerprint"),
-        explode(sequence(lit(0), lit(VideoHammingBands - 1))).as("b"))
-      .withColumn("bits",
-        expr("shiftright(fingerprint, 3 * b) & CAST(7 AS BIGINT)"))
-    val sb = s.select(col("m_id"), col("m_nf"), col("m_fp"),
-        explode(sequence(lit(0), lit(VideoHammingBands - 1))).as("m_b"))
-      .withColumn("m_bits",
-        expr("shiftright(m_fp, 3 * m_b) & CAST(7 AS BIGINT)"))
-    val near = pb
-      .join(sb, col("n_frames") === col("m_nf") && col("b") === col("m_b") &&
-        col("bits") === col("m_bits"))
-      .filter(expr(s"bit_count(fingerprint ^ m_fp) BETWEEN 1 AND $HammingMax"))
-      .groupBy("doc_id").agg(min("m_id").as("near_id"))
-    p.select("doc_id")
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_id").isNotNull, "exact_sig")
-          .when(col("near_id").isNotNull, "near_sig")
-          .otherwise("new").as("verdict"),
-        coalesce(col("exact_id"), col("near_id")).as("match_id"))
-  }
+    hammingPairsSql(videoSigCtes, "sig", "nf", "n_frames", SigBandBits)
 
   // ---- q168: the multimodal curation ledger ----------------------------------
 

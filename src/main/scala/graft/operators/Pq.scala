@@ -112,17 +112,15 @@ object Pq {
     * deterministic hash sample of the subvector frame
     * ([[Ivf.TrainSampleTarget]] vectors — the same sampled-codebook
     * discipline as [[Ivf.train]]; the corpus-wide pass is only the
-    * final [[codesFrame]] encoding), each iteration ONE pass covering
-    * all [[SubM]] subspaces at once (the q125 discipline — per
-    * iteration the driver collects only the ([[SubM]] × [[PqK]] ×
-    * [[SubDim]]) sum/count aggregate). Init = the [[PqK]] smallest
-    * sampled `vec_id`s' subvectors per subspace, codeword ids in that
-    * order; an emptied codeword keeps its previous value.
-    * `sampled = false` is the spec's full-training knob.
+    * final [[codesFrame]] encoding), the sample collected once and
+    * each iteration ONE driver-local pass covering all [[SubM]]
+    * subspaces at once. Init = the [[PqK]] smallest sampled `vec_id`s'
+    * subvectors per subspace, codeword ids in that order; an emptied
+    * codeword keeps its previous value. `spark` is unused; the artifact
+    * builds and `EmbeddingArtifactsSpec` call it with their session.
     */
-  private[graft] def train(spark: SparkSession, sub: DataFrame,
-      sampled: Boolean = true): Seq[(Int, Int, Array[Long])] = {
-    if (!sampled) return trainDistributed(spark, sub)
+  private[graft] def train(spark: SparkSession,
+      sub: DataFrame): Seq[(Int, Int, Array[Long])] = {
     val mod = Ivf.sampleModulus(sub.select("vec_id").distinct().count())
     val tsub =
       if (mod == 1L) sub
@@ -143,8 +141,7 @@ object Pq {
       s
     }
     // init: the PqK smallest sampled ids' subvectors, per subspace —
-    // min(PqK, n) codewords on a tiny corpus (the distributed form's
-    // limit(PqK) degradation)
+    // min(PqK, n) codewords on a tiny corpus
     val initIds = ids.take(PqK)
     val kk = initIds.length
     var cb: Array[Array[Array[Long]]] = Array.tabulate(SubM) { m =>
@@ -176,40 +173,6 @@ object Pq {
       }
     }
     (for (m <- 0 until SubM; k <- 0 until kk) yield (m, k, cb(m)(k))).toSeq
-  }
-
-  /** The distributed full-frame fused loop: each iteration ONE pass over
-    * the subvector frame covering all [[SubM]] subspaces, with only the
-    * ([[SubM]] × [[PqK]] × [[SubDim]]) sum/count aggregate collected —
-    * the sampled-vs-full eval knob, never the production path.
-    */
-  private def trainDistributed(spark: SparkSession,
-      sub: DataFrame): Seq[(Int, Int, Array[Long])] = {
-    val init = sub.filter(col("vec_id").isin(
-        sub.select("vec_id").distinct().orderBy("vec_id").limit(PqK)
-          .collect().map(_.getAs[Long]("vec_id")).toSeq: _*))
-      .collect()
-      .groupBy(_.getAs[Int]("m")).toSeq.flatMap { case (m, rows) =>
-        rows.sortBy(_.getAs[Long]("vec_id")).zipWithIndex.map {
-          case (r, k) =>
-            (m, k, r.getAs[scala.collection.Seq[Long]]("sq").toArray)
-        }
-      }
-    (1 to PqIters).foldLeft(init) { case (cb, _) =>
-      val sums = assign(sub, codebookFrame(spark, cb))
-        .select(col("m"), col("k"), posexplode(col("sq")).as(Seq("pos", "v")))
-        .groupBy("m", "k", "pos")
-        .agg(sum("v").as("s"), count(lit(1)).as("n"))
-        .collect()
-        .groupBy(r => (r.getAs[Int]("m"), r.getAs[Int]("k")))
-      cb.map { case (m, k, old) =>
-        (m, k, sums.get((m, k)).map { rows =>
-          rows.sortBy(_.getAs[Int]("pos"))
-            .map(r => Ivf.roundDiv(r.getAs[Long]("s"), r.getAs[Long]("n")))
-            .toArray
-        }.getOrElse(old))
-      }
-    }
   }
 
   /** q139 — PQ-ADC recall vs the exact integer-L2 baseline, per probe:

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.Tables
+import graft.Artifacts.{AudioSigsName, ImageGridsName, VideoSigsName}
+import graft.operators.Multimodal
 import graft.functions.Parity.round2
 import graft.sources.Sinks
 
@@ -671,8 +673,7 @@ object StreamingOps {
       corpusDir: String, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     import graft.operators.{CorpusOps, Dedup}
-    val b = batch.dropDuplicates(idCol)
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    val b = batchDocs(batch, idCol, textCol)
     CorpusOps.dedupVerdictsOf(
       b.select("doc_id"),
       graft.Artifacts.docHashesFrame(b),
@@ -699,18 +700,13 @@ object StreamingOps {
     */
   def imageDupOfBatch(batch: DataFrame, spark: SparkSession,
       corpusDir: String, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    import graft.operators.Multimodal
-    val b = batch.dropDuplicates(idCol)
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    Multimodal.phashVerdictsOf(
-      Multimodal.imageGridRows(b),
-      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.ImageGridsName))
-      .withColumnRenamed("doc_id", idCol)
-  }
+      textCol: String = "text"): DataFrame =
+    mediaDupOfBatch(batch, spark, corpusDir, idCol, textCol,
+      Multimodal.imageGridRows, ImageGridsName, Multimodal.phashVerdictsOf)
 
-  /** q172/q173's perceptual verdict at INTAKE time — the VIDEO twin of
-    * [[imageDupOfBatch]]: each arriving take decoded batch-bounded,
+  /** q172/q173's perceptual verdict at INTAKE time — the VIDEO gate,
+    * [[imageDupOfBatch]]'s body ([[mediaDupOfBatch]]) over takes: each
+    * arriving take decoded batch-bounded,
     * reduced to its quantized luma signature
     * (`Multimodal.videoSigRows`), and verdicted against the STANDING
     * `video_sigs` artifact through the shared
@@ -725,33 +721,41 @@ object StreamingOps {
     */
   def videoDupOfBatch(batch: DataFrame, spark: SparkSession,
       corpusDir: String, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    import graft.operators.Multimodal
-    val b = batch.dropDuplicates(idCol)
-      .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    Multimodal.sigVerdictsOf(
-      Multimodal.videoSigRows(b),
-      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.VideoSigsName))
-      .withColumnRenamed("doc_id", idCol)
-  }
+      textCol: String = "text"): DataFrame =
+    mediaDupOfBatch(batch, spark, corpusDir, idCol, textCol,
+      Multimodal.videoSigRows, VideoSigsName, Multimodal.sigVerdictsOf)
 
-  /** q176/q177's perceptual verdict at INTAKE time — the AUDIO twin of
-    * [[videoDupOfBatch]] (amplitude space, `Multimodal.audioSigRows`
+  /** q176/q177's perceptual verdict at INTAKE time — the AUDIO gate,
+    * [[videoDupOfBatch]] in amplitude space (`Multimodal.audioSigRows`
     * against the standing `audio_sigs`), completing the per-modality
     * dup gate set: text, image, video, and audio arrivals all verdict
     * at the door through their standing signature state.
     */
   def audioDupOfBatch(batch: DataFrame, spark: SparkSession,
       corpusDir: String, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    import graft.operators.Multimodal
-    val b = batch.dropDuplicates(idCol)
+      textCol: String = "text"): DataFrame =
+    mediaDupOfBatch(batch, spark, corpusDir, idCol, textCol,
+      Multimodal.audioSigRows, AudioSigsName, Multimodal.sigVerdictsOf)
+
+  /** The arriving batch at doc grain as `(doc_id, text)`: at-least-once
+    * delivery absorbed by an arbitrary-but-single row per id.
+    */
+  private def batchDocs(batch: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    batch.dropDuplicates(idCol)
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    Multimodal.sigVerdictsOf(
-      Multimodal.audioSigRows(b),
-      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.AudioSigsName))
+
+  /** The three perceptual gates' one body: the deduped batch reduced to
+    * its signature rows by `sigRows`, verdicted by `verdictsOf` against
+    * the standing signature `artifact`.
+    */
+  private def mediaDupOfBatch(batch: DataFrame, spark: SparkSession,
+      corpusDir: String, idCol: String, textCol: String,
+      sigRows: DataFrame => DataFrame, artifact: String,
+      verdictsOf: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    verdictsOf(sigRows(batchDocs(batch, idCol, textCol)),
+      graft.Artifacts.serve(spark, corpusDir, artifact))
       .withColumnRenamed("doc_id", idCol)
-  }
 
   /** q166's audio QUALITY screen at INTAKE time — the seventh gate:
     * each arriving document's take decoded (batch-bounded — only the
@@ -767,9 +771,7 @@ object StreamingOps {
     */
   def audioQualityOfBatch(batch: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
-    graft.operators.Multimodal.audioVerdictsOf(
-      batch.dropDuplicates(idCol)
-        .select(col(idCol).as("doc_id"), col(textCol).as("text")))
+    Multimodal.audioVerdictsOf(batchDocs(batch, idCol, textCol))
       .withColumnRenamed("doc_id", idCol)
 
   /** q158's TRAINED quality verdict at INTAKE time — the fifth gate:
@@ -859,10 +861,14 @@ object StreamingOps {
   def intakeOfBatch(batch: DataFrame, spark: SparkSession, corpusDir: String,
       gate: Option[graft.operators.QualityTrain.TrainedGate] = None,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import graft.operators.{CorpusOps, Dedup, EvalSets, Multimodal, TextAnalysis}
+    import graft.operators.{CorpusOps, Dedup, EvalSets, TextAnalysis}
     val ck = (df: DataFrame) => graft.Checkpoints.checkpoint(df)
-    val b = ck(batch.dropDuplicates(idCol)
-      .select(col(idCol).as("doc_id"), col(textCol).as("text")))
+    val serve = graft.Artifacts.serve(spark, corpusDir, _: String)
+    // a gate's (verdict, match_id) pair under the gate's column prefix
+    def prefixed(m: String, verdicts: DataFrame) = verdicts
+      .withColumnRenamed("verdict", s"${m}_verdict")
+      .withColumnRenamed("match_id", s"${m}_match_id")
+    val b = ck(batchDocs(batch, idCol, textCol))
 
     // ONE tokenize: both shingle widths derive from the same arrays
     val toks = ck(b.select(col("doc_id"), Dedup.tokens(col("text")).as("toks")))
@@ -876,20 +882,17 @@ object StreamingOps {
     val grids = ck(Multimodal.imageGridRows(b))
     val videoSigs = ck(Multimodal.videoSigRows(b))
 
-    val textDup = CorpusOps.dedupVerdictsOf(
+    val textDup = prefixed("dedup", CorpusOps.dedupVerdictsOf(
       b.select("doc_id"),
       graft.Artifacts.docHashesFrame(b),
       Dedup.bandedSignaturesFrom(sh3),
-      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.DocHashesName),
-      graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.MinhashBandsName))
-      .withColumnRenamed("verdict", "dedup_verdict")
-      .withColumnRenamed("match_id", "dedup_match_id")
+      serve(graft.Artifacts.DocHashesName),
+      serve(graft.Artifacts.MinhashBandsName)))
     val novelty = CorpusOps.noveltyOfShingles(b.select("doc_id"), sh8,
-      Seq("doc_id"), graft.Artifacts.serve(spark, corpusDir,
-        graft.Artifacts.Shingles8Name))
+      Seq("doc_id"), serve(graft.Artifacts.Shingles8Name))
     val contam = EvalSets.contaminationOfShingles(
         sh8.filter(!EvalSets.inAnySet(col("doc_id"))), "doc_id",
-        graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.EvalShinglesName))
+        serve(graft.Artifacts.EvalShinglesName))
       .groupBy("doc_id").agg(count(lit(1)).as("n_eval_sets"))
     val quality = gate.fold(TextAnalysis.scoredQuality(b, "text"))(g =>
         TextAnalysis.scoredQuality(b, "text", g.model))
@@ -901,19 +904,12 @@ object StreamingOps {
     val audioQuality = Multimodal.audioVerdictsFromWindows(b, audioWin)
       .select(col("doc_id"), col("clipped").as("audio_clipped"),
         col("silent").as("audio_silent"), col("keep").as("audio_keep"))
-    val imageDup = Multimodal.phashVerdictsOf(grids,
-        graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.ImageGridsName))
-      .withColumnRenamed("verdict", "image_verdict")
-      .withColumnRenamed("match_id", "image_match_id")
-    val videoDup = Multimodal.sigVerdictsOf(videoSigs,
-        graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.VideoSigsName))
-      .withColumnRenamed("verdict", "video_verdict")
-      .withColumnRenamed("match_id", "video_match_id")
-    val audioDup = Multimodal.sigVerdictsOf(
-        Multimodal.audioSigsFromWindows(b, audioWin),
-        graft.Artifacts.serve(spark, corpusDir, graft.Artifacts.AudioSigsName))
-      .withColumnRenamed("verdict", "audio_verdict")
-      .withColumnRenamed("match_id", "audio_match_id")
+    val imageDup = prefixed("image",
+      Multimodal.phashVerdictsOf(grids, serve(ImageGridsName)))
+    val videoDup = prefixed("video",
+      Multimodal.sigVerdictsOf(videoSigs, serve(VideoSigsName)))
+    val audioDup = prefixed("audio", Multimodal.sigVerdictsOf(
+      Multimodal.audioSigsFromWindows(b, audioWin), serve(AudioSigsName)))
 
     b.select("doc_id")
       .join(textDup, Seq("doc_id"), "left")

@@ -194,4 +194,71 @@ class CompositeIntakeSpec extends SparkSpec {
     assert(gridGot(100L) == (("exact_phash", Some(10L))))
     assert(gridGot(101L) == (("near_phash", Some(10L))))
   }
+
+  test("band layout: verdicts at Hamming 1–4 across every band ≡ brute force") {
+    // (core, class column, signature bits, labels) — the image grid
+    // fingerprint is 16 bits in 4-bit bands, the video/audio signature
+    // 12 bits in 3-bit bands
+    val cores = Seq(
+      (Multimodal.phashVerdictsOf _, "gy", 16, "exact_phash", "near_phash"),
+      (Multimodal.sigVerdictsOf _, "n_frames", 12, "exact_sig", "near_sig"))
+    for ((core, cls, width, exact, near) <- cores) {
+      val w = width / 4
+      val full = (1L << width) - 1
+      // standing: class 7 holds three signatures (one carried by two
+      // docs, so the min id must win); class 3 holds a signature the
+      // class-7 probes must never match
+      val standing = Seq((10L, 7L, 0L), (11L, 7L, 0x5c3L & full),
+        (12L, 7L, full), (13L, 7L, 0x5c3L & full), (20L, 3L, 0x5c3L & full))
+      // flips spread over every band, the top band included; the
+      // band-boundary triples (w, 2w, 3w) and (w-1, 2w-1, 3w-1) touch
+      // all four bands of any layout whose bands overlap by one bit
+      val flips = Seq(Seq.empty[Int],
+        Seq(0), Seq(2 * w - 1), Seq(width - 1),
+        Seq(w - 1, 3 * w), Seq(w + 1, 2 * w + 1), Seq(width - 2, width - 1),
+        Seq(w, 2 * w, 3 * w), Seq(w - 1, 2 * w - 1, 3 * w - 1),
+        Seq(3 * w, 3 * w + 1, 3 * w + 2), Seq(1, w + 2, 3 * w - 1),
+        Seq(0, w + 1, 2 * w + 2, width - 1), (width - 4 until width))
+      val probeRows = (for {
+        ((_, c, fp), i) <- standing.filter(_._2 == 7L).zipWithIndex
+        (f, j) <- flips.zipWithIndex
+      } yield (1000L + 100 * i + j, c, f.foldLeft(fp)((x, b) => x ^ (1L << b)))) :+
+        ((2000L, 5L, 0L)) // a class with no standing signature
+      def popcount(x: Long) = java.lang.Long.bitCount(x)
+      def mirror(c: Long, fp: Long): (String, Option[Long]) = {
+        val same = standing.filter(_._2 == c)
+        val ex = same.filter(_._3 == fp).map(_._1)
+        val nr = same.filter(t => (1 to 3).contains(popcount(t._3 ^ fp)))
+          .map(_._1)
+        if (ex.nonEmpty) (exact, Some(ex.min))
+        else if (nr.nonEmpty) (near, Some(nr.min))
+        else ("new", None)
+      }
+      val expected = probeRows.map { case (id, c, fp) => id -> mirror(c, fp) }
+        .toMap
+      val got = verdictMap(core(
+        probeRows.toDF("doc_id", cls, "fingerprint"),
+        standing.toDF("doc_id", cls, "fingerprint")), "verdict", "match_id")
+      assert(got == expected, s"$cls core")
+      // the probe set reaches every verdict, a near match through a
+      // top-band flip of the zero signature included
+      assert(expected.values.map(_._1).toSet == Set(exact, near, "new"))
+      assert(expected(1000L + flips.indexOf(Seq(width - 1))) ==
+        ((near, Some(10L))))
+
+      // the band split itself: every signature bit lands in exactly one
+      // band and every band holds w bits. Any four disjoint bands are
+      // pigeonhole-complete at Hamming ≤ 3, so a wrong width never shows
+      // in a verdict — this pins the width each core runs with.
+      val bits = if (cls == "gy") Multimodal.GridBandBits
+        else Multimodal.SigBandBits
+      val owners = Multimodal.withBands(
+          (0 until width).map(i => (i, 1L << i)).toDF("i", "fp"), "fp", bits)
+        .filter(col("bits") =!= 0L).select("i", "b").as[(Int, Int)]
+        .collect().toSeq
+      assert(owners.map(_._1).sorted == (0 until width), s"$cls tiling")
+      assert(owners.groupBy(_._2).map { case (b, v) => b -> v.size } ==
+        (0 until 4).map(_ -> w).toMap, s"$cls band widths")
+    }
+  }
 }

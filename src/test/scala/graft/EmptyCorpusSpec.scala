@@ -126,7 +126,13 @@ class EmptyCorpusSpec extends SparkSpec {
     "q170_multimodal_budget" -> (Curation.q170MultimodalBudget _),
     "q171_video_frames" -> (graft.operators.Multimodal.q171VideoFrames _),
     "q172_video_phash_dups" ->
-      (graft.operators.Multimodal.q172VideoPhashDups _))
+      (graft.operators.Multimodal.q172VideoPhashDups _),
+    "q173_video_hamming_pairs" ->
+      (graft.operators.Multimodal.q173VideoHammingPairs _),
+    "q176_audio_phash_dups" ->
+      (graft.operators.Multimodal.q176AudioPhashDups _),
+    "q177_audio_hamming_pairs" ->
+      (graft.operators.Multimodal.q177AudioHammingPairs _))
 
   ops.foreach { case (name, fn) =>
     test(s"$name returns empty on an empty corpus") {
