@@ -43,14 +43,24 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Every artifact with a standing build is one entry of
   * [[ArtifactTable]]: its name, the table it versions with (documents
   * or embeddings), its build over the committed parents above it, and
-  * its maintenance shape — per-key rows, additive counts, rebuilt
-  * whole, hand-maintained (the digests, the pair table and the
-  * keepers), or snapshot-only eval state that is built but never
+  * its maintenance shape — per-key rows (the digests among them),
+  * additive counts, rebuilt whole, hand-maintained (the pair table and
+  * the keepers), or snapshot-only eval state that is built but never
   * maintained. [[AllNames]], [[EmbeddingNames]], the segment layout,
   * the fingerprint every read resolves against, [[materialize]],
   * [[materializeEmbeddings]], the eval-state builds, the upgrade
-  * backfill, both append paths, both promotion paths and the serve path
-  * all derive from the table, so adding an artifact is one entry.
+  * backfill, maintenance and the serve path all derive from the table,
+  * so adding an artifact is one entry.
+  *
+  * == Maintenance: one append and one promote, for both tables ==
+  *
+  * [[append]] folds an appended batch in place and [[promote]] carries
+  * a snapshot's artifacts to the next one, driven by a digest diff.
+  * Each is written once and takes the table (documents or embeddings):
+  * the table supplies its key, its digest artifact and digest frame,
+  * and its entries' shapes decide the rest. [[maintainAppended]] /
+  * [[maintainEmbeddingsAppended]] and [[materializeIncremental]] /
+  * [[maintainEmbeddingsIncremental]] are those two bodies with a table.
   *
   * == Layout: per-doc artifacts are SEGMENTED ==
   *
@@ -139,11 +149,10 @@ object Artifacts {
     * from. Standing state pays twice: the OLD side of
     * [[materializeIncremental]]'s diff reads the artifact instead of
     * re-hashing the old corpus's text, and the append path
-    * ([[maintainAppended]]) needs NO corpus text scan at all (old
-    * hashes + batch hashes). The diff's own freshly computed new-side
-    * hashes commit as the new snapshot's artifact — maintenance gets it
-    * for free. The incremental-dedup verdict core (q50/q81) reads it
-    * for the exact-dup side the same way it reads the band index.
+    * ([[maintainAppended]]) needs NO corpus text scan at all (the keeper
+    * re-run reads the maintained version back). A per-doc entry like the
+    * band index, and the incremental-dedup verdict core (q50/q81) reads
+    * it for the exact-dup side the same way.
     */
   val DocHashesName = "doc_hashes"
 
@@ -499,15 +508,22 @@ object Artifacts {
 
   /** The table an artifact versions with: its fingerprint covers
     * `<corpusDir>/<table>.parquet`, `key` is the id column of the table's
-    * rows, `digests` the per-row digest artifact the maintenance diffs
-    * start from, and `entryPoint` the build that commits the maintained
-    * artifacts keyed by it. The two tables version independently: a
-    * crawl append must not stale the vector state, and a re-encode must
-    * not stale the text artifacts.
+    * rows, `digests` the per-key digest artifact the maintenance diffs
+    * start from (`hashes` its rows), `entryPoint` the build that commits
+    * the maintained artifacts keyed by it ([[materialize]]), and
+    * `appendOp` / `promoteOp` the public names of its [[append]] and
+    * [[promote]]. The two tables version independently: a crawl append
+    * must not stale the vector state, and a re-encode must not stale the
+    * text artifacts.
     */
-  private sealed abstract class Source(val table: String, val key: String,
-      val entryPoint: String) {
+  private[graft] sealed abstract class Source(val table: String,
+      val key: String, val entryPoint: String, val appendOp: String,
+      val promoteOp: String) {
     def digests: String
+    def hashes(rows: DataFrame): DataFrame
+    def materialize(spark: SparkSession, dir: String): Map[String, Long]
+    /** The id column of the [[digests]] rows (and of every per-key entry). */
+    def digestKey: String = ByName(digests).shape.keys.head
     def file: String = s"$table.parquet"
     def rows(spark: SparkSession, dir: String): DataFrame =
       Tables.table(spark, dir, table)
@@ -520,13 +536,24 @@ object Artifacts {
       val p = new Path(s"$dir/$file")
       p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
     }
+    /** Every maintained entry committed for the current fingerprint. */
+    def materialized(spark: SparkSession, dir: String): Boolean =
+      maintained(this).forall(a => isMaterialized(spark, dir, a.name))
   }
-  private case object Docs extends Source("documents", "doc_id", "materialize") {
+  private[graft] case object Docs extends Source("documents", "doc_id",
+      "materialize", "maintainAppended", "materializeIncremental") {
     def digests: String = DocHashesName
+    def hashes(docs: DataFrame): DataFrame = docHashesFrame(docs)
+    def materialize(spark: SparkSession, dir: String): Map[String, Long] =
+      Artifacts.materialize(spark, dir)
   }
-  private case object Vectors
-      extends Source("embeddings", "vec_id", "materializeEmbeddings") {
+  private[graft] case object Vectors extends Source("embeddings", "vec_id",
+      "materializeEmbeddings", "maintainEmbeddingsAppended",
+      "maintainEmbeddingsIncremental") {
     def digests: String = VecHashesName
+    def hashes(vecs: DataFrame): DataFrame = vecHashesFrame(vecs)
+    def materialize(spark: SparkSession, dir: String): Map[String, Long] =
+      materializeEmbeddings(spark, dir)
   }
 
   /** How a table entry is maintained when its table changes. */
@@ -564,9 +591,8 @@ object Artifacts {
     def keys: Seq[String] = Nil
   }
 
-  /** Maintained by diff-driven code written out in [[maintainAppended]]
-    * and [[materializeIncremental]] (the digests, the pair table and
-    * the keepers).
+  /** Maintained from the digest diff by code written out in
+    * [[MaintenanceBuild.maintain]] (the pair table and the keepers).
     */
   private final case class Custom(keys: Seq[String]) extends Shape
 
@@ -653,8 +679,7 @@ object Artifacts {
         c => CorpusOps.dupSpansFromCounts(c.committed(SpanCountsName))),
       perDoc(MinhashBandsName, Dedup.bandedSignatures, Some(c =>
         Dedup.bandedSignaturesFrom(c.committed(NgramPostingsName)))),
-      ArtifactDef(DocHashesName, Docs, Custom(Seq("doc_id")),
-        c => docHashesFrame(c.docs)),
+      perDoc(DocHashesName, Docs.hashes),
       ArtifactDef(DupPairsName, Docs, Custom(Seq("doc_a", "doc_b")),
         c => Dedup.jaccardPairs(c.committed(NgramPostingsName))),
       ArtifactDef(KeepersName, Docs, Custom(Seq("doc_id")),
@@ -749,18 +774,18 @@ object Artifacts {
     Seq(
       perVec(LshAnnIndexName, Similarity.annIndexFrame),
       perVec(LshNearDupIndexName, Similarity.nearDupIndexFrame),
-      perVec(VecHashesName, vecHashesFrame),
+      perVec(VecHashesName, Vectors.hashes),
       whole(LabelCentroidsName)(c => Similarity.labelCentroidsFrame(c.vecs)),
       whole(IvfCentroidsName)(c =>
         Ivf.centroidsFrame(c.spark, Ivf.train(quant(c)))),
       whole(IvfCellsName)(c => Ivf.assignFrame(quant(c),
         Ivf.collectCentroids(c.committed(IvfCentroidsName)))),
       whole(PqCodebooksName)(c =>
-        Pq.codebookFrame(c.spark, Pq.train(c.spark, sub(c)))),
+        Pq.codebookFrame(c.spark, Pq.train(sub(c)))),
       whole(PqCodesName)(c => Pq.codesFrame(sub(c),
         c.committed(PqCodebooksName))),
       whole(PqResCodebooksName)(c =>
-        Pq.codebookFrame(c.spark, Pq.train(c.spark, resSub(c)))),
+        Pq.codebookFrame(c.spark, Pq.train(resSub(c)))),
       whole(PqResCodesName)(c => Pq.codesFrame(resSub(c),
         c.committed(PqResCodebooksName))),
       // q142's within-cell screen against the committed coarse model
@@ -975,14 +1000,14 @@ object Artifacts {
     * run that crashed between its corpus append and its maintenance.
     */
   def isFullyMaterialized(spark: SparkSession, corpusDir: String): Boolean =
-    AllNames.forall(n => isMaterialized(spark, corpusDir, n))
+    Docs.materialized(spark, corpusDir)
 
   /** [[isFullyMaterialized]] for the vector side — every embeddings-keyed
     * artifact committed for the embeddings tree's current fingerprint
     * (the vector intake sink's crash-detection probe).
     */
   def isEmbeddingsMaterialized(spark: SparkSession, corpusDir: String): Boolean =
-    EmbeddingNames.forall(n => isMaterialized(spark, corpusDir, n))
+    Vectors.materialized(spark, corpusDir)
 
   private def isCommitted(spark: SparkSession, path: Option[String],
       name: String): Boolean =
@@ -1179,106 +1204,37 @@ object Artifacts {
     else buildTable(spark, corpusDir, Vectors)
   }
 
-  /** [[maintainAppended]]'s vector twin: fold ONE appended batch of
-    * `(vec_id, embedding, label)` rows into `corpusDir`'s standing
-    * embedding artifacts, given `fpOld` (the embeddings fingerprint the
-    * committed artifacts were built against, resolved BEFORE the batch
-    * landed). Batch-bounded: the LSH projections and digests run over
-    * the deduped batch only, carried segments ride by reference, and
-    * the rebuilt-whole entries (label centroids, IVF/PQ models and
-    * codes, semantic flags) re-derive against the appended table. The
-    * same coverage invariant as the text path: if old digest count +
-    * batch ≠ corpus count, another writer touched the embeddings tree
-    * and the fold would silently miss vectors — rebuild fully instead.
+  /** [[maintainAppended]] over the embeddings table: fold ONE appended
+    * batch of `(vec_id, embedding, label)` rows into `corpusDir`'s
+    * standing vector artifacts, given `fpOld` (the embeddings
+    * fingerprint resolved BEFORE the batch landed). The same [[append]]
+    * body as the text side: the LSH projections and digests run over the
+    * deduped batch only, and the rebuilt-whole entries (label centroids,
+    * IVF/PQ models and codes, semantic flags) re-derive against the
+    * appended table. There is no component re-run on this side, so the
+    * result's component fields are -1.
     */
   def maintainEmbeddingsAppended(spark: SparkSession, corpusDir: String,
       fpOld: String, batch: DataFrame,
-      prefiltered: Boolean = false): IncrementalResult = Checkpoints.scoped {
-    import org.apache.spark.sql.functions.col
-    requireRoot("maintainEmbeddingsAppended")
-    Tables.invalidate(corpusDir)
-    val mb = new MaintenanceBuild(spark, Vectors, corpusDir, fpOld, corpusDir,
-      embeddingsFingerprint(spark, corpusDir))
-    mb.settled(materializeEmbeddings(spark, corpusDir)).foreach(r => return r)
-    // `prefiltered` = the caller already deduped and anti-joined the
-    // batch from ONE checkpointed frame (the vector intake sink's
-    // invariant — the rows appended to the corpus and the rows folded
-    // into the artifacts must be the same frame)
-    val fresh =
-      if (prefiltered) batch
-      else Checkpoints.checkpoint(
-        batch.dropDuplicates("vec_id")
-          .join(mb.readOld(VecHashesName).select(col("id").as("vec_id")),
-            Seq("vec_id"), "left_anti"))
-    val nAdd = fresh.count()
-    mb.uncovered(nAdd, materializeEmbeddings(spark, corpusDir))
-      .foreach(r => return r)
-    val counts = mb.maintain(fresh)()
-    mb.compactSprawl()
-    mb.sweep(Set(mb.fpNew, fpOld), graceMs = AppendPruneGraceMs)
-    IncrementalResult("append", counts.toMap, nAdd, 0, 0, -1, -1)
-  }
+      prefiltered: Boolean = false): IncrementalResult =
+    append(Vectors, spark, corpusDir, fpOld, batch, prefiltered)
 
-  /** Maintain `newDir`'s vector-side artifacts FROM `oldDir`'s, driven
-    * by an embeddings-tree diff — [[materializeIncremental]]'s contract
-    * applied to the vector family, closing the text/vector maintenance
-    * asymmetry (appending one encode batch used to stale both LSH
-    * indexes with a full re-projection as the only remedy):
-    *
-    *  - diff at (id, digest) grain through the SHARED
-    *    [[operators.CorpusOps.snapshotDiff]] core, with the old side
-    *    read from the committed [[VecHashesName]] artifact — the old
-    *    corpus's vectors are never rescanned;
-    *  - per-vector entries (LSH index rows, digests): retract
-    *    removed/changed ids from the old version (range-hit segments
-    *    only), append rows computed from added/changed vectors only —
-    *    the easiest possible retract/append case;
-    *  - rebuilt-whole entries (label centroids, IVF/PQ models and codes,
-    *    semantic flags): re-derived from the new table (exact-summation
-    *    order and deterministic training are part of the artifact
-    *    contract — see [[LabelCentroidsName]] and [[IvfCentroidsName]]).
-    *
+  /** [[materializeIncremental]] over the embeddings table: maintain
+    * `newDir`'s vector artifacts FROM `oldDir`'s through the same
+    * [[promote]] body, the diff's old side read from the committed
+    * [[VecHashesName]] artifact (the old corpus's vectors are never
+    * rescanned). Per-vector entries (LSH index rows, digests) retract
+    * removed/changed ids and append rows of added/changed vectors;
+    * rebuilt-whole entries re-derive from the new table (exact-summation
+    * order and deterministic training are part of the artifact contract
+    * — see [[LabelCentroidsName]] and [[IvfCentroidsName]]).
     * Hash-identical to [[materializeEmbeddings]] from scratch
-    * (`EmbeddingArtifactsSpec`); falls back to it when `oldDir`'s
-    * artifacts are missing/stale (`full_missing_old`) or the change set
-    * exceeds `maxChangeFraction` (`full_large_diff`); idempotent per
-    * new fingerprint (`skip`). A corpus without an embeddings table is
-    * a no-op like the build. The returned `IncrementalResult`'s
-    * CC fields are -1: there is no component re-run on this side.
+    * (`EmbeddingArtifactsSpec`); a corpus without an embeddings table is
+    * a `skip`, and the result's component fields are -1.
     */
   def maintainEmbeddingsIncremental(spark: SparkSession, oldDir: String,
-      newDir: String, maxChangeFraction: Double = 0.2): IncrementalResult = Checkpoints.scoped {
-    import org.apache.spark.sql.functions.col
-    requireRoot("maintainEmbeddingsIncremental")
-    if (!Vectors.exists(spark, newDir))
-      return IncrementalResult("skip", Map.empty, 0, 0, 0, -1, -1)
-    val mb = new MaintenanceBuild(spark, Vectors, oldDir,
-      embeddingsFingerprint(spark, oldDir), newDir,
-      embeddingsFingerprint(spark, newDir))
-    mb.settled(materializeEmbeddings(spark, newDir)).foreach(r => return r)
-    val eNew = Tables.embeddings(spark, newDir)
-    val hashedNew = Checkpoints.checkpoint(vecHashesFrame(eNew))
-    // the shared diff core works at (doc_id, h) grain; the vector side's
-    // id column rides through under that name for the diff only
-    val diff = Checkpoints.checkpoint(
-      operators.CorpusOps.snapshotDiff(
-        mb.readOld(VecHashesName).withColumnRenamed("id", "doc_id"),
-        hashedNew.withColumnRenamed("id", "doc_id"))
-        .withColumnRenamed("doc_id", "id"))
-    val nNew = hashedNew.count()
-    val (nAdd, nChg, nRem) = statusCounts(diff)
-    if (nNew == 0 || nAdd + nChg + nRem > maxChangeFraction * nNew)
-      return IncrementalResult("full_large_diff",
-        materializeEmbeddings(spark, newDir), nAdd, nChg, nRem, -1, -1)
-    val dNew = diff.filter(col("status").isin("added", "changed"))
-      .select(col("id").as("vec_id"))
-    val dGone = diff.filter(col("status").isin("removed", "changed"))
-      .select("id")
-    val counts = mb.maintain(prunedDeltaScan(eNew, dNew, "vec_id"),
-      Some(dGone))()
-    mb.sweep(Set(mb.fpNew))
-    IncrementalResult("incremental", counts.toMap, nAdd, nChg, nRem, -1, -1)
-  }
+      newDir: String, maxChangeFraction: Double = 0.2): IncrementalResult =
+    promote(Vectors, spark, oldDir, newDir, maxChangeFraction)
 
   /** Committed row count of `name`'s CURRENT version read from its
     * manifest alone — no Spark job, just one small file. None when no
@@ -2287,26 +2243,28 @@ object Artifacts {
     counts.toMap
   }
 
-  /** Backfill `names` for `corpusDir` at fingerprint `fp` (which must
-    * still match the corpus — the caller checked): when an old snapshot
-    * is missing only SOME artifacts (the artifact set widened in a newer
-    * library version), the promotion builds exactly those against the
-    * old corpus instead of demoting the whole refresh to a
-    * corpus-bounded rebuild of the new one. Each is its entry's build in
-    * one serve context ([[Inline]]), so parents committed — or
-    * backfilled just before, in table order — are read back. Returns
-    * true when the backfill is the right move: some but not all
-    * artifacts were missing, and all are committed afterwards.
+  /** Backfill the `source` entries `names` for `corpusDir` at
+    * fingerprint `fp` (which must still match the table — the caller
+    * checked): when an old snapshot is missing only SOME artifacts (the
+    * artifact set widened in a newer library version), the promotion
+    * builds exactly those against the old corpus instead of demoting the
+    * whole refresh to a corpus-bounded rebuild of the new one. Each is
+    * its entry's build in one serve context ([[Inline]]), so parents
+    * committed — or backfilled just before, in table order — are read
+    * back. Returns true when the backfill is the right move: some but
+    * not all of the table's artifacts were missing, and all are
+    * committed afterwards.
     */
-  private def backfillOld(spark: SparkSession, corpusDir: String, fp: String,
-      names: Seq[String]): Boolean = {
-    if (names.isEmpty || names.size == AllNames.size) return false
+  private def backfillOld(spark: SparkSession, source: Source,
+      corpusDir: String, fp: String, names: Seq[String]): Boolean = {
+    val all = maintained(source).map(_.name)
+    if (names.isEmpty || names.size == all.size) return false
     System.err.println(s"[artifacts] backfilling ${names.mkString(", ")} " +
       s"for $corpusDir (artifact set widened since this snapshot was " +
       "materialized)")
     val in = new Inline(spark, corpusDir)
     names.foreach(n => write(spark, corpusDir, fp, n, in.build(n)))
-    AllNames.forall(n => isCommitted(spark, versionPath(corpusDir, n, fp), n))
+    all.forall(n => isCommitted(spark, versionPath(corpusDir, n, fp), n))
   }
 
   /** The diff-bounded document scan: semi-join `docs` to the diff ids,
@@ -2446,10 +2404,10 @@ object Artifacts {
     * all-`added` diff, including the df-cap-flip handling — an append
     * can push a shingle's df OVER the cap and sever pairs between
     * unchanged docs).
-    * Even the id+md5 frame the keeper exactness argument needs comes
-    * from standing state (the digest artifact + batch hashes), so the
-    * documents table is never scanned — the corpus-grain inputs are the
-    * standing artifacts themselves.
+    * Even the id+md5 frame the keeper exactness argument needs is
+    * standing state (the digest artifact, maintained just before the
+    * keepers), so the documents table is never scanned — the
+    * corpus-grain inputs are the standing artifacts themselves.
     *
     * Rows whose `doc_id` already exists are treated as at-least-once
     * re-deliveries and ignored (first write wins — the intake sink
@@ -2475,59 +2433,44 @@ object Artifacts {
     * mid-scan by the next batch.
     */
   def maintainAppended(spark: SparkSession, corpusDir: String, fpOld: String,
-      batch: DataFrame, prefiltered: Boolean = false): IncrementalResult = Checkpoints.scoped {
-    import org.apache.spark.sql.functions._
-    requireRoot("maintainAppended")
-    Tables.invalidate(corpusDir)
-    // the shared commit-or-reuse scaffolding ([[MaintenanceBuild]]);
-    // segInc carries untouched segments by reference and writes the
-    // batch/delta rows as one fresh segment, with `whole` the
-    // plain-layout upgrade fallback (old version predates the manifest)
-    val mb = new MaintenanceBuild(spark, Docs, corpusDir, fpOld, corpusDir,
-      corpusFingerprint(spark, corpusDir))
-    import mb.{segInc => buildSegInc, readOld, readNew}
-    mb.settled(materialize(spark, corpusDir)).foreach(r => return r)
+      batch: DataFrame, prefiltered: Boolean = false): IncrementalResult =
+    append(Docs, spark, corpusDir, fpOld, batch, prefiltered)
 
-    val oldKeepers = readOld(KeepersName)
-    // `prefiltered` = the caller already deduped and anti-joined the
-    // batch against the corpus from ONE checkpointed frame (the intake
-    // sink's invariant) — re-running both here would re-shuffle the
-    // batch and scan the keeper artifact a second time per micro-batch
+  /** The ONE append body of both tables ([[maintainAppended]],
+    * [[maintainEmbeddingsAppended]]): carry every maintained `source`
+    * artifact of `corpusDir` from `fpOld` to the table's current
+    * fingerprint, folding in the batch as an all-`added` diff
+    * ([[MaintenanceBuild.maintain]]). Batch rows whose id the old digest
+    * artifact already holds are re-deliveries and dropped;
+    * `prefiltered` = the caller already deduped and anti-joined the
+    * batch from ONE checkpointed frame (the intake sink's invariant —
+    * the rows appended to the table and the rows folded into the
+    * artifacts must be the same frame, and re-running both here would
+    * re-shuffle the batch per micro-batch). Coverage invariant: if old
+    * digest count + batch ≠ table count, another writer touched the
+    * table and the fold would silently miss rows — rebuild fully instead.
+    */
+  private[graft] def append(source: Source, spark: SparkSession,
+      corpusDir: String, fpOld: String, batch: DataFrame,
+      prefiltered: Boolean): IncrementalResult = Checkpoints.scoped {
+    import org.apache.spark.sql.functions.col
+    requireRoot(source.appendOp)
+    Tables.invalidate(corpusDir)
+    val mb = new MaintenanceBuild(spark, source, corpusDir, fpOld, corpusDir,
+      source.fingerprint(spark, corpusDir))
+    mb.settled(source.materialize(spark, corpusDir)).foreach(r => return r)
     val fresh =
       if (prefiltered) batch
-      else Checkpoints.checkpoint(
-        batch.dropDuplicates("doc_id")
-          .join(oldKeepers.select("doc_id"), Seq("doc_id"), "left_anti"))
+      else Checkpoints.checkpoint(batch.dropDuplicates(source.key).join(
+        mb.readOld(source.digests).select(col(source.digestKey).as(source.key)),
+        Seq(source.key), "left_anti"))
     val nAdd = fresh.count()
-    mb.uncovered(nAdd, materialize(spark, corpusDir)).foreach(r => return r)
-
-    // the keeper exactness argument needs the full id+md5 frame — served
-    // ENTIRELY from standing state (old digest artifact + batch hashes),
-    // so the append path scans no corpus text at all: per-batch cost is
-    // batch-bounded, not corpus-bounded
-    lazy val hashedNew = Checkpoints.checkpoint(
-      readOld(DocHashesName).unionByName(docHashesFrame(fresh)))
-    val diff = fresh.select(col("doc_id"),
-      lit(null).cast("string").as("h_old"),
-      md5(col("text")).as("h_new"),
-      lit("added").as("status"))
-    // pair table before keepers: the batch is an all-`added` diff, and
-    // the pair maintenance owns the df-cap-flip handling (an append can
-    // push a shingle's df OVER the cap and sever pairs between
-    // unchanged docs); the keeper re-run then seeds from the pair delta
-    lazy val incPairs = operators.Dedup.incrementalJaccardPairs(
-      readOld(DupPairsName), diff, readOld(NgramPostingsName),
-      readNew(NgramPostingsName))
-    lazy val incK = operators.Dedup.incrementalKeepers(oldKeepers,
-      hashedNew, diff, readOld(DupPairsName), readNew(DupPairsName), incPairs)
-    val counts = mb.maintain(fresh) {
-      case DocHashesName =>
-        buildSegInc(DocHashesName, None, docHashesFrame(fresh))(hashedNew)
-      case DupPairsName => buildSegInc(DupPairsName,
-        Some(incPairs.retractIds), incPairs.recomputed)(incPairs.full)
-      case KeepersName => buildSegInc(KeepersName,
-        Some(incK.retractIds), incK.relabeled)(incK.full)
-    }
+    mb.uncovered(nAdd, source.materialize(spark, corpusDir))
+      .foreach(r => return r)
+    // the batch diffed against no rows: every row `added`
+    val hashed = source.hashes(fresh)
+    val res = mb.maintain("append", fresh, None, operators.CorpusOps
+      .snapshotDiff(hashed.limit(0), hashed, source.digestKey), (nAdd, 0L, 0L))
     mb.compactSprawl()
     // fpOld stays in the keep set for ONE more generation: a reader that
     // resolved it through the TTL cache just before this batch landed
@@ -2535,15 +2478,16 @@ object Artifacts {
     // intervals exceed the grace — the version dirs are old in wall
     // time the moment they become stale)
     mb.sweep(Set(mb.fpNew, fpOld), graceMs = AppendPruneGraceMs)
-    IncrementalResult("append", counts.toMap,
-      nAdd, 0, 0, incK.affectedComponents, incK.ccVertices)
+    res
   }
 
   /** Outcome of [[materializeIncremental]]: which path ran, the committed
     * row counts, the diff profile, and the keeper re-run's actual size
     * (the change-boundedness evidence — `ccVertices` is how many
     * documents the connected-components re-run touched, vs the whole
-    * corpus for a full rebuild).
+    * corpus for a full rebuild). The component fields are -1 for a
+    * table without a keeper re-run (the embeddings) and for the full
+    * rebuilds.
     *
     * `counts` are PHYSICAL rows on disk (the manifest's segment-row
     * sum). For the additive artifacts (span counts, token frequencies)
@@ -2557,21 +2501,24 @@ object Artifacts {
     added: Long, changed: Long, removed: Long,
     affectedComponents: Long, ccVertices: Long)
 
-  /** The commit-or-reuse scaffolding EVERY maintenance entry point
-    * shares — text and vector, same-dir append and cross-dir promote —
-    * defined once so the subtle parts (the committed-version
-    * short-circuit that keeps a retry from Overwrite-rewriting a live
-    * version, the segmented-commit-or-whole-write fallback, the
-    * skip/full-rebuild prologue and the coverage check) cannot drift
-    * between the four call sites. Each entry point instantiates one of
-    * these over its `source` table and (old, new) corpus/fingerprint
-    * pair; `fpOld` resolves on first use, so a `skip` never lists the
-    * old tree.
+  /** The commit-or-reuse scaffolding of the two maintenance bodies —
+    * [[append]] and [[promote]], each over either table — defined once
+    * so the subtle parts (the committed-version short-circuit that keeps
+    * a retry from Overwrite-rewriting a live version, the
+    * segmented-commit-or-whole-write fallback, the skip/full-rebuild
+    * prologue, the coverage check and the fold itself) cannot drift
+    * between them. Each body instantiates one of these over its `source`
+    * table and (old, new) corpus/fingerprint pair; `fpOld` resolves on
+    * first use, so a `skip` never lists the old tree.
     */
   private final class MaintenanceBuild(spark: SparkSession, source: Source,
       oldDir: String, fpOldOf: => String, newDir: String, val fpNew: String) {
     lazy val fpOld: String = fpOldOf
     private val names = maintained(source).map(_.name)
+    /** Whether the table has custom entries — the keeper re-run behind
+      * the result's component fields, which are -1 without one.
+      */
+    private val custom = maintained(source).exists(_.shape.isInstanceOf[Custom])
     def oldPath(name: String): String = versionPath(oldDir, name, fpOld).get
     def newPath(name: String): String = versionPath(newDir, name, fpNew).get
     def readOld(name: String): DataFrame =
@@ -2588,7 +2535,10 @@ object Artifacts {
       else write(spark, newDir, fpNew, name, compute)
     }
     /** Segmented carry/retract/append commit with the committed-skip
-      * guard and the plain-layout whole-frame fallback.
+      * guard and the plain-layout whole-frame fallback — within one
+      * corpus tree untouched segments ride by reference, across trees by
+      * raw byte copy (no decode/shuffle/re-encode: the promotion's I/O is
+      * a copy, its COMPUTE stays change-bounded).
       */
     def segInc(name: String, retract: Option[DataFrame],
         append: => DataFrame)(whole: => DataFrame): (String, Long) = {
@@ -2598,6 +2548,12 @@ object Artifacts {
         retract, append).getOrElse(write(spark, newDir, fpNew, name, whole))
     }
 
+    /** The `skip` result: nothing ran, `counts` already committed. */
+    def skip(counts: Map[String, Long]): IncrementalResult = {
+      val cc = if (custom) 0L else -1L
+      IncrementalResult("skip", counts, 0, 0, 0, cc, cc)
+    }
+
     /** The prologue: `Some(result)` when no fold runs — every maintained
       * artifact is already committed at `fpNew` (`skip`), or the old
       * version lacks some that `backfill` cannot supply
@@ -2605,12 +2561,9 @@ object Artifacts {
       */
     def settled(rebuild: => Map[String, Long],
         backfill: Seq[String] => Boolean = _ => false): Option[IncrementalResult] =
-      if (names.forall(n => isCommitted(spark, Some(newPath(n)), n))) {
-        // there is no component re-run on the vector side
-        val cc = if (source == Docs) 0L else -1L
-        Some(IncrementalResult("skip", names.map(n => n -> countNew(n)).toMap,
-          0, 0, 0, cc, cc))
-      } else {
+      if (names.forall(n => isCommitted(spark, Some(newPath(n)), n)))
+        Some(skip(names.map(n => n -> countNew(n)).toMap))
+      else {
         val missing = names.filterNot(n => isCommitted(spark, Some(oldPath(n)), n))
         if (missing.isEmpty || backfill(missing)) None
         else {
@@ -2650,20 +2603,33 @@ object Artifacts {
       * order, folding in the table rows `added` (the batch, or the
       * promotion's added/changed rows) and — for a promotion — the
       * removed/changed keys `gone` (in the per-key entries' retract-key
-      * column). Per-key entries retract the gone keys and append the
-      * added rows'; additive entries append ONE ± delta segment (the gone
-      * keys' OLD rows are scanned only for them); rebuilt-whole entries
-      * build over the new committed parents; `custom` maintains the
-      * rest.
+      * column); `diff` is the same change at digest grain and `n` its
+      * (added, changed, removed) counts. Per-key entries retract the gone
+      * keys and append the added rows'; additive entries append ONE ±
+      * delta segment (the gone keys' OLD rows are scanned only for them);
+      * rebuilt-whole entries build over the new committed parents; the
+      * custom entries fold the diff (below).
       */
-    def maintain(added: DataFrame, gone: Option[DataFrame] = None)(
-        custom: PartialFunction[String, (String, Long)] = PartialFunction.empty
-    ): Seq[(String, Long)] = {
+    def maintain(mode: String, added: DataFrame, gone: Option[DataFrame],
+        diff: DataFrame, n: (Long, Long, Long)): IncrementalResult = {
       import org.apache.spark.sql.functions.{col, sum}
+      import operators.Dedup.{incrementalJaccardPairs, incrementalKeepers}
       val ctx = buildCtxs(spark, newDir, readNew)
       lazy val goneRows = prunedDeltaScan(source.rows(spark, oldDir),
         gone.get.toDF(source.key), source.key)
-      maintained(source).map { a =>
+      // pair table: change-bounded recompute of the pairs incident to
+      // touched docs (owns the df-cap-flip detection — an append can push
+      // a shingle's df OVER the cap and sever pairs between unchanged
+      // docs), read against the posting index maintained just before it;
+      // the keeper re-run seeds from its old-vs-new delta, reads the
+      // digests maintained before it, and re-runs connected components
+      // only over the components the diff can have touched
+      lazy val pairs = incrementalJaccardPairs(readOld(DupPairsName), diff,
+        readOld(NgramPostingsName), readNew(NgramPostingsName))
+      lazy val keepers = incrementalKeepers(readOld(KeepersName),
+        readNew(DocHashesName), diff, readOld(DupPairsName),
+        readNew(DupPairsName), pairs)
+      val counts = maintained(source).map { a =>
         a.shape match {
           case PerKey(key, rows) =>
             segInc(a.name, gone, rows(added))(gone
@@ -2681,9 +2647,18 @@ object Artifacts {
             segInc(a.name, None, delta)(
               foldAdditive(readOld(a.name).unionByName(delta), keys, cnt))
           case Whole => inc(a.name)(a.build(ctx(a.name)))
-          case _ => custom(a.name)
+          case _ => a.name match {
+            case DupPairsName => segInc(a.name, Some(pairs.retractIds),
+              pairs.recomputed)(pairs.full)
+            case KeepersName => segInc(a.name, Some(keepers.retractIds),
+              keepers.relabeled)(keepers.full)
+          }
         }
       }
+      val (comps, verts) =
+        if (custom) (keepers.affectedComponents, keepers.ccVertices)
+        else (-1L, -1L)
+      IncrementalResult(mode, counts.toMap, n._1, n._2, n._3, comps, verts)
     }
 
     /** Bound segment sprawl under continuous ingest: compact every
@@ -2722,9 +2697,9 @@ object Artifacts {
     *
     *  - diff at id+md5 grain (the one corpus-grain scan, same cost class
     *    as q76 — document bodies never ship);
-    *  - per-document entries (postings, bands, shingles, …): retract
-    *    removed/changed docs' rows from the old artifact, append rows
-    *    computed from added/changed docs only;
+    *  - per-document entries (postings, bands, shingles, digests, …):
+    *    retract removed/changed docs' rows from the old artifact, append
+    *    rows computed from added/changed docs only;
     *  - additive entries (span counts, token frequencies, …): ± deltas
     *    from the changed docs' old and new texts (keeping COUNTS, not
     *    just the ≥ 2 survivors, is what makes decrement possible); the
@@ -2749,73 +2724,51 @@ object Artifacts {
     * files and row groups (spec-measured, not just claimed).
     */
   def materializeIncremental(spark: SparkSession, oldDir: String,
-      newDir: String, maxChangeFraction: Double = 0.2): IncrementalResult = Checkpoints.scoped {
-    import org.apache.spark.sql.functions._
-    requireRoot("materializeIncremental")
-    // the shared commit-or-reuse scaffolding ([[MaintenanceBuild]]):
-    // inc carries materialize's committed-skip guard (a retry must NOT
-    // Overwrite-rewrite a committed fp= directory); segInc commits
-    // across corpus trees — untouched segments carried by raw byte copy
-    // (no decode/shuffle/re-encode: the promotion's I/O is a copy, its
-    // COMPUTE stays change-bounded), `whole` the plain-layout fallback
-    val mb = new MaintenanceBuild(spark, Docs, oldDir,
-      corpusFingerprint(spark, oldDir), newDir, corpusFingerprint(spark, newDir))
-    import mb.{segInc => buildSegInc, readOld => readOldA, readNew => readNewA}
+      newDir: String, maxChangeFraction: Double = 0.2): IncrementalResult =
+    promote(Docs, spark, oldDir, newDir, maxChangeFraction)
+
+  /** The ONE promote body of both tables ([[materializeIncremental]],
+    * [[maintainEmbeddingsIncremental]]): maintain `newDir`'s `source`
+    * artifacts FROM `oldDir`'s, driven by the diff of the table's
+    * digests ([[MaintenanceBuild.maintain]]). A table `newDir` lacks is
+    * a `skip`.
+    */
+  private def promote(source: Source, spark: SparkSession, oldDir: String,
+      newDir: String, maxChangeFraction: Double): IncrementalResult = Checkpoints.scoped {
+    import org.apache.spark.sql.functions.col
+    requireRoot(source.promoteOp)
+    val mb = new MaintenanceBuild(spark, source, oldDir,
+      source.fingerprint(spark, oldDir), newDir, source.fingerprint(spark, newDir))
+    if (!source.exists(spark, newDir)) return mb.skip(Map.empty)
     // A partially missing old set usually means the artifact set widened
     // since the old snapshot was materialized (library upgrade): BACKFILL
     // exactly the missing artifacts against the old corpus — it still
     // matches fpOld, so this is sound — instead of demoting the refresh
-    // to a corpus-bounded rebuild of the NEW snapshot. (maintainAppended
-    // cannot do this: its corpus has already advanced past fpOld.)
-    mb.settled(materialize(spark, newDir),
-      backfillOld(spark, oldDir, mb.fpOld, _)).foreach(r => return r)
-
-    val docsNew = Tables.documents(spark, newDir)
-    val hashedNew = Checkpoints.checkpoint(
-      docsNew.select(col("doc_id"), md5(col("text")).as("h")))
+    // to a corpus-bounded rebuild of the NEW snapshot. (An append cannot
+    // do this: its table has already advanced past fpOld.)
+    mb.settled(source.materialize(spark, newDir),
+      backfillOld(spark, source, oldDir, mb.fpOld, _)).foreach(r => return r)
+    val rowsNew = source.rows(spark, newDir)
+    val hashedNew = Checkpoints.checkpoint(source.hashes(rowsNew))
     // the SHARED diff core (operators.CorpusOps.snapshotDiff) — the same
     // definition q76/q81 expose to users, so the diff audited and the
     // diff acted on cannot drift. The OLD side reads the committed
-    // digest artifact (the AllNames gate above guarantees it), so the
-    // old corpus's TEXT is never re-hashed — the diff's corpus-grain
-    // input is one new-side scan plus an id+hash artifact read.
-    val diff = Checkpoints.checkpoint(
-      operators.CorpusOps.snapshotDiff(readOldA(DocHashesName), hashedNew))
+    // digest artifact (the prologue above guarantees it), so the old
+    // table is never re-hashed — the diff's table-grain input is one
+    // new-side scan plus an id+digest artifact read.
+    val diff = Checkpoints.checkpoint(operators.CorpusOps.snapshotDiff(
+      mb.readOld(source.digests), hashedNew, source.digestKey))
     val nNew = hashedNew.count()
     val (nAdd, nChg, nRem) = statusCounts(diff)
     if (nNew == 0 || nAdd + nChg + nRem > maxChangeFraction * nNew)
-      return IncrementalResult("full_large_diff", materialize(spark, newDir),
-        nAdd, nChg, nRem, -1, -1)
-
-    val dNew = diff.filter(col("status").isin("added", "changed"))
-      .select("doc_id")
-    val dGone = diff.filter(col("status").isin("removed", "changed"))
-      .select("doc_id")
-    val docsChangedNew = prunedDeltaScan(docsNew, dNew)
-
-    // pair table: change-bounded recompute of the pairs incident to
-    // touched docs (owns the df-cap-flip detection), read against the
-    // posting index maintained just before it; the keeper re-run seeds
-    // from its old-vs-new delta and re-runs connected components only
-    // over the components the diff can have touched
-    lazy val incPairs = operators.Dedup.incrementalJaccardPairs(
-      readOldA(DupPairsName), diff, readOldA(NgramPostingsName),
-      readNewA(NgramPostingsName))
-    lazy val incK = operators.Dedup.incrementalKeepers(readOldA(KeepersName),
-      hashedNew, diff, readOldA(DupPairsName), readNewA(DupPairsName), incPairs)
-    val counts = mb.maintain(docsChangedNew, Some(dGone)) {
-      // digest artifact: retract the gone docs' rows, append the diff's
-      // own new-side hashes for added/changed docs — already computed and
-      // checkpointed, so committing them is free maintenance
-      case DocHashesName => buildSegInc(DocHashesName, Some(dGone),
-        hashedNew.join(dNew, Seq("doc_id"), "left_semi"))(hashedNew)
-      case DupPairsName => buildSegInc(DupPairsName,
-        Some(incPairs.retractIds), incPairs.recomputed)(incPairs.full)
-      case KeepersName => buildSegInc(KeepersName,
-        Some(incK.retractIds), incK.relabeled)(incK.full)
-    }
+      return IncrementalResult("full_large_diff",
+        source.materialize(spark, newDir), nAdd, nChg, nRem, -1, -1)
+    def ids(status: String*): DataFrame =
+      diff.filter(col("status").isin(status: _*)).select(source.digestKey)
+    val res = mb.maintain("incremental", prunedDeltaScan(rowsNew,
+        ids("added", "changed").toDF(source.key), source.key),
+      Some(ids("removed", "changed")), diff, (nAdd, nChg, nRem))
     mb.sweep(Set(mb.fpNew))
-    IncrementalResult("incremental", counts.toMap,
-      nAdd, nChg, nRem, incK.affectedComponents, incK.ccVertices)
+    res
   }
 }

@@ -342,23 +342,6 @@ object CorpusOps {
       tok: graft.functions.Tokenizer): DataFrame =
     sequencePack(spark, dir, PackRangeWidth, tok)
 
-  /** Two-level offset computation behind [[q48SequencePack]]. `rng =
-    * doc_id div rangeWidth` is monotone in `doc_id`, so ordering a shard
-    * by (rng, doc_id) IS the shard's doc_id order and the decomposition
-    * below returns bit-identical offsets to a single per-shard running
-    * sum (the oracle keeps that single-window form as the semantic
-    * definition; the cross-engine hash match proves the equivalence):
-    *
-    *  1. per-(shard, rng) token totals — one map-side-partial aggregate;
-    *  2. per-shard running sum OVER THE TOTALS (a `rangeWidth`-fold
-    *     smaller table) → each range's base offset;
-    *  3. per-(shard, rng) partition-local running sum + that base.
-    *
-    * The base join is on (shard, rng) — the exact partitioning the
-    * level-3 window needs anyway, and AQE broadcasts the totals side
-    * whenever it is small. `rangeWidth` is parameterized only for the
-    * equivalence spec; production uses [[PackRangeWidth]].
-    */
   /** The (doc_id, n_tokens) frame every packing/sharding operator
     * consumes: the token-count artifact when it resolves (zero documents
     * scan), else ONE checkpointed tokenizing scan — the count frame
@@ -407,6 +390,23 @@ object CorpusOps {
         org.apache.spark.sql.GraftSqlBridge.expression(id.cast("string")))),
       lit(PackShards.toLong)).cast("int")
 
+  /** Two-level offset computation behind [[q48SequencePack]]. `rng =
+    * doc_id div rangeWidth` is monotone in `doc_id`, so ordering a shard
+    * by (rng, doc_id) IS the shard's doc_id order and the decomposition
+    * below returns bit-identical offsets to a single per-shard running
+    * sum (the oracle keeps that single-window form as the semantic
+    * definition; the cross-engine hash match proves the equivalence):
+    *
+    *  1. per-(shard, rng) token totals — one map-side-partial aggregate;
+    *  2. per-shard running sum OVER THE TOTALS (a `rangeWidth`-fold
+    *     smaller table) → each range's base offset;
+    *  3. per-(shard, rng) partition-local running sum + that base.
+    *
+    * The base join is on (shard, rng) — the exact partitioning the
+    * level-3 window needs anyway, and AQE broadcasts the totals side
+    * whenever it is small. `rangeWidth` is parameterized only for the
+    * equivalence spec; production uses [[PackRangeWidth]].
+    */
   private[graft] def sequencePack(spark: SparkSession, dir: String,
       rangeWidth: Long,
       tok: graft.functions.Tokenizer = graft.functions.Tokenizer.Whitespace)
@@ -1773,20 +1773,6 @@ object CorpusOps {
     */
   private val SpanN = 10
 
-  /** q54 — per-document duplicated-text fraction: the share of a doc's
-    * [[SpanN]]-gram spans that occur in at least one OTHER document. The
-    * doc-level diagnostic behind exact-substring dedup — "how much of
-    * this page is corpus boilerplate" — and the natural follow-up to
-    * q51's corpus-level mining. Uses the positional shingle kernel
-    * ([[graft.functions.NgramShinglesAll]]): repeated spans inside one
-    * doc count once per occurrence, but only CROSS-document repetition
-    * (distinct-doc frequency ≥ 2) marks a span duplicated.
-    *
-    * Scale shape: inverted index + doc-frequency aggregate + one
-    * re-join — the q20 chain without its self-join, so strictly cheaper
-    * than the dedup pass that already runs; no unbounded fan-out
-    * anywhere (the df aggregate reduces before the join).
-    */
   /** The duplicated-span dictionary behind q54/q59/q67: every [[SpanN]]-
     * gram span occurring in ≥ 2 distinct documents. This is the third
     * materialized corpus artifact ([[graft.Artifacts]]): exact-substring
@@ -1825,6 +1811,20 @@ object CorpusOps {
   private[graft] def dupSpansFromCounts(counts: DataFrame): DataFrame =
     counts.filter(col("ndocs") >= 2).select("sh")
 
+  /** q54 — per-document duplicated-text fraction: the share of a doc's
+    * [[SpanN]]-gram spans that occur in at least one OTHER document. The
+    * doc-level diagnostic behind exact-substring dedup — "how much of
+    * this page is corpus boilerplate" — and the natural follow-up to
+    * q51's corpus-level mining. Uses the positional shingle kernel
+    * ([[graft.functions.NgramShinglesAll]]): repeated spans inside one
+    * doc count once per occurrence, but only CROSS-document repetition
+    * (distinct-doc frequency ≥ 2) marks a span duplicated.
+    *
+    * Scale shape: inverted index + doc-frequency aggregate + one
+    * re-join — the q20 chain without its self-join, so strictly cheaper
+    * than the dedup pass that already runs; no unbounded fan-out
+    * anywhere (the df aggregate reduces before the join).
+    */
   def q54DupSpans(spark: SparkSession, dir: String): DataFrame = {
     val allSh = org.apache.spark.sql.GraftSqlBridge.column(
       graft.functions.NgramShinglesAll(
@@ -2152,11 +2152,13 @@ object CorpusOps {
 
   /** The snapshot-diff CORE shared by [[q76SnapshotDiff]],
     * [[q81IncrementalRefresh]] (via q76), and
-    * `Artifacts.materializeIncremental` — ONE definition, so the diff a
-    * user audits (q76) can never drift from the diff the artifact
-    * maintenance acts on. Inputs are `(doc_id, h)` digest frames (bodies
-    * never ship); output is `(doc_id, h_old, h_new, status)` with
-    * unchanged rows dropped.
+    * both artifact maintenance bodies (`Artifacts.append` /
+    * `Artifacts.promote`, on either table) — ONE definition, so the diff
+    * a user audits (q76) can never drift from the diff the artifact
+    * maintenance acts on. Inputs are `(idCol, h)` digest frames (bodies
+    * never ship; `idCol` is `doc_id` for documents, `id` for the vector
+    * digests); output is `(idCol, h_old, h_new, status)` with unchanged
+    * rows dropped.
     *
     * `added`/`removed` classify by full-outer-join ROW PRESENCE (explicit
     * existence markers), not by digest nullability: a document with NULL
@@ -2164,13 +2166,14 @@ object CorpusOps {
     * must classify as unchanged — hash-nullability classification would
     * mislabel it `added` and its old artifact rows would never retract.
     */
-  def snapshotDiff(prior: DataFrame, cur: DataFrame): DataFrame = {
-    val p = prior.select(col("doc_id"), col("h").as("h_old"),
+  def snapshotDiff(prior: DataFrame, cur: DataFrame,
+      idCol: String = "doc_id"): DataFrame = {
+    val p = prior.select(col(idCol), col("h").as("h_old"),
       lit(true).as("__in_old"))
-    val c = cur.select(col("doc_id"), col("h").as("h_new"),
+    val c = cur.select(col(idCol), col("h").as("h_new"),
       lit(true).as("__in_new"))
-    p.join(c, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"), col("h_old"), col("h_new"),
+    p.join(c, Seq(idCol), "full_outer")
+      .select(col(idCol), col("h_old"), col("h_new"),
         when(col("__in_old").isNull, "added")
           .when(col("__in_new").isNull, "removed")
           .when(!(col("h_old") <=> col("h_new")), "changed")
@@ -2229,6 +2232,15 @@ object CorpusOps {
       .orderBy("doc_id")
   }
 
+  /** Outcome of [[refreshSnapshot]]: the text-side and vector-side
+    * maintenance results (mode + counts each — so a caller can observe
+    * a `full_large_diff` demotion on EITHER leg, e.g. an embeddings
+    * re-encode forcing a full LSH re-projection) and the re-verdict
+    * frame for the changed documents.
+    */
+  final case class SnapshotRefresh(text: graft.Artifacts.IncrementalResult,
+    vectors: graft.Artifacts.IncrementalResult, verdicts: DataFrame)
+
   /** The promote-a-new-snapshot operation, END-TO-END: maintain
     * `newDir`'s corpus artifacts from the snapshot diff
     * (`Artifacts.materializeIncremental`), then re-verdict exactly the
@@ -2239,15 +2251,6 @@ object CorpusOps {
     * separate APIs left open. Requires an artifact root; cost is
     * diff-bounded on both legs.
     */
-  /** Outcome of [[refreshSnapshot]]: the text-side and vector-side
-    * maintenance results (mode + counts each — so a caller can observe
-    * a `full_large_diff` demotion on EITHER leg, e.g. an embeddings
-    * re-encode forcing a full LSH re-projection) and the re-verdict
-    * frame for the changed documents.
-    */
-  final case class SnapshotRefresh(text: graft.Artifacts.IncrementalResult,
-    vectors: graft.Artifacts.IncrementalResult, verdicts: DataFrame)
-
   def refreshSnapshot(spark: SparkSession, oldDir: String, newDir: String,
       maxChangeFraction: Double = 0.2): SnapshotRefresh = {
     val maintained = graft.Artifacts.materializeIncremental(

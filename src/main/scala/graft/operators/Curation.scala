@@ -81,10 +81,6 @@ object Curation {
       .orderBy("doc_id")
   }
 
-  /** One statement replaying the whole funnel: the keeper CTE chain
-    * (shared with q40 — the two cannot drift) joined to the signal
-    * expressions (shared fragments with q25/q38).
-    */
   /** q41's statement minus its presentation ORDER BY — reused
     * STRUCTURALLY by [[q43OracleSql]] (which wraps it as a subquery);
     * a textual scrape would silently break on reformatting.
@@ -117,6 +113,10 @@ object Curation {
       |FROM sig s JOIN keepers k ON s.doc_id = k.doc_id""".stripMargin
   }
 
+  /** One statement replaying the whole funnel: the keeper CTE chain
+    * (shared with q40 — the two cannot drift) joined to the signal
+    * expressions (shared fragments with q25/q38).
+    */
   lazy val q41OracleSql: String = s"$q41OracleBody\nORDER BY s.doc_id"
 
   /** Split fractions in bucket points (of 100): [0,80) train,
@@ -125,16 +125,6 @@ object Curation {
   private val TrainUpper = 80
   private val ValUpper = 90
 
-  /** q42 — deterministic train/val/test assignment: bucket =
-    * cross-engine [[graft.functions.PolyHash]] of the doc id, mod 100.
-    * Hash-based (NOT RNG `sample()`): the assignment is a pure function
-    * of the row, so it is reproducible across runs, engines, partition
-    * layouts, and corpus growth — adding documents never reshuffles
-    * existing ones between splits, which RNG sampling cannot promise.
-    * Pure map over the scan, no shuffle but the presentation sort.
-    * Stratified variants compose by salting the hash input with the
-    * stratum key.
-    */
   /** The q42 bucket assignment of an id column: cross-engine PolyHash of
     * the id, mod 100. Exposed so downstream operators (decontamination,
     * incremental dedup) consume the SAME split a user's q42 run produced.
@@ -162,6 +152,16 @@ object Curation {
        |            ELSE 'test' END""".stripMargin
   }
 
+  /** q42 — deterministic train/val/test assignment: bucket =
+    * cross-engine [[graft.functions.PolyHash]] of the doc id, mod 100.
+    * Hash-based (NOT RNG `sample()`): the assignment is a pure function
+    * of the row, so it is reproducible across runs, engines, partition
+    * layouts, and corpus growth — adding documents never reshuffles
+    * existing ones between splits, which RNG sampling cannot promise.
+    * Pure map over the scan, no shuffle but the presentation sort.
+    * Stratified variants compose by salting the hash input with the
+    * stratum key.
+    */
   def q42SampleSplit(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(

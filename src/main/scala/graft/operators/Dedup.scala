@@ -154,14 +154,6 @@ object Dedup {
       .drop("__pop")
   }
 
-  /** q18 — MinHash LSH near-dup pairs: band-bucket equi-join generates
-    * candidates (bucket = the band's signature slice rendered as a string
-    * — directly joinable, no second hash); signature agreement estimates
-    * Jaccard; pairs ≥ 0.5 kept. Buckets over [[MaxBucketPop]] are dropped
-    * first (hot-bucket bound). Fully oracle-checked: the PolyHash base +
-    * shared affine coefficients are computed identically in DuckDB
-    * ([[q18OracleSql]] is generated from the same constants).
-    */
   /** Per-doc LSH band index over the MinHash signature: one row per
     * (doc_id, band) with `sig` (the full 16-min array) and `bucket` (the
     * band's signature slice rendered as a string — directly joinable, no
@@ -193,6 +185,14 @@ object Dedup {
     size(filter(zip_with(a, b, (x, y) => x === y), m => m))
       .cast("double") / NumHashes
 
+  /** q18 — MinHash LSH near-dup pairs: band-bucket equi-join generates
+    * candidates (bucket = the band's signature slice rendered as a string
+    * — directly joinable, no second hash); signature agreement estimates
+    * Jaccard; pairs ≥ 0.5 kept. Buckets over [[MaxBucketPop]] are dropped
+    * first (hot-bucket bound). Fully oracle-checked: the PolyHash base +
+    * shared affine coefficients are computed identically in DuckDB
+    * ([[q18OracleSql]] is generated from the same constants).
+    */
   def q18DedupMinhash(spark: SparkSession, dir: String): DataFrame = {
     val banded = graft.Artifacts.serve(spark, dir, graft.Artifacts.MinhashBandsName)
     val kept = capBuckets(banded, MaxBucketPop, "band", "bucket")

@@ -153,13 +153,6 @@ object Extraction {
           "</li></ul><p>Short.</p><p>See the privacy policy.</p></div>")))
   }
 
-  /** q123 — raw-crawl text extraction with per-doc stats: the synthetic
-    * raw layer ([[rawify]]) pushed through the full chain. `extracted`
-    * is the surviving text; the stats report line and token mass before
-    * vs after (raw = everything visible once markup is gone, kept =
-    * what survived the line rules) and the boilerplate fraction of the
-    * token mass. Map-only; the only shuffle is the presentation sort.
-    */
   /** The one-regex-pass-per-line projection q123 checkpoints: stripped
     * lines, per-line anchor counts, and the whole-doc raw token count —
     * the expensive chain, isolated so the plan guard can pin its scan
@@ -177,6 +170,13 @@ object Extraction {
         .cast("long").as("raw_tokens"))
   }
 
+  /** q123 — raw-crawl text extraction with per-doc stats: the synthetic
+    * raw layer ([[rawify]]) pushed through the full chain. `extracted`
+    * is the surviving text; the stats report line and token mass before
+    * vs after (raw = everything visible once markup is gone, kept =
+    * what survived the line rules) and the boilerplate fraction of the
+    * token mass. Map-only; the only shuffle is the presentation sort.
+    */
   def q123TextExtract(spark: SparkSession, dir: String): DataFrame = {
     // One regex pass per line, checkpointed: stripped lines, their word
     // counts, the two raw-line rule signals, and the whole-doc raw token
@@ -222,9 +222,6 @@ object Extraction {
       .orderBy("doc_id")
   }
 
-  /** DuckDB mirror of [[q123TextExtract]] — the same rawify arithmetic,
-    * the same regex chain, the same line rules as list lambdas.
-    */
   /** The [[rawify]] arithmetic as oracle SQL — shared by the q123 and
     * q129 oracles so the synthetic raw layer can never drift between
     * them.
@@ -256,6 +253,9 @@ object Extraction {
     s"trim(regexp_replace($decoded, '\\s+', ' ', 'g'))"
   }
 
+  /** DuckDB mirror of [[q123TextExtract]] — the same rawify arithmetic,
+    * the same regex chain, the same line rules as list lambdas.
+    */
   lazy val q123OracleSql: String = {
     def words(x: String): String =
       s"len(list_filter(string_split($x, ' '), w -> len(w) > 0))"
@@ -308,6 +308,21 @@ object Extraction {
     */
   private[operators] val MaxLineDf = 4
 
+  /** The line-vocabulary document frequencies `(line, line_df)` — the
+    * inline form of the `line_df` corpus artifact (q129's aggregate;
+    * the line analogue of `token_freq`, maintained additively because
+    * df over DISJOINT doc sets sums). Shares the [[rawify]]/
+    * [[stripTags]] seam with q123/q129/q133, so the artifact and the
+    * inline aggregate can never strip lines differently.
+    */
+  private[graft] def lineDfRows(docs: DataFrame): DataFrame = {
+    val raw = rawify(col("doc_id"), col("text"))
+    val lineArr = filter(transform(rawLines(raw), stripTags _),
+      l => length(l) > 0)
+    docs.select(col("doc_id"), explode(lineArr).as("line"))
+      .groupBy("line").agg(countDistinct("doc_id").as("line_df"))
+  }
+
   /** q129 — frequency-based line dedup: the CCNet mechanism beside
     * q123's RefinedWeb-style rules. Instead of judging each line in
     * isolation (word floor, lexicon, link density), a line dies when it
@@ -331,21 +346,6 @@ object Extraction {
     * the corpus's lines, and maintenance appends ±df deltas per changed
     * document like every additive artifact.
     */
-  /** The line-vocabulary document frequencies `(line, line_df)` — the
-    * inline form of the `line_df` corpus artifact (q129's aggregate;
-    * the line analogue of `token_freq`, maintained additively because
-    * df over DISJOINT doc sets sums). Shares the [[rawify]]/
-    * [[stripTags]] seam with q123/q129/q133, so the artifact and the
-    * inline aggregate can never strip lines differently.
-    */
-  private[graft] def lineDfRows(docs: DataFrame): DataFrame = {
-    val raw = rawify(col("doc_id"), col("text"))
-    val lineArr = filter(transform(rawLines(raw), stripTags _),
-      l => length(l) > 0)
-    docs.select(col("doc_id"), explode(lineArr).as("line"))
-      .groupBy("line").agg(countDistinct("doc_id").as("line_df"))
-  }
-
   def q129LineDedup(spark: SparkSession, dir: String): DataFrame = {
     val raw = rawify(col("doc_id"), col("text"))
     val lineArr = filter(transform(rawLines(raw), stripTags _),

@@ -659,8 +659,8 @@ object Ivf {
     * the final `cells`) and an update (`cent<i>`), all generated from
     * the same [[K]]/[[Iters]]/[[QuantScale]]/[[TrainSampleTarget]]
     * constants the Spark side trains with.
-    */
-  /** The oracle's Lloyd training replay (`quant` … `cent[[Iters]]`) with
+    *
+    * The oracle's Lloyd training replay (`quant` … `cent[[Iters]]`) with
     * the quantized-source CTE body supplied by the caller — what lets
     * the image-vector IVF (q175) replay the SAME chain over
     * grid-derived vectors instead of the embeddings table (one training

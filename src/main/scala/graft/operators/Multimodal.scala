@@ -48,11 +48,6 @@ object Multimodal {
 
   object Ppm {
 
-    /** Wrap a payload as a P6 container: canonical single-whitespace
-      * header, payload as the pixel plane zero-padded to `w·h·3` with
-      * `h = ceil(max(len,1) / 3w)` — the deterministic media derivation
-      * q28 runs on (the corpus stands in for a decoded crawl).
-      */
     /** The one header template [[encode]] writes — the container-byte
       * accounting (q174) derives its fixed overhead from THIS string,
       * so a template change moves the formulas with it instead of
@@ -66,6 +61,11 @@ object Multimodal {
       */
     val HeaderFixedLen: Int = headerOf(1, 1).length - 2
 
+    /** Wrap a payload as a P6 container: canonical single-whitespace
+      * header, payload as the pixel plane zero-padded to `w·h·3` with
+      * `h = ceil(max(len,1) / 3w)` — the deterministic media derivation
+      * q28 runs on (the corpus stands in for a decoded crawl).
+      */
     def encode(payload: Array[Byte], width: Int): Array[Byte] = {
       require(width > 0, "ppm: width must be positive")
       val height = ((math.max(payload.length, 1) + 3L * width - 1)
@@ -209,17 +209,17 @@ object Multimodal {
       (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
         ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
 
-    /** Wrap a payload's bytes as 16-bit mono PCM frames (odd tail
-      * zero-padded to a full sample) in a canonical RIFF/WAVE
-      * container: RIFF size, fmt chunk (PCM, channels, rate, byte
-      * rate, block align, bits), data chunk.
-      */
     /** Canonical header byte count, derived from the encoder itself
       * (an empty payload is pure header) — the q174 accounting reads
       * this, never a literal 44.
       */
     lazy val HeaderLen: Int = encode(Array.emptyByteArray, 8000).length
 
+    /** Wrap a payload's bytes as 16-bit mono PCM frames (odd tail
+      * zero-padded to a full sample) in a canonical RIFF/WAVE
+      * container: RIFF size, fmt chunk (PCM, channels, rate, byte
+      * rate, block align, bits), data chunk.
+      */
     def encode(payload: Array[Byte], sampleRate: Int): Array[Byte] = {
       val dataLen = payload.length + (payload.length & 1)
       val out = java.nio.ByteBuffer.allocate(44 + dataLen)
@@ -1337,24 +1337,6 @@ object Multimodal {
   val FrameWindows = 3
   val FrameLen = 64
 
-  /** q164 — the multimodal FRAME-SAMPLE op as a hash-oracled query:
-    * each document's PCM take (q161's derivation) sliced into
-    * [[FrameWindows]] evenly spaced windows of [[FrameLen]] frames by
-    * [[Wav.windowedStats]], each window reduced to integer (count,
-    * amplitude sum, peak) in the kernel with the mean dividing in the
-    * plan — the windowed-feature pass an audio featurizer runs before
-    * embedding (VAD energy, clipping detection), and the audio analog
-    * of [[frameSample]]'s byte windows. The oracle re-slices the same
-    * windows from the replayed samples, so the stride arithmetic, the
-    * window clamp, and the dropped-past-the-end windows are all
-    * hash-pinned. Takes with zero frames emit no windows (oracle:
-    * `WHERE` on the frame count), and every emitted window holds ≥ 1
-    * sample so the mean never divides by zero.
-    *
-    * Scale shape: one `mapPartitions` decode pass emitting ≤
-    * [[FrameWindows]] rows per doc; no per-sample rows leave the
-    * kernel.
-    */
   /** The frame-window kernel pass shared by q164 (window grain) and
     * q166 (per-take screen): one `mapPartitions` decode emitting ≤
     * [[FrameWindows]] rows per doc, each with the window's integer
@@ -1399,6 +1381,24 @@ object Multimodal {
   private def audioWindows(spark: SparkSession, dir: String): DataFrame =
     audioWindowsOf(Tables.documentsFanned(spark, dir))
 
+  /** q164 — the multimodal FRAME-SAMPLE op as a hash-oracled query:
+    * each document's PCM take (q161's derivation) sliced into
+    * [[FrameWindows]] evenly spaced windows of [[FrameLen]] frames by
+    * [[Wav.windowedStats]], each window reduced to integer (count,
+    * amplitude sum, peak) in the kernel with the mean dividing in the
+    * plan — the windowed-feature pass an audio featurizer runs before
+    * embedding (VAD energy, clipping detection), and the audio analog
+    * of [[frameSample]]'s byte windows. The oracle re-slices the same
+    * windows from the replayed samples, so the stride arithmetic, the
+    * window clamp, and the dropped-past-the-end windows are all
+    * hash-pinned. Takes with zero frames emit no windows (oracle:
+    * `WHERE` on the frame count), and every emitted window holds ≥ 1
+    * sample so the mean never divides by zero.
+    *
+    * Scale shape: one `mapPartitions` decode pass emitting ≤
+    * [[FrameWindows]] rows per doc; no per-sample rows leave the
+    * kernel.
+    */
   def q164AudioFrames(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorOps.round6
     audioWindows(spark, dir)
@@ -1412,22 +1412,7 @@ object Multimodal {
 
   lazy val q164OracleSql: String = {
     import graft.functions.VectorOps.round6Sql
-    s"""WITH $wavSampCtes, wins AS (
-       |  SELECT doc_id, s, CAST((L + 1) // 2 AS BIGINT) AS n,
-       |         unnest(generate_series(0, ${FrameWindows - 1})) AS k
-       |  FROM samp WHERE (L + 1) // 2 > 0
-       |), w2 AS (
-       |  SELECT doc_id, k, n, s,
-       |         k * GREATEST(GREATEST(n - $FrameLen, 0) // $FrameWindows, 1)
-       |           AS start
-       |  FROM wins
-       |), w3 AS (
-       |  SELECT doc_id, k, start,
-       |         list_transform(generate_series(CAST(start + 1 AS INTEGER),
-       |           CAST(LEAST(start + $FrameLen, n) AS INTEGER)),
-       |           j -> s[j]) AS ws
-       |  FROM w2 WHERE start < n
-       |)
+    s"""WITH $audioWindowCtes
        |SELECT doc_id, CAST(k AS INTEGER) AS window_idx,
        |       CAST(start AS BIGINT) AS start_frame,
        |       CAST(len(ws) AS BIGINT) AS n_samples,
@@ -1488,23 +1473,6 @@ object Multimodal {
     */
   val SilenceMeanAbs = 328L
 
-  /** q166 — the audio QUALITY SCREEN: per take, q164's sampled windows
-    * rolled up to (window count, sample count, magnitude sum, peak) and
-    * two flags a media pipeline gates on before paying for embedding —
-    * `clipped` (any windowed peak at full scale: the take is distorted)
-    * and `silent` (windowed mean |amplitude| under [[SilenceMeanAbs]],
-    * integer-exact; zero-frame takes are silent by definition) —
-    * `keep = ¬clipped ∧ ¬silent`. Screening on SAMPLED windows, not the
-    * whole take, is the point of frame-sampling: the verdict costs
-    * ≤ [[FrameWindows]]·[[FrameLen]] samples per take regardless of
-    * take length. Every document gets a verdict row (zero-frame takes
-    * included, via the left join), so the screen composes with the
-    * curation ledger the way q83's text gate does.
-    *
-    * Scale shape: the one decode pass → doc-grain map-side-partial
-    * aggregate (≤ 3 rows in, 1 out per doc) → broadcast-or-shuffle
-    * equi-join back to the doc spine; flags are column arithmetic.
-    */
   /** q166's verdict core over ANY `(doc_id, text[, n_chars])` frame —
     * one definition for the batch audit and the streaming intake gate
     * (`StreamingOps.audioQualityOfBatch`), so the screen a crawl passes
@@ -1537,6 +1505,23 @@ object Multimodal {
         (!clipped && !silent).as("keep"))
   }
 
+  /** q166 — the audio QUALITY SCREEN: per take, q164's sampled windows
+    * rolled up to (window count, sample count, magnitude sum, peak) and
+    * two flags a media pipeline gates on before paying for embedding —
+    * `clipped` (any windowed peak at full scale: the take is distorted)
+    * and `silent` (windowed mean |amplitude| under [[SilenceMeanAbs]],
+    * integer-exact; zero-frame takes are silent by definition) —
+    * `keep = ¬clipped ∧ ¬silent`. Screening on SAMPLED windows, not the
+    * whole take, is the point of frame-sampling: the verdict costs
+    * ≤ [[FrameWindows]]·[[FrameLen]] samples per take regardless of
+    * take length. Every document gets a verdict row (zero-frame takes
+    * included, via the left join), so the screen composes with the
+    * curation ledger the way q83's text gate does.
+    *
+    * Scale shape: the one decode pass → doc-grain map-side-partial
+    * aggregate (≤ 3 rows in, 1 out per doc) → broadcast-or-shuffle
+    * equi-join back to the doc spine; flags are column arithmetic.
+    */
   def q166AudioQualityScreen(spark: SparkSession, dir: String): DataFrame =
     audioVerdictsOf(Tables.documents(spark, dir)).orderBy("doc_id")
 
@@ -1673,25 +1658,6 @@ object Multimodal {
   val ImageKnnProbes = 3
   val ImageTopK = 5
 
-  /** q167 — SIMILARITY SEARCH over image features: q162's thumbnails as
-    * 16-dim grayscale-mean embeddings (`s_c / (3·n_c)` per cell — the
-    * fixed-size vector a vision tower would refine), brute-force cosine
-    * top-[[ImageTopK]] for [[ImageKnnProbes]] probe images. The
-    * decode → resize → embed → search arc end to end: probes are the
-    * HIGHEST doc_ids among full-grid (gy = 4) images (the q117
-    * eval-probe posture), candidates every other full-grid image
-    * (partial grids aren't dimension-compatible), scores through the
-    * native [[graft.functions.DotProduct]] kernel, rounded BEFORE
-    * ranking so cross-engine ties break identically (q22's rule:
-    * cos DESC, neighbor_id ASC).
-    *
-    * Scale shape: the probe side is [[ImageKnnProbes]] rows broadcast
-    * into one map-only scan of the candidate vectors, then a
-    * per-probe top-k — q22's brute-force baseline over KERNEL-DERIVED
-    * features instead of stored embeddings; the IVF/PQ path (q125/
-    * q139) applies unchanged the moment the fingerprint frame is
-    * materialized as a standing artifact.
-    */
   /** The 16-dim grid EMBEDDING frame `(vec_id, vec)` of the full-grid
     * images — cell means off a grid frame (the standing `image_grids`
     * artifact in artifact mode; one map, no decode). The image-side
@@ -1712,6 +1678,25 @@ object Multimodal {
     imageVecRows(grids)
       .select(col("vec_id"), Ivf.quantize(col("vec")).as("q"))
 
+  /** q167 — SIMILARITY SEARCH over image features: q162's thumbnails as
+    * 16-dim grayscale-mean embeddings (`s_c / (3·n_c)` per cell — the
+    * fixed-size vector a vision tower would refine), brute-force cosine
+    * top-[[ImageTopK]] for [[ImageKnnProbes]] probe images. The
+    * decode → resize → embed → search arc end to end: probes are the
+    * HIGHEST doc_ids among full-grid (gy = 4) images (the q117
+    * eval-probe posture), candidates every other full-grid image
+    * (partial grids aren't dimension-compatible), scores through the
+    * native [[graft.functions.DotProduct]] kernel, rounded BEFORE
+    * ranking so cross-engine ties break identically (q22's rule:
+    * cos DESC, neighbor_id ASC).
+    *
+    * Scale shape: the probe side is [[ImageKnnProbes]] rows broadcast
+    * into one map-only scan of the candidate vectors, then a
+    * per-probe top-k — q22's brute-force baseline over KERNEL-DERIVED
+    * features instead of stored embeddings; the IVF/PQ path (q125/
+    * q139) applies unchanged the moment the fingerprint frame is
+    * materialized as a standing artifact.
+    */
   def q167ImageKnn(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorOps
     val vecs = imageVecRows(imageFingerprints(spark, dir))
@@ -1741,26 +1726,6 @@ object Multimodal {
   val Y4mSamples = 3
   val Y4mFps = 24
 
-  /** q171 — the multimodal VIDEO pipeline end-to-end: each document's
-    * text bytes wrapped as a REAL YUV4MPEG2 stream (the uncompressed
-    * video container ffmpeg/mplayer read: ASCII stream header, per
-    * frame an ASCII `FRAME\n` marker + the luma plane, mono chroma,
-    * width from doc stats, last frame zero-padded), then the parser
-    * walks the header grammar (unknown parameters skipped) and the
-    * frame markers, and [[Y4m.frameStats]] samples [[Y4mSamples]]
-    * evenly spaced frames, reducing each to integer luma (count, sum,
-    * min, max) — the thumbnail-track pass a video featurizer runs
-    * before embedding, and the third REAL container beside P6 (q28)
-    * and RIFF/WAVE (q161): image, audio, and video each decode from a
-    * self-describing format, never a synthetic stub. The oracle
-    * rebuilds every sampled frame from the character codes — frame
-    * size, stride, the drop-past-the-end rule, and the zero padding
-    * visible in the last frame's min — so the whole walk is
-    * hash-pinned. Means divide in the plan (the q28 discipline).
-    *
-    * Scale shape: one `mapPartitions` decode pass emitting ≤
-    * [[Y4mSamples]] rows per doc; no per-pixel rows leave the kernel.
-    */
   /** The video frame-sampling kernel pass shared by q171 (frame grain)
     * and q172 (per-take signature): one `mapPartitions` decode emitting
     * ≤ [[Y4mSamples]] rows per doc, each with the frame's integer luma
@@ -1815,6 +1780,26 @@ object Multimodal {
       }(enc)
   }
 
+  /** q171 — the multimodal VIDEO pipeline end-to-end: each document's
+    * text bytes wrapped as a REAL YUV4MPEG2 stream (the uncompressed
+    * video container ffmpeg/mplayer read: ASCII stream header, per
+    * frame an ASCII `FRAME\n` marker + the luma plane, mono chroma,
+    * width from doc stats, last frame zero-padded), then the parser
+    * walks the header grammar (unknown parameters skipped) and the
+    * frame markers, and [[Y4m.frameStats]] samples [[Y4mSamples]]
+    * evenly spaced frames, reducing each to integer luma (count, sum,
+    * min, max) — the thumbnail-track pass a video featurizer runs
+    * before embedding, and the third REAL container beside P6 (q28)
+    * and RIFF/WAVE (q161): image, audio, and video each decode from a
+    * self-describing format, never a synthetic stub. The oracle
+    * rebuilds every sampled frame from the character codes — frame
+    * size, stride, the drop-past-the-end rule, and the zero padding
+    * visible in the last frame's min — so the whole walk is
+    * hash-pinned. Means divide in the plan (the q28 discipline).
+    *
+    * Scale shape: one `mapPartitions` decode pass emitting ≤
+    * [[Y4mSamples]] rows per doc; no per-pixel rows leave the kernel.
+    */
   def q171VideoFrames(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorOps.round6
     videoFrames(spark, dir).select(col("doc_id"), col("frame_idx"),
@@ -2067,6 +2052,17 @@ object Multimodal {
 
   // ---- q174: per-source media storage accounting ------------------------------
 
+  /** Y4M stream-header bytes excluding the WIDTH digits (height and
+    * fps are fixed corpus geometry, so their digits are part of the
+    * fixed overhead), derived from [[Y4m.headerOf]] with a
+    * single-digit probe width subtracted back out — change the
+    * template or the geometry constants and the accounting formulas
+    * (both engines — the oracle interpolates the same value) move
+    * with them.
+    */
+  private lazy val Y4mHeaderFixedLen: Int =
+    Y4m.headerOf(1, Y4mHeight, Y4mFps).length - 1
+
   /** q174 — media STORAGE accounting by (source, modality): documents,
     * container bytes, media units (pixels / samples / frames), mean
     * units and bytes per doc, and the modality's leading dimension
@@ -2084,17 +2080,6 @@ object Multimodal {
     * dimension-sized rollup. The oracle replays all three container
     * layouts byte-for-byte.
     */
-  /** Y4M stream-header bytes excluding the WIDTH digits (height and
-    * fps are fixed corpus geometry, so their digits are part of the
-    * fixed overhead), derived from [[Y4m.headerOf]] with a
-    * single-digit probe width subtracted back out — change the
-    * template or the geometry constants and the accounting formulas
-    * (both engines — the oracle interpolates the same value) move
-    * with them.
-    */
-  private lazy val Y4mHeaderFixedLen: Int =
-    Y4m.headerOf(1, Y4mHeight, Y4mFps).length - 1
-
   def q174MediaStorage(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorOps.round6
     val d = Tables.documents(spark, dir).select(col("source"),

@@ -116,11 +116,9 @@ object Pq {
     * each iteration ONE driver-local pass covering all [[SubM]]
     * subspaces at once. Init = the [[PqK]] smallest sampled `vec_id`s'
     * subvectors per subspace, codeword ids in that order; an emptied
-    * codeword keeps its previous value. `spark` is unused; the artifact
-    * builds and `EmbeddingArtifactsSpec` call it with their session.
+    * codeword keeps its previous value.
     */
-  private[graft] def train(spark: SparkSession,
-      sub: DataFrame): Seq[(Int, Int, Array[Long])] = {
+  private[graft] def train(sub: DataFrame): Seq[(Int, Int, Array[Long])] = {
     val mod = Ivf.sampleModulus(sub.select("vec_id").distinct().count())
     val tsub =
       if (mod == 1L) sub

@@ -215,8 +215,8 @@ object QualityTrain {
     * [[CuratedSources]] constants the Spark side trains with. Weight
     * merges are FULL OUTER JOINs (a feature enters the model the first
     * epoch it appears in a misclassified document).
-    */
-  /** The shared training replay CTE chain (`smod` … `aw[[Iters]]`) —
+    *
+    * The shared training replay CTE chain (`smod` … `aw[[Iters]]`) —
     * q148 selects the final averaged weights from it, q151 scores the
     * corpus with them; one chain, so the two can never train different
     * models.
@@ -277,14 +277,6 @@ object QualityTrain {
        |FROM aw$Iters WHERE w <> 0
        |ORDER BY feature""".stripMargin
 
-  /** q151's oracle: the training chain, the trained weights split into
-    * token features + intercept, and q83's exact scoring arithmetic
-    * (per-occurrence integer weight sum, one double scale-and-divide,
-    * sign label) — occurrence-grain explode + LEFT JOIN instead of
-    * q83's literal CASE chain because the weights are a trained CTE,
-    * not constants; `SUM(COALESCE(w, 0))` mirrors the kernel's
-    * missing-token zero.
-    */
   /** The training chain plus q83's scoring arithmetic as CTEs ending in
     * `scored (doc_id, n_tokens, quality_score)` — q151 labels and
     * returns it per document, q154 bands and rolls it up; one chain, so
@@ -318,6 +310,14 @@ object QualityTrain {
        |)""".stripMargin
   }
 
+  /** q151's oracle: the training chain, the trained weights split into
+    * token features + intercept, and q83's exact scoring arithmetic
+    * (per-occurrence integer weight sum, one double scale-and-divide,
+    * sign label) — occurrence-grain explode + LEFT JOIN instead of
+    * q83's literal CASE chain because the weights are a trained CTE,
+    * not constants; `SUM(COALESCE(w, 0))` mirrors the kernel's
+    * missing-token zero.
+    */
   lazy val q151OracleSql: String =
     s"""WITH $scoringCtes
        |SELECT doc_id, n_tokens, quality_score,

@@ -117,24 +117,6 @@ object Segments {
   /** Containment threshold for reported pairs. */
   private val MinContainment = 0.5
 
-  /** q65 — winnowed-fingerprint near-dup pairs (Schleimer et al.,
-    * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
-    * 2003 — the MOSS algorithm): hash every [[WinnowK]]-gram
-    * (cross-engine [[graft.functions.PolyHash]]), keep the MINIMUM hash
-    * of every [[WinnowW]]-wide window of consecutive positions (the
-    * guarantee: any shared run of k+w−1 tokens shares ≥1 selected
-    * fingerprint), pair documents through the inverted fingerprint index,
-    * and report pairs whose shared-fingerprint CONTAINMENT
-    * (|A∩B| / min(|A|,|B|)) reaches [[MinContainment]] — containment
-    * rather than Jaccard so a short document pasted inside a long one
-    * still surfaces. The sixth member of the dedup family: positional
-    * like q54, sampled like MinHash, exact-guarantee like q20, at ~1/w
-    * of q20's index size.
-    *
-    * Scale shape: one shuffle by doc for the per-doc window min (sort
-    * bounded by doc length), one shuffle by fingerprint for the df-capped
-    * inverted-index self-join — q20's bounded join on a w× smaller index.
-    */
   /** Per-document winnowed fingerprint set (doc_id, fp) — the selection
     * step of [[q65WinnowPairs]], exposed for the guarantee property test
     * (any two docs sharing a run of k+w−1 tokens share a fingerprint).
@@ -169,6 +151,24 @@ object Segments {
       .distinct()
   }
 
+  /** q65 — winnowed-fingerprint near-dup pairs (Schleimer et al.,
+    * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
+    * 2003 — the MOSS algorithm): hash every [[WinnowK]]-gram
+    * (cross-engine [[graft.functions.PolyHash]]), keep the MINIMUM hash
+    * of every [[WinnowW]]-wide window of consecutive positions (the
+    * guarantee: any shared run of k+w−1 tokens shares ≥1 selected
+    * fingerprint), pair documents through the inverted fingerprint index,
+    * and report pairs whose shared-fingerprint CONTAINMENT
+    * (|A∩B| / min(|A|,|B|)) reaches [[MinContainment]] — containment
+    * rather than Jaccard so a short document pasted inside a long one
+    * still surfaces. The sixth member of the dedup family: positional
+    * like q54, sampled like MinHash, exact-guarantee like q20, at ~1/w
+    * of q20's index size.
+    *
+    * Scale shape: one shuffle by doc for the per-doc window min (sort
+    * bounded by doc length), one shuffle by fingerprint for the df-capped
+    * inverted-index self-join — q20's bounded join on a w× smaller index.
+    */
   def q65WinnowPairs(spark: SparkSession, dir: String): DataFrame = {
     // materialized once: the winnow chain (explode + two windows +
     // distinct) feeds both the capped pair join AND the per-doc counts,

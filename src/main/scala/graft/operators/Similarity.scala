@@ -543,10 +543,6 @@ object Similarity {
       .orderBy("id_a", "id_b")
   }
 
-  /** Generated from [[nearDupPlanes]] — bucket ids, the population cap,
-    * and the cosine confirm all from the same constants as the Spark
-    * plan, so the two engines enumerate the identical candidate set.
-    */
   /** The near-dup index rows as SQL — one UNION ALL branch per hash
     * table against the literal plane vectors. Shared by [[q82OracleSql]]
     * and [[q116OracleSql]], so the pair enumeration and the bucket
@@ -566,6 +562,10 @@ object Similarity {
       .mkString("\n  UNION ALL\n  ")
   }
 
+  /** Generated from [[nearDupPlanes]] — bucket ids, the population cap,
+    * and the cosine confirm all from the same constants as the Spark
+    * plan, so the two engines enumerate the identical candidate set.
+    */
   lazy val q82OracleSql: String = annNearDupPairsSqlFor("embeddings")
 
   /** [[q82OracleSql]] over a caller-chosen table/CTE name — q117's

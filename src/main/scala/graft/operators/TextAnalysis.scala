@@ -490,6 +490,25 @@ object TextAnalysis {
 
   // ---- q87: bigram-LM surprisal ------------------------------------------
 
+  /** Adjacent-token pairs of `docs`, keeping `keep`'s columns beside
+    * (w1, w2) — the ONE bigram derivation behind q87's per-doc pass and
+    * the `bigram_freq` artifact rows, so the standing counts can never
+    * drift from the scoring pass's pairing.
+    */
+  private[graft] def bigramsOf(docs: DataFrame,
+      keep: Seq[String]): DataFrame = {
+    val k = keep.map(col)
+    docs
+      .select(k :+ Dedup.tokens(col("text")).as("t"): _*)
+      // sequence(1, size-1) would run DESCENDING for empty/1-token docs
+      // (Spark generates start>stop downward) — guard to NULL so explode
+      // drops bigram-less documents here and callers restore them
+      .select(k :+ explode(when(size(col("t")) >= 2, expr(
+        "transform(sequence(1, size(t) - 1)," +
+          " i -> struct(t[i - 1] AS w1, t[i] AS w2))"))).as("bg"): _*)
+      .select(k :+ col("bg.w1").as("w1") :+ col("bg.w2").as("w2"): _*)
+  }
+
   /** q87 — bigram-LM surprisal: [[q86UnigramSurprisal]] one model class
     * up, the CCNet direction. Fluency is CONDITIONAL, not marginal —
     * "the the the" is all common tokens (low unigram surprisal) but
@@ -517,25 +536,6 @@ object TextAnalysis {
     * counting scan is retired and the scoring pass is the only
     * documents read.
     */
-  /** Adjacent-token pairs of `docs`, keeping `keep`'s columns beside
-    * (w1, w2) — the ONE bigram derivation behind q87's per-doc pass and
-    * the `bigram_freq` artifact rows, so the standing counts can never
-    * drift from the scoring pass's pairing.
-    */
-  private[graft] def bigramsOf(docs: DataFrame,
-      keep: Seq[String]): DataFrame = {
-    val k = keep.map(col)
-    docs
-      .select(k :+ Dedup.tokens(col("text")).as("t"): _*)
-      // sequence(1, size-1) would run DESCENDING for empty/1-token docs
-      // (Spark generates start>stop downward) — guard to NULL so explode
-      // drops bigram-less documents here and callers restore them
-      .select(k :+ explode(when(size(col("t")) >= 2, expr(
-        "transform(sequence(1, size(t) - 1)," +
-          " i -> struct(t[i - 1] AS w1, t[i] AS w2))"))).as("bg"): _*)
-      .select(k :+ col("bg.w1").as("w1") :+ col("bg.w2").as("w2"): _*)
-  }
-
   def q87BigramSurprisal(spark: SparkSession, dir: String): DataFrame =
     bigramSurprisal(spark, dir, MaxBroadcastVocab)
 
@@ -1164,6 +1164,18 @@ object TextAnalysis {
 
   // ---- q153: fertility under the TRAINED tokenizer ------------------------
 
+  /** The q135-trained merge table collected in rank order — the seam
+    * q160's budget run and the artifact build construct
+    * [[graft.functions.Tokenizer.TrainedWs]] from. Deterministic
+    * (integer weights, binary-order tie-breaks), so every caller trains
+    * the identical table and the digest-keyed count artifact committed
+    * by one process resolves in another.
+    */
+  private[graft] def trainedMerges(spark: SparkSession,
+      dir: String): Seq[(String, String)] =
+    q135BpeTrain(spark, dir).collect().sortBy(_.getAs[Int]("step"))
+      .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"))).toSeq
+
   /** q153 — per-source fertility under the q135-TRAINED tokenizer: the
     * trained merge table applied back to the corpus vocabulary, rolled
     * to source grain. q95 budgets with the shipped PRE-tokenizer (a
@@ -1199,18 +1211,6 @@ object TextAnalysis {
     * All sums are exact longs; the two ratios are decimal-routed once
     * at the end (the q95 posture).
     */
-  /** The q135-trained merge table collected in rank order — the seam
-    * q160's budget run and the artifact build construct
-    * [[graft.functions.Tokenizer.TrainedWs]] from. Deterministic
-    * (integer weights, binary-order tie-breaks), so every caller trains
-    * the identical table and the digest-keyed count artifact committed
-    * by one process resolves in another.
-    */
-  private[graft] def trainedMerges(spark: SparkSession,
-      dir: String): Seq[(String, String)] =
-    q135BpeTrain(spark, dir).collect().sortBy(_.getAs[Int]("step"))
-      .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"))).toSeq
-
   def q153TrainedFertility(spark: SparkSession, dir: String): DataFrame = {
     // inline fallback pays ONE tokenizing scan shared by training and
     // scoring (the q90 checkpoint posture); artifact mode reads the

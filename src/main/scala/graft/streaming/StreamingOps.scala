@@ -409,17 +409,14 @@ object StreamingOps {
     */
   def artifactMaintainingIntake(docs: DataFrame, spark: SparkSession,
       corpusDir: String, checkpoint: Option[String] = None): StreamingQuery =
-    maintainingIntake(docs, spark, corpusDir,
-      table = "documents.parquet", idCol = "doc_id",
-      fingerprint = graft.Artifacts.corpusFingerprint,
-      materialized = graft.Artifacts.isFullyMaterialized,
-      maintain = graft.Artifacts.maintainAppended(_, _, _, _, _),
-      checkpoint = checkpoint)
+    maintainingIntake(docs, spark, corpusDir, graft.Artifacts.Docs, checkpoint)
 
   /** The ONE intake core behind [[artifactMaintainingIntake]] and
-    * [[vectorIntake]], parameterized by table/id/fingerprint/probe/
-    * maintenance — the crash-recovery and leg-lockstep logic is subtle
-    * enough that two hand-synced copies would be the next drift bug:
+    * [[vectorIntake]], parameterized by the artifact table `table` (its
+    * file, id column, fingerprint, completeness probe and the shared
+    * `Artifacts.append` body) — the crash-recovery and leg-lockstep
+    * logic is subtle enough that two hand-synced copies would be the
+    * next drift bug:
     *
     *  - ONE materialized frame feeds both legs: dedup-within-batch and
     *    the anti-join against the table run once, pinned by the
@@ -436,37 +433,29 @@ object StreamingOps {
     *    instead of leaving them stale forever.
     */
   private def maintainingIntake(rows: DataFrame, spark: SparkSession,
-      corpusDir: String, table: String, idCol: String,
-      fingerprint: (SparkSession, String) => String,
-      materialized: (SparkSession, String) => Boolean,
-      maintain: (SparkSession, String, String, DataFrame, Boolean) =>
-        graft.Artifacts.IncrementalResult,
+      corpusDir: String, table: graft.Artifacts.Source,
       checkpoint: Option[String]): StreamingQuery = {
-    val path = s"$corpusDir/$table"
-    def existing(): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        Some(spark.read.parquet(path))
-      else None
-    }
+    val path = s"$corpusDir/${table.file}"
+    val idCol = table.key
     val writer = rows.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         graft.Checkpoints.scoped {
-          val fpOld = fingerprint(spark, corpusDir)
-          val fresh = graft.Checkpoints.checkpoint(existing() match {
-            case Some(ex) => batch.toDF().dropDuplicates(idCol)
-              .join(ex.select(idCol), Seq(idCol), "left_anti")
-            case None => batch.toDF().dropDuplicates(idCol)
-          })
+          val fpOld = table.fingerprint(spark, corpusDir)
+          val deduped = batch.toDF().dropDuplicates(idCol)
+          val fresh = graft.Checkpoints.checkpoint(
+            if (!table.exists(spark, corpusDir)) deduped
+            else deduped.join(spark.read.parquet(path).select(idCol),
+              Seq(idCol), "left_anti"))
           if (fresh.isEmpty) {
-            if (!materialized(spark, corpusDir))
-              maintain(spark, corpusDir, fpOld,
-                batch.toDF().dropDuplicates(idCol), false)
+            if (!table.materialized(spark, corpusDir))
+              graft.Artifacts.append(table, spark, corpusDir, fpOld, deduped,
+                prefiltered = false)
           } else {
             fresh.write.mode(SaveMode.Append).parquet(path)
             graft.Tables.invalidate(corpusDir)
-            maintain(spark, corpusDir, fpOld, fresh, true)
+            graft.Artifacts.append(table, spark, corpusDir, fpOld, fresh,
+              prefiltered = true)
           }
         }
         ()
@@ -495,12 +484,8 @@ object StreamingOps {
     */
   def vectorIntake(vectors: DataFrame, spark: SparkSession,
       corpusDir: String, checkpoint: Option[String] = None): StreamingQuery =
-    maintainingIntake(vectors, spark, corpusDir,
-      table = "embeddings.parquet", idCol = "vec_id",
-      fingerprint = graft.Artifacts.embeddingsFingerprint,
-      materialized = graft.Artifacts.isEmbeddingsMaterialized,
-      maintain = graft.Artifacts.maintainEmbeddingsAppended(_, _, _, _, _),
-      checkpoint = checkpoint)
+    maintainingIntake(vectors, spark, corpusDir, graft.Artifacts.Vectors,
+      checkpoint)
 
   /** Streaming exact dedup by event id: an at-least-once upstream
     * re-delivers rows; this keeps the first arrival of each `idCol` and

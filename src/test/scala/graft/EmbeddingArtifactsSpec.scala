@@ -224,13 +224,13 @@ class EmbeddingArtifactsSpec extends SparkSpec {
       val scratchCents = graft.operators.Ivf.train(scratchQuant)
       val scratchSub = Checkpoints.checkpoint(
         graft.operators.Pq.subvectors(scratchQuant))
-      val scratchPq = graft.operators.Pq.train(spark, scratchSub)
+      val scratchPq = graft.operators.Pq.train(scratchSub)
       val scratchResSub = Checkpoints.checkpoint(
         graft.operators.Pq.subvectors(graft.operators.Pq.residuals(
           scratchQuant,
           graft.operators.Ivf.assignFrame(scratchQuant, scratchCents),
           scratchCents)))
-      val scratchResPq = graft.operators.Pq.train(spark, scratchResSub)
+      val scratchResPq = graft.operators.Pq.train(scratchResSub)
       // independent semantic-flags expectation: inline with NO root —
       // trains its own scratch model (asserted equal to the committed
       // one via the centroid entries)
@@ -349,13 +349,13 @@ class EmbeddingArtifactsSpec extends SparkSpec {
       val scratchCents = graft.operators.Ivf.train(scratchQuant)
       val scratchSub = Checkpoints.checkpoint(
         graft.operators.Pq.subvectors(scratchQuant))
-      val scratchPq = graft.operators.Pq.train(spark, scratchSub)
+      val scratchPq = graft.operators.Pq.train(scratchSub)
       val scratchResSub = Checkpoints.checkpoint(
         graft.operators.Pq.subvectors(graft.operators.Pq.residuals(
           scratchQuant,
           graft.operators.Ivf.assignFrame(scratchQuant, scratchCents),
           scratchCents)))
-      val scratchResPq = graft.operators.Pq.train(spark, scratchResSub)
+      val scratchResPq = graft.operators.Pq.train(scratchResSub)
       // independent semantic-flags expectation (see the incremental test)
       Artifacts.clearRoot()
       val scratchSemFlags =
@@ -424,6 +424,104 @@ class EmbeddingArtifactsSpec extends SparkSpec {
       assert(r2.mode == "full_large_diff", r2)
       assert(Artifacts.EmbeddingNames.forall(
         Artifacts.isMaterialized(spark, newDir2, _)))
+    } finally {
+      Artifacts.clearRoot()
+      Tables.invalidate(oldDir); Tables.invalidate(newDir)
+      deleteRecursively(root)
+      deleteRecursively(new java.io.File(base))
+      Checkpoints.releaseAll()
+    }
+  }
+
+  /** Every [[Artifacts.EmbeddingNames]] entry committed for `dir` under
+    * the current root equals what a scratch [[Artifacts.materializeEmbeddings]]
+    * of `dir` commits under a fresh root.
+    */
+  private def assertScratchEqual(dir: String): Unit = {
+    val root = Artifacts.root.get
+    val got = Artifacts.EmbeddingNames.map(n =>
+      n -> rows(Artifacts.readCommitted(spark, dir, n))).toMap
+    val scratch = Files.createTempDirectory("graft-emb-scratch-root").toFile
+    try {
+      Artifacts.setRoot(scratch.getAbsolutePath)
+      Artifacts.materializeEmbeddings(spark, dir)
+      Artifacts.EmbeddingNames.foreach { n =>
+        assert(got(n) == rows(Artifacts.readCommitted(spark, dir, n)),
+          s"$n drifted from a scratch materializeEmbeddings")
+      }
+    } finally {
+      Artifacts.setRoot(root)
+      deleteRecursively(scratch)
+    }
+  }
+
+  test("maintainEmbeddingsAppended detects an unaccounted external append and rebuilds") {
+    // another writer lands an embeddings part file between fpOld
+    // resolution and maintenance: folding only the batch would commit
+    // vector artifacts that resolve as current while missing its rows
+    val root = Files.createTempDirectory("graft-embdelta-root").toFile
+    val base = Files.createTempDirectory("graft-embdelta-corpus").toString
+    val corpus = s"$base/c"
+    try {
+      val src = spark.read.parquet(s"$sf/embeddings.parquet")
+      writeEmb(src.filter(col("vec_id") < 400), corpus)
+      Artifacts.setRoot(root.getAbsolutePath)
+      Artifacts.materializeEmbeddings(spark, corpus)
+      val fpOld = Artifacts.embeddingsFingerprint(spark, corpus)
+      // the batch this maintenance knows about...
+      val batch = src.filter(col("vec_id") >= 400 && col("vec_id") < 450)
+      batch.write.mode("append").parquet(s"$corpus/embeddings.parquet")
+      // ...and an EXTERNAL part file it does not
+      src.filter(col("vec_id") >= 450)
+        .write.mode("append").parquet(s"$corpus/embeddings.parquet")
+      Tables.invalidate(corpus)
+      val res = Artifacts.maintainEmbeddingsAppended(spark, corpus, fpOld,
+        batch)
+      assert(res.mode == "full_unexpected_delta", res)
+      assert(Artifacts.isEmbeddingsMaterialized(spark, corpus))
+      assert(Artifacts.readCommitted(spark, corpus, Artifacts.VecHashesName)
+        .count() == src.count())
+      assertScratchEqual(corpus)
+    } finally {
+      Artifacts.clearRoot()
+      Tables.invalidate(corpus)
+      deleteRecursively(root)
+      deleteRecursively(new java.io.File(base))
+      Checkpoints.releaseAll()
+    }
+  }
+
+  test("a widened vector artifact set backfills the old snapshot instead of a full rebuild") {
+    // a pre-upgrade vector tree: the old snapshot lacks one entry a newer
+    // library version added. The promotion must backfill it against the
+    // OLD table and stay on the incremental path
+    val root = Files.createTempDirectory("graft-embbackfill-root").toFile
+    val base = Files.createTempDirectory("graft-embbackfill-corpus").toString
+    val (oldDir, newDir) = (s"$base/old", s"$base/new")
+    try {
+      val src = spark.read.parquet(s"$sf/embeddings.parquet")
+      writeEmb(src, oldDir)
+      // new snapshot: 5 re-encoded vectors, 5 removed
+      writeEmb(src.filter(col("vec_id") < 5)
+        .withColumn("embedding",
+          transform(col("embedding"), (x: Column) => x * lit(-1.0f)))
+        .unionByName(src.filter(col("vec_id") >= 10)), newDir)
+      Artifacts.setRoot(root.getAbsolutePath)
+      Artifacts.materializeEmbeddings(spark, oldDir)
+      val fpOld = Artifacts.embeddingsFingerprint(spark, oldDir)
+      val key = Artifacts.corpusKey(oldDir)
+      deleteRecursively(new java.io.File(
+        s"$root/$key/${Artifacts.VecHashesName}/fp=$fpOld"))
+      assert(!Artifacts.isEmbeddingsMaterialized(spark, oldDir))
+
+      val res = Artifacts.maintainEmbeddingsIncremental(spark, oldDir, newDir)
+      assert(res.mode == "incremental",
+        s"promotion fell back to ${res.mode} instead of backfilling")
+      assert(res.changed == 5 && res.removed == 5, res)
+      // the backfill restored the old snapshot's full set...
+      assert(Artifacts.isEmbeddingsMaterialized(spark, oldDir))
+      // ...and the maintained new artifacts equal a scratch build
+      assertScratchEqual(newDir)
     } finally {
       Artifacts.clearRoot()
       Tables.invalidate(oldDir); Tables.invalidate(newDir)
