@@ -1884,8 +1884,9 @@ object Artifacts {
     SegEntry(rel, n, ranges)
   }
 
-  /** Memoized read handles, the same discipline as `Tables.table`: every
-    * `spark.read.parquet` pays a footer/schema job plus a file listing at
+  /** Memoized read handles, the same discipline as `Tables.table`: an
+    * open ([[Tables.parquet]] — a driver-side footer read, no job) still
+    * pays a file listing and the relation's plan construction at
     * CONSTRUCTION time — inside the timed window of every consumer — and
     * an artifact-fed query re-constructs its plan on every invocation.
     * The key carries the segment layout signature (the manifest's real
@@ -1923,7 +1924,7 @@ object Artifacts {
         val real = realSegs(segs)
         val sig = real.map(_.rel).mkString(",")
         readCache.computeIfAbsent((spark, fpDir, sig), _ => {
-          val df = spark.read.parquet(real.map(s => s"$base/${s.rel}"): _*)
+          val df = Tables.parquet(spark, real.map(s => s"$base/${s.rel}"): _*)
           additiveOf(name) match {
             // a single segment is always fully aggregated by construction
             // (full build and compaction both write the folded frame) —
@@ -1934,7 +1935,7 @@ object Artifacts {
         })
       case None =>
         readCache.computeIfAbsent((spark, fpDir, "plain"),
-          _ => spark.read.parquet(fpDir))
+          _ => Tables.parquet(spark, fpDir))
     }
 
   /** The committed frame for the corpus's CURRENT fingerprint, resolved
@@ -2040,7 +2041,7 @@ object Artifacts {
       }
       val (cand, carried) = oldSegs.zipWithIndex.partition(s => hit(s._2))
       val rewritten = if (cand.isEmpty) None else Some {
-        val df0 = spark.read.parquet(cand.map(s => s"$oldBase/${s._1.rel}"): _*)
+        val df0 = Tables.parquet(spark, cand.map(s => s"$oldBase/${s._1.rel}"): _*)
         // a USING-column anti-join moves the key column to the front —
         // restore the artifact's column order before the segment write
         keys.foldLeft(df0) { (d, k) =>
@@ -2119,7 +2120,7 @@ object Artifacts {
         val freshRel = newSegRel()
         writeManifest(spark, p, segs :+ provisionalEntry(freshRel, keys),
           commit = false)
-        val df0 = spark.read.parquet(segs.map(s => s"$base/${s.rel}"): _*)
+        val df0 = Tables.parquet(spark, segs.map(s => s"$base/${s.rel}"): _*)
         // additive artifacts: compaction is where the ± delta segments
         // fold back into one base — aggregate, drop retracted keys
         val df = additiveOf(name).fold(df0)(a => foldAdditive(df0, a.keys, a.cnt))
@@ -2147,7 +2148,7 @@ object Artifacts {
       name: String, path: String): Long =
     readManifest(spark, path) match {
       case Some(segs) => realSegs(segs).map(_.rows).sum
-      case None => spark.read.parquet(path).count()
+      case None => Tables.footerRows(spark, path)
     }
 
   /** Wall-clock seconds per artifact of the builds since the last

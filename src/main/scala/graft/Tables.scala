@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated star-schema parquet tables (TESTDATA.md).
@@ -14,14 +20,60 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   // DataFrames are immutable logical plans — safe to share. Caching them
-  // avoids re-listing the directory and re-reading parquet footers for
-  // every one of the 36 contract queries in a Verify/Bench run.
+  // saves the file listing, the footer read and the plan construction of
+  // an open (no job either way, see [[parquet]]) for every query of a
+  // Verify/Bench run that reads the table.
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     cache.computeIfAbsent((spark, sfDir, name),
-      _ => spark.read.parquet(s"$sfDir/$name.parquet"))
+      _ => parquet(spark, s"$sfDir/$name.parquet"))
+
+  /** Open unpartitioned parquet at `paths` (files, or flat directories of
+    * part files) with its schema read from ONE footer on the driver — no
+    * Spark job. A bare `spark.read.parquet` infers the schema in a
+    * `parallelize(...).collect()` job even for a single file; this reads
+    * the same footer Spark's inference task would (the first data file,
+    * by path, of the listing with `_*` / `.*` names skipped) and converts
+    * it with the same call under the session's parquet flags (the Spark
+    * schema metadata key, `nanosAsLong`, `binaryAsString`,
+    * `int96AsTimestamp`), so the schema — and every plan over it — is
+    * unchanged. A path that is missing, holds no data file, or holds a
+    * subdirectory (a partitioned layout, which needs partition
+    * discovery) hands the whole read to `spark.read.parquet`, so its
+    * errors and discovery stay Spark's own.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    def visible(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    // the flat data files of one path; None when it cannot be opened here
+    def dataFiles(p: String): Option[Seq[FileStatus]] = {
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      if (!fs.exists(path)) None
+      else {
+        val st = fs.getFileStatus(path)
+        val files =
+          if (st.isDirectory) fs.listStatus(path).toSeq.filter(visible)
+          else Seq(st)
+        if (files.isEmpty || files.exists(_.isDirectory)) None else Some(files)
+      }
+    }
+    val listed = paths.map(dataFiles)
+    if (paths.isEmpty || listed.contains(None)) spark.read.parquet(paths: _*)
+    else {
+      val first = listed.flatten.flatten.minBy(_.getPath.toString)
+      val footer = new Footer(first.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(first, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+      val schema = ParquetFileFormat.readSchemaFromFooter(footer,
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(paths: _*)
+    }
+  }
 
   /** Fan a small single-split input out across the cores — for HEAVY
     * per-row consumers only.
@@ -102,7 +154,7 @@ object Tables {
     * no Spark job).
     */
   private[graft] def footerRows(spark: SparkSession, path: String): Long = {
-    val dir = new org.apache.hadoop.fs.Path(path)
+    val dir = new Path(path)
     val conf = spark.sessionState.newHadoopConf()
     val fs = dir.getFileSystem(conf)
     val files =
@@ -112,7 +164,7 @@ object Tables {
       else Array(fs.getFileStatus(dir))
     files.map { st =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        HadoopInputFile.fromStatus(st, conf))
       try r.getRecordCount finally r.close()
     }.sum
   }

@@ -415,7 +415,9 @@ object TextAnalysis {
     */
   private[graft] def unigramSurprisalUnsorted(spark: SparkSession,
       dir: String, maxBroadcast: Long): DataFrame = {
+    // the join infers it on one branch only; explicit, both census folds reuse one exchange
     val counts = graft.Artifacts.tokenTotals(spark, dir)
+      .where(col("token").isNotNull)
     val total = counts.agg(sum("n").as("total"))
     val rarity = maybeBroadcastRarity(
       counts.crossJoin(broadcast(total))

@@ -309,7 +309,7 @@ object PackedExport {
     hfs.delete(p, true)
     require(hfs.rename(stage, p),
       s"packedExport: rename $stage -> $p failed; data is intact at $stage")
-    spark.read.parquet(new org.apache.hadoop.fs.Path(p, "manifest").toString)
+    Tables.parquet(spark, new org.apache.hadoop.fs.Path(p, "manifest").toString)
   }
 
   // ---- q127: export + byte-level read-back verification -------------------
@@ -519,9 +519,9 @@ object PackedExport {
 
   /** Memoized deliverable read handles: `outDir` is content-keyed (md5
     * of corpus fingerprint, ordering, membership, layout version) and
-    * immutable once committed, so the two `spark.read.parquet` footer
-    * jobs + listings per SERVE — inside the timed window of every packed
-    * query — need only run once per session. A fresh build under the
+    * immutable once committed, so the two opens' footer reads, listings
+    * and plan construction per SERVE — inside the timed window of every
+    * packed query — need only run once per session. A fresh build under the
     * same key (crash recovery) drops its entry before serving.
     */
   private val readCache = new java.util.concurrent.ConcurrentHashMap[
@@ -537,8 +537,8 @@ object PackedExport {
       readDeliverableFresh(spark, outDir))
 
   private def readDeliverableFresh(spark: SparkSession, outDir: String): DataFrame = {
-    val manifest = spark.read.parquet(s"$outDir/manifest")
-    val sums = spark.read.parquet(s"$outDir/verify")
+    val manifest = Tables.parquet(spark, s"$outDir/manifest")
+    val sums = Tables.parquet(spark, s"$outDir/verify")
     manifest.join(sums, Seq("shard_id"), "left")
       .select(col("shard_id"), col("n_docs"), col("shard_tokens"),
         col("first_doc"), col("last_doc"), col("n_bytes"),

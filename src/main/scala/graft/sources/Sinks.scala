@@ -22,7 +22,7 @@ object Sinks {
   }
 
   private def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    if (exists(spark, path)) Some(spark.read.parquet(path)) else None
+    if (exists(spark, path)) Some(graft.Tables.parquet(spark, path)) else None
 
   /** S5 — `INSERT OR REPLACE` keyed upsert (reference `etl.py:238-244`):
     * last write wins per key, idempotent. Existing rows and updates are
@@ -43,7 +43,7 @@ object Sinks {
     // atomic-ish swap (a self-overwrite would delete its own input mid-scan).
     val tmp = path + "__stage"
     latest.write.mode(SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(path)
+    graft.Tables.parquet(spark, tmp).write.mode(SaveMode.Overwrite).parquet(path)
     val p = new org.apache.hadoop.fs.Path(tmp)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
@@ -123,7 +123,7 @@ object Sinks {
     // `_*` paths, so a crash mid-swap leaves an invisible sibling, not a
     // phantom partition whose rows read back duplicated
     val tmp = new org.apache.hadoop.fs.Path(p.getParent, "_" + p.getName + "__compact")
-    spark.read.parquet(path).repartition(n)
+    graft.Tables.parquet(spark, path).repartition(n)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     require(fs.delete(p, true), s"compact: could not remove $p for swap")
     require(fs.rename(tmp, p),

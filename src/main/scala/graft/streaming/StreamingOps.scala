@@ -414,54 +414,69 @@ object StreamingOps {
   /** The ONE intake core behind [[artifactMaintainingIntake]] and
     * [[vectorIntake]], parameterized by the artifact table `table` (its
     * file, id column, fingerprint, completeness probe and the shared
-    * `Artifacts.append` body) — the crash-recovery and leg-lockstep
-    * logic is subtle enough that two hand-synced copies would be the
-    * next drift bug:
-    *
-    *  - ONE materialized frame feeds both legs: dedup-within-batch and
-    *    the anti-join against the table run once, pinned by the
-    *    checkpoint, so the rows the append lands are bit-identical to
-    *    the rows the artifact maintenance folds in (two independent
-    *    `dropDuplicates` evaluations could pick different winners for a
-    *    duplicated id and silently diverge the legs) — the maintenance
-    *    call trusts it via `prefiltered`;
-    *  - a fully re-delivered (or empty) batch is normally a genuine
-    *    no-op — EXCEPT when a prior run crashed between its append and
-    *    its maintenance. Then the replayed rows are already in the
-    *    table (`fresh` is empty) but the artifacts still key to the
-    *    pre-crash fingerprint; the probe detects that and self-heals
-    *    instead of leaving them stale forever.
+    * `Artifacts.append` body): per micro-batch, dedup within the batch
+    * and hand it to [[intakeLockstep]] as both the append candidates
+    * and the heal source.
     */
   private def maintainingIntake(rows: DataFrame, spark: SparkSession,
       corpusDir: String, table: graft.Artifacts.Source,
       checkpoint: Option[String]): StreamingQuery = {
-    val path = s"$corpusDir/${table.file}"
-    val idCol = table.key
     val writer = rows.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         graft.Checkpoints.scoped {
           val fpOld = table.fingerprint(spark, corpusDir)
-          val deduped = batch.toDF().dropDuplicates(idCol)
-          val fresh = graft.Checkpoints.checkpoint(
-            if (!table.exists(spark, corpusDir)) deduped
-            else deduped.join(spark.read.parquet(path).select(idCol),
-              Seq(idCol), "left_anti"))
-          if (fresh.isEmpty) {
-            if (!table.materialized(spark, corpusDir))
-              graft.Artifacts.append(table, spark, corpusDir, fpOld, deduped,
-                prefiltered = false)
-          } else {
-            fresh.write.mode(SaveMode.Append).parquet(path)
-            graft.Tables.invalidate(corpusDir)
-            graft.Artifacts.append(table, spark, corpusDir, fpOld, fresh,
-              prefiltered = true)
-          }
+          val deduped = batch.toDF().dropDuplicates(table.key)
+          intakeLockstep(spark, corpusDir, table, fpOld, deduped, deduped)
         }
         ()
       }
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
       .start()
+  }
+
+  /** The append-and-maintain lockstep every intake sink ends in
+    * ([[maintainingIntake]], [[gatedIntakeBatch]]) — the crash-recovery
+    * and leg-lockstep logic is subtle enough that hand-synced copies
+    * would be the next drift bug:
+    *
+    *  - ONE materialized frame feeds both legs: `candidates` (deduped
+    *    within the batch by the caller) is anti-joined against the
+    *    table once, pinned by the checkpoint, so the rows the append
+    *    lands are bit-identical to the rows the artifact maintenance
+    *    folds in (two independent `dropDuplicates` evaluations could
+    *    pick different winners for a duplicated id and silently diverge
+    *    the legs) — the maintenance call trusts it via `prefiltered`;
+    *  - a batch with no new candidate is normally a genuine no-op —
+    *    EXCEPT when a prior run crashed between its append and its
+    *    maintenance. Then the replayed rows are already in the table but
+    *    the artifacts still key to the pre-crash fingerprint; the probe
+    *    detects that and self-heals by folding the `healSource` rows
+    *    that ARE in the table (a gate's rejected rows never entered it
+    *    and must not enter the artifacts).
+    */
+  private def intakeLockstep(spark: SparkSession, corpusDir: String,
+      table: graft.Artifacts.Source, fpOld: String, candidates: DataFrame,
+      healSource: DataFrame): Unit = {
+    val path = s"$corpusDir/${table.file}"
+    val idCol = table.key
+    val existing =
+      if (!table.exists(spark, corpusDir)) None
+      else Some(graft.Tables.parquet(spark, path).select(idCol))
+    val fresh = graft.Checkpoints.checkpoint(existing.fold(candidates)(ex =>
+      candidates.join(ex, Seq(idCol), "left_anti")))
+    if (fresh.isEmpty) {
+      existing.foreach { ex =>
+        if (!table.materialized(spark, corpusDir))
+          graft.Artifacts.append(table, spark, corpusDir, fpOld,
+            healSource.join(ex, Seq(idCol), "left_semi"), prefiltered = false)
+      }
+    } else {
+      fresh.write.mode(SaveMode.Append).parquet(path)
+      graft.Tables.invalidate(corpusDir)
+      graft.Artifacts.append(table, spark, corpusDir, fpOld, fresh,
+        prefiltered = true)
+    }
   }
 
   /** [[artifactMaintainingIntake]]'s vector twin: streaming embedding
@@ -981,7 +996,6 @@ object StreamingOps {
       spark: SparkSession, corpusDir: String, auditDir: String,
       gate: Option[graft.operators.QualityTrain.TrainedGate],
       admit: Option[Column]): Unit = graft.Checkpoints.scoped {
-    val path = s"$corpusDir/documents.parquet"
     val fpOld = graft.Artifacts.corpusFingerprint(spark, corpusDir)
     val b = graft.Checkpoints.checkpoint(batchDf.dropDuplicates("doc_id"))
     val flagged = graft.Checkpoints.checkpoint(
@@ -991,33 +1005,9 @@ object StreamingOps {
     // overwrites this batch's directory, never duplicates it
     flagged.write.mode(SaveMode.Overwrite)
       .parquet(s"$auditDir/batch=$batchId")
-    val existingIds: Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        Some(spark.read.parquet(path).select("doc_id"))
-      else None
-    }
-    val admittedRows = b.join(
-      flagged.filter(col("admitted")).select("doc_id"), Seq("doc_id"))
-    val fresh = graft.Checkpoints.checkpoint(existingIds match {
-      case Some(ex) => admittedRows.join(ex, Seq("doc_id"), "left_anti")
-      case None => admittedRows
-    })
-    if (fresh.isEmpty) {
-      // self-heal: fold only batch rows that ARE in the table — the
-      // pre-crash append's rows; rejected rows never entered the corpus
-      existingIds.foreach { ex =>
-        if (!graft.Artifacts.isFullyMaterialized(spark, corpusDir))
-          graft.Artifacts.maintainAppended(spark, corpusDir, fpOld,
-            b.join(ex, Seq("doc_id"), "left_semi"), prefiltered = false)
-      }
-    } else {
-      fresh.write.mode(SaveMode.Append).parquet(path)
-      graft.Tables.invalidate(corpusDir)
-      graft.Artifacts.maintainAppended(spark, corpusDir, fpOld, fresh,
-        prefiltered = true)
-    }
-    ()
+    intakeLockstep(spark, corpusDir, graft.Artifacts.Docs, fpOld,
+      b.join(flagged.filter(col("admitted")).select("doc_id"), Seq("doc_id")),
+      b)
   }
 
   /** q44 — last-touch attribution over the static events table: for each
